@@ -285,7 +285,12 @@ object GraphOps {
     *
     * Per iteration: one equi-join edges⋈ranks (ranks are tiny next to
     * edges — broadcastable at any corpus scale) and one aggregation on
-    * dst. Lineage is truncated every round like the components loops.
+    * dst. Lineage is truncated every round by a LAZY local checkpoint
+    * chain: no round materializes until the final pin, which runs every
+    * round in one job and keeps each round's checkpoint blocks until it
+    * finishes. Storage bound: O(iterations × |ranks|) blocks until the
+    * final pin (then the chain is freed) — size `iterations` to the
+    * memory and local disk of the executors.
     *
     * @param edges directed (src, dst), numeric ids, no self-loops
     * @param nodes one column `node` — the full vertex set (rank output
@@ -347,6 +352,9 @@ object GraphOps {
     * &#124;seeds&#124; — a positive scalar, rankings unaffected; the
     * oracle unrolls identically). Non-seed nodes start AND restart at
     * 0, so mass reaches them only through links.
+    *
+    * Storage bound as [[pageRank]]'s: the lazy checkpoint chain holds
+    * O(iterations × |ranks|) blocks until the final pin.
     */
   def pageRankPersonalized(spark: SparkSession, edges: DataFrame,
                            nodes: DataFrame, seeds: DataFrame,
@@ -564,7 +572,9 @@ object GraphOps {
     * densities — broadcastable when |nodes| ≪ |edges|), one
     * map-side-combined (node, label) count, one per-node argmax window
     * (partition-parallel). Nothing is quadratic; lineage is truncated
-    * per round like [[kCore]] so storage stays O(1) in rounds.
+    * per round by the lazy checkpoint chain of [[pageRank]], so storage
+    * is O(rounds × |nodes|) label blocks until the final pin (then the
+    * chain is freed).
     *
     * @param edges undirected edge list (a, b); self-loops dropped
     * @return (node, label) after `rounds` synchronous updates

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, MutableProjection, 
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 
 /** The [[DeclarativeAggregate]] buffer/projection plumbing shared by
-  * the global-window operators ([[GlobalRunningAgg]],
-  * [[GlobalMovingAgg]], [[GlobalFrameAgg]]): each runs the functions'
+  * the window operators ([[PartitionedRunningAgg]],
+  * [[PartitionedMovingAgg]], [[PartitionedRangeMovingAgg]],
+  * [[GlobalFrameAgg]]): each runs the functions'
   * OWN Catalyst initial/update/merge/evaluate expressions over a
   * [[SpecificInternalRow]] buffer, so type behavior (decimal widening,
   * ANSI overflow, null skipping) matches the built-in by construction.

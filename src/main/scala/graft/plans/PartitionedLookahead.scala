@@ -2,20 +2,22 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** SKEW-AWARE distributed PARTITIONED `lead(e, k) IGNORE NULLS` (late
-  * r13 — the per-key offset family's LAST refusal retired):
-  * [[GlobalLookahead]]'s zipped O(k)-value machinery with the group
-  * boundary as a hard wall, over the composite `(g, v)` range
-  * sub-split.
+/** Distributed `lead(e, k) IGNORE NULLS OVER ([PARTITION BY g] ORDER
+  * BY v)`, keyed or global (the global window is the empty group key;
+  * see [[KeyedWindowNode]]). The k-th NON-NULL value ahead of a row can
+  * be arbitrarily many ROWS ahead (a null run has no bound), so
+  * [[PartitionedShift]]'s fixed-capacity position ring cannot hold the
+  * gap — but the VALUE state is bounded by construction: a row needs
+  * exactly the next k non-null values, never the rows between.
   *
   *  1. pass 1 collects, per partition, the first k non-null values of
   *     its FIRST group run (plus the edge group keys and the
-  *     single-group flag);
+  *     single-group flag; under the empty key it stops reading at the
+  *     k-th non-null);
   *  2. the driver chains them GROUP-MATCHED into each partition's
   *     lookahead tail — the first k non-nulls of its LAST group from
   *     later partitions, telescoped through single-group partitions of
@@ -24,27 +26,31 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *  3. pass 2 zips the stream with its base: the LEAD iterator pushes
   *     (position, value) pairs for non-nulls into an O(k) deque but is
   *     GATED to the lag's current group — it PARKS at every group
-  *     boundary until the lag arrives (the
-  *     [[PartitionedRangeMovingAgg]] idiom), so a group that ends
+  *     boundary until the lag arrives, so a group that ends
   *     mid-partition starves the deque and its last rows fall to the
-  *     default exactly as the built-in's per-partition frames do; only
-  *     when the partition itself is exhausted (possible only while
-  *     consuming the lag's group — the lead never passes it) does the
-  *     chained tail finish the job. Group change on the lag side
-  *     clears the deque.
+  *     default (evaluated against the current row) exactly as the
+  *     built-in's per-partition frames do; only when the partition
+  *     itself is exhausted (possible only while consuming the lag's
+  *     group) does the chained tail finish the job. Group change on
+  *     the lag side clears the deque.
   *
-  * ONE column per node for the global operator's reason (the deque
-  * bound is per-column; a starved column would drive a shared lead
-  * unboundedly). The LEAD side reads the BASE below any same-spec
-  * lookahead siblings, so N stacked columns cost N + 1 base reads —
-  * the stack test only skips siblings with the SAME partition and
-  * order spec (a different spec means an exchange sits between, and
-  * zipping across an exchange would misalign the two reads).
+  * ONE COLUMN per node, on purpose: the deque bound holds because the
+  * lead stops the moment THIS column has k values ahead; two columns
+  * sharing one lead desynchronize (the starved one drives the lead
+  * arbitrarily far). The LEAD side reads the BASE below any same-spec
+  * lookahead siblings, so N stacked columns cost N + 1 base reads, not
+  * 2^N — the stack test only skips siblings with the SAME partition
+  * and order spec (a different spec means an exchange sits between,
+  * and zipping across an exchange would misalign the two reads).
   *
-  * Tie caveat as the global operator's, per key: pass a total order
-  * for deterministic — and exactly built-in-equal — results.
+  * Tie caveat, stated sharply because pass 2 reads the shuffle twice
+  * in the same task: under a non-total order the two reads may
+  * interleave equal-key rows differently, and the positional alignment
+  * between lead and lag then refers to two linearizations. Pass a
+  * TOTAL order for deterministic — and exactly built-in-equal —
+  * results, the contract of row_number/lead/lag everywhere else.
   *
-  * Like its siblings, routed ONLY behind
+  * Keyed windows route here only behind
   * `spark.graft.rewrite.partitionedRankWindows` or
   * [[graft.rules.RewriteGlobalRankWindows.forceSkew]].
   */
@@ -54,10 +60,9 @@ case class PartitionedLookaheadNode(partKeys: Seq[Expression],
                                     input: Expression,
                                     offset: Int,
                                     default: Expression,
-                                    child: LogicalPlan) extends UnaryNode {
+                                    child: LogicalPlan) extends KeyedWindowNode {
   require(offset >= 1, s"lookahead offset must be >= 1, got $offset")
-  override def output: Seq[Attribute] = child.output :+ attr
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(attr))
+  override protected def generated: Seq[Attribute] = Seq(attr)
   override protected def withNewChildInternal(newChild: LogicalPlan): PartitionedLookaheadNode =
     copy(child = newChild)
 }
@@ -77,25 +82,10 @@ case class PartitionedLookaheadExec(partKeys: Seq[Expression],
                                     input: Expression,
                                     offset: Int,
                                     default: Expression,
-                                    child: SparkPlan) extends UnaryExecNode {
+                                    child: SparkPlan) extends KeyedWindowExec {
   import PartitionedLookahead.LookEdge
 
-  override def output: Seq[Attribute] = child.output :+ attr
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(attr))
-
-  private def compositeOrder: Seq[SortOrder] =
-    partKeys.map(SortOrder(_, Ascending)) ++ order
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(compositeOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(compositeOrder)
-  override def outputOrdering: Seq[SortOrder] = compositeOrder
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
-
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override protected def generated: Seq[Attribute] = Seq(attr)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val rdd = child.execute()
@@ -107,7 +97,9 @@ case class PartitionedLookaheadExec(partKeys: Seq[Expression],
     val partExprs = partKeys
     val partTypes = partExprs.map(_.dataType)
     // the LEAD side (and pass 1) read the BASE below same-spec stacked
-    // siblings (the GlobalLookahead linear-stack argument, spec-gated)
+    // siblings: their input expressions only reference base columns
+    // (one Window's expressions never read each other), and zipping
+    // each node against its direct child would double reads per level
     val base = PartitionedLookahead.baseBelow(this).asInstanceOf[
       PartitionedLookaheadExec].child
     val baseRdd = if (base eq child) rdd else base.execute()
@@ -124,7 +116,10 @@ case class PartitionedLookaheadExec(partKeys: Seq[Expression],
         var firstGroup: UnsafeRow = null
         var curGroup: UnsafeRow = null
         var single = true
-        it.foreach { row =>
+        // under the empty key the one run's first k non-nulls are all
+        // pass 1 needs: stop reading there
+        while (it.hasNext && !(partExprs.isEmpty && acc.length >= k)) {
+          val row = it.next()
           val g = groupProj(row)
           if (curGroup == null) {
             firstGroup = g.copy(); curGroup = firstGroup
@@ -277,14 +272,4 @@ object PartitionedLookahead {
     }
     case other => other
   }
-
-  /** Idempotent, race-safe strategy registration — same idiom as the
-    * sibling operators. */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    PartitionedLookahead.synchronized {
-      if (!spark.experimental.extraStrategies.contains(PartitionedLookaheadStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ PartitionedLookaheadStrategy
-      }
-    }
 }

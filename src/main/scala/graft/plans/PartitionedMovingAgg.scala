@@ -2,60 +2,53 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** SKEW-AWARE distributed PARTITIONED moving-frame aggregate (late
-  * r13, the skew tier's bounded-frame member): `agg(e) OVER (PARTITION
-  * BY k ORDER BY v ROWS BETWEEN lo AND hi)` with literal row offsets —
-  * the per-user rolling average — without requiring all rows of one
-  * key in one task.
+/** Distributed EXACT MOVING-FRAME aggregate, keyed or global: `agg(e)
+  * OVER ([PARTITION BY k] ORDER BY v ROWS BETWEEN lo AND hi)` with
+  * literal row offsets — the rolling average, per user or global (the
+  * empty key; see [[KeyedWindowNode]]) — without a funnel task.
   *
-  * [[GlobalMovingAgg]]'s frame ring fused with [[PartitionedShift]]'s
-  * key machinery, over the same composite `(k, v)` range sub-split:
+  * A bounded ROWS frame reaches at most `maxBack` rows behind and
+  * `maxFwd` ahead, so [[PartitionedShift]]'s boundary argument carries
+  * on ROWS instead of values:
   *
-  *  1. pass 1 collects, per partition, the first `maxFwd` projected
-  *     frame-rows of its FIRST key run and the last `maxBack` of its
-  *     LAST key run (shared across functions — frames travel as rows
-  *     projected down to what the aggregates read, as in
-  *     GlobalMovingAgg), plus the two edge keys and the single-key
+  *  1. pass 1 collects, per partition, the first `maxFwd` frame-rows of
+  *     its FIRST key run and the last `maxBack` of its LAST key run,
+  *     projected down to the attributes the aggregates read and shared
+  *     across functions, plus the two edge keys and the single-key
   *     flag;
   *  2. the driver chains boundaries KEY-MATCHED exactly as
-  *     PartitionedShift does: a partition's prev-tail holds frame-rows
-  *     of ITS first key only (telescoped through single-key partitions
-  *     of the same run), its next-head of its last key only — a key
-  *     ending at a boundary contributes nothing across it;
+  *     PartitionedShift does — a partition's prev-tail holds frame-rows
+  *     of ITS first key only, its next-head of its last key only;
   *  3. pass 2 streams with a position ring of `maxBack + maxFwd + 1`
   *     projected rows, each SEGMENT-tagged by its key run: every
   *     output value rebuffers its frame through the function's own
   *     `initialValues`/`updateExpressions`/`evaluateExpression`, in
-  *     frame order, admitting an in-ring position only when it shares
-  *     the emitting row's segment, a below-zero position only from the
-  *     first segment's prev-tail, a past-end position only from the
-  *     last segment's next-head. A frame emptied by key edges
-  *     evaluates the initial buffer — null sum, zero count — exactly
-  *     as the built-in's per-partition frames clip.
+  *     frame order — the per-row rebuffering WindowExec's sliding frame
+  *     performs for non-invertible aggregates — admitting an in-ring
+  *     position only from the emitting row's segment, a below-zero
+  *     position only from the first segment's prev-tail, a past-end
+  *     position only from the last segment's next-head. A frame emptied
+  *     by key or global edges evaluates the initial buffer — null sum,
+  *     zero count — as the built-in's frames clip.
   *
-  * First/Last (IGNORE NULLS included) are admitted: rebuffering runs
-  * strictly in frame position order, the same order WindowExec feeds
-  * its sliding frame. Memory is bounded by the frame extents and
-  * `numPartitions * (maxBack + maxFwd)` narrow driver rows — never by
-  * key cardinality or the hot key's row count. UNBOUNDED PRECEDING
-  * frames are [[PartitionedRunningAgg]]'s; RANGE moving frames keep
-  * WindowExec in this tier.
+  * Frames are per-function: one node carries any mix of trailing,
+  * centered, pure-past and pure-future frames. First/Last (IGNORE
+  * NULLS included) are admitted: rebuffering runs strictly in frame
+  * order. Memory is bounded by the frame extents (capped by the
+  * rewrite rule) and `numPartitions * (maxBack + maxFwd)` narrow driver
+  * rows — never by the data. UNBOUNDED PRECEDING frames are
+  * [[PartitionedRunningAgg]]'s; RANGE moving frames
+  * [[PartitionedRangeMovingAgg]]'s.
   *
-  * Tie caveat identical to the built-in: bounded ROWS frames under a
-  * non-total `(k, v)` order are tie-order-dependent; pass a total
-  * order for determinism.
-  *
-  * Like its siblings, routed ONLY behind
-  * `spark.graft.rewrite.partitionedRankWindows` or
-  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]]; all skew
-  * operators declare the same composite distribution and stack on ONE
-  * exchange.
+  * Tie caveat as [[PartitionedShift]]'s: bounded ROWS frames under a
+  * non-total order are tie-order-dependent. Keyed windows route here
+  * only behind `spark.graft.rewrite.partitionedRankWindows` or
+  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]].
   */
 case class PartitionedMovingAggNode(partKeys: Seq[Expression],
                                     order: Seq[SortOrder],
@@ -63,9 +56,8 @@ case class PartitionedMovingAggNode(partKeys: Seq[Expression],
                                     funcs: Seq[DeclarativeAggregate],
                                     lowers: Seq[Int],
                                     uppers: Seq[Int],
-                                    child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
+                                    child: LogicalPlan) extends KeyedWindowNode {
+  override protected def generated: Seq[Attribute] = attrs
   override protected def withNewChildInternal(newChild: LogicalPlan): PartitionedMovingAggNode =
     copy(child = newChild)
 }
@@ -85,25 +77,10 @@ case class PartitionedMovingAggExec(partKeys: Seq[Expression],
                                     funcs: Seq[DeclarativeAggregate],
                                     lowers: Seq[Int],
                                     uppers: Seq[Int],
-                                    child: SparkPlan) extends UnaryExecNode {
+                                    child: SparkPlan) extends KeyedWindowExec {
   import PartitionedMovingAgg.MovEdge
 
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
-
-  private def compositeOrder: Seq[SortOrder] =
-    partKeys.map(SortOrder(_, Ascending)) ++ order
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(compositeOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(compositeOrder)
-  override def outputOrdering: Seq[SortOrder] = compositeOrder
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
-
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override protected def generated: Seq[Attribute] = attrs
 
   override protected def doExecute(): RDD[InternalRow] = {
     val rdd = child.execute()
@@ -354,14 +331,4 @@ object PartitionedMovingAgg {
                                     head: Array[UnsafeRow],
                                     tail: Array[UnsafeRow],
                                     single: Boolean)
-
-  /** Idempotent, race-safe strategy registration — same idiom as the
-    * sibling operators. */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    PartitionedMovingAgg.synchronized {
-      if (!spark.experimental.extraStrategies.contains(PartitionedMovingAggStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ PartitionedMovingAggStrategy
-      }
-    }
 }

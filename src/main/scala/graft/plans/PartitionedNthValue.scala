@@ -2,51 +2,47 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** SKEW-AWARE distributed PARTITIONED start-anchored `nth_value` (late
-  * r13 — the skew tier's LAST member): `nth_value(e, k [IGNORE NULLS])
-  * OVER (PARTITION BY g ORDER BY v ...)` under a running (`UNBOUNDED
-  * PRECEDING .. CURRENT ROW`, ROWS or RANGE) or whole-partition frame,
-  * without requiring a hot key's rows in one task.
+/** Distributed EXACT start-anchored `nth_value`, keyed or global:
+  * `nth_value(e, k [IGNORE NULLS]) OVER ([PARTITION BY g] ORDER BY v
+  * ...)` under a running (`UNBOUNDED PRECEDING .. CURRENT ROW`, ROWS or
+  * RANGE) or whole-partition frame, without a funnel task (the global
+  * window is the empty group key; see [[KeyedWindowNode]]).
   *
-  * [[GlobalNthValue]]'s argument, per key: every admitted frame starts
-  * at the KEY's first row, so the k-th frame row is one PER-KEY
-  * constant — the key's k-th (non-null) row in order — and each row's
-  * result is that constant gated on its frame reaching k rows. The
-  * per-key constant and gates distribute over the composite sub-split:
+  * Every admitted frame starts at the KEY's first row, so the k-th
+  * frame row is one PER-KEY constant — the key's k-th (non-null) row
+  * in order — and each row's result is that constant gated on its
+  * frame reaching k rows:
   *
   *  1. pass 1 collects, per partition, the first min(k, available)
   *     (non-null) values plus row / non-null counts of its FIRST and
   *     LAST group runs (edge group keys, single flag) — O(k) values
   *     per column per partition;
-  *  2. the driver assembles each maximal same-group RUN (the chain a
-  *     hot key's sub-split forms): the run's complete first-k heads
-  *     (concatenation in partition order, capped at k), its total
-  *     row / non-null counts, and each member partition's PRIOR-ROWS
-  *     offsets — so every partition knows, for its two edge groups,
-  *     the resolved constant, the run totals, and where its own
-  *     portion starts;
-  *  3. pass 2 zips the stream with itself: the LEAD iterator —
-  *     group-gated, parking at every boundary (the
-  *     [[PartitionedRangeMovingAgg]] idiom) — pre-scans each INTERIOR
-  *     segment into O(k) heads + two counters (interior groups are
-  *     partition-local, so their constants and totals resolve locally;
-  *     edge segments take the driver's run structs instead and skip
-  *     nothing but the lookup), and the LAG streams: a row shows the
-  *     constant when its running (non-null) position — offset by the
-  *     run's prior rows — reaches k (ROWS), when its TIE GROUP's end
-  *     position does (RANGE — composite tie containment buffers one
-  *     group at a time), or when the run total does (whole frame).
+  *  2. the driver assembles each maximal same-group RUN: the run's
+  *     complete first-k heads (concatenation in partition order,
+  *     capped at k), its total row / non-null counts, and each member
+  *     partition's PRIOR-ROWS offsets — so every partition knows, for
+  *     its two edge groups, the resolved constant, the run totals, and
+  *     where its own portion starts;
+  *  3. pass 2 streams the rows: a row shows the constant when its
+  *     running (non-null) position — offset by the run's prior rows —
+  *     reaches k (ROWS), when its TIE GROUP's end position does (RANGE
+  *     — one buffered group at a time), or when the run total does
+  *     (whole frame). Only an INTERIOR group (one that starts and ends
+  *     inside the partition) needs a second read: a group-gated LEAD
+  *     over the same partition pre-scans it into O(k) heads and two
+  *     counters. When every partition is one group run — always so
+  *     under the empty key — pass 2 reads once.
   *
-  * Tie caveat as the global operator's, per key; RANGE gating is
-  * deterministic whenever the built-in is. Like its siblings, routed
-  * ONLY behind `spark.graft.rewrite.partitionedRankWindows` or
-  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]], and it declares
-  * the same composite distribution, stacking on ONE exchange.
+  * Tie caveat as row_number's: under a non-total order the k-th row of
+  * a tie-heavy prefix is tie-order-dependent, here and in the built-in
+  * alike; RANGE gating is deterministic whenever the built-in is.
+  * Keyed windows route here only behind
+  * `spark.graft.rewrite.partitionedRankWindows` or
+  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]].
   */
 case class PartitionedNthValueNode(partKeys: Seq[Expression],
                                    order: Seq[SortOrder],
@@ -57,9 +53,8 @@ case class PartitionedNthValueNode(partKeys: Seq[Expression],
                                    // 0 = running ROWS, 1 = running
                                    // RANGE, 2 = whole frame
                                    frameKinds: Seq[Int],
-                                   child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
+                                   child: LogicalPlan) extends KeyedWindowNode {
+  override protected def generated: Seq[Attribute] = attrs
   override protected def withNewChildInternal(newChild: LogicalPlan): PartitionedNthValueNode =
     copy(child = newChild)
 }
@@ -80,25 +75,10 @@ case class PartitionedNthValueExec(partKeys: Seq[Expression],
                                    offsets: Seq[Int],
                                    ignoreNullsFlags: Seq[Boolean],
                                    frameKinds: Seq[Int],
-                                   child: SparkPlan) extends UnaryExecNode {
+                                   child: SparkPlan) extends KeyedWindowExec {
   import PartitionedNthValue.{NthEdge, RunInfo}
 
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
-
-  private def compositeOrder: Seq[SortOrder] =
-    partKeys.map(SortOrder(_, Ascending)) ++ order
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(compositeOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(compositeOrder)
-  override def outputOrdering: Seq[SortOrder] = compositeOrder
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
-
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override protected def generated: Seq[Attribute] = attrs
 
   override protected def doExecute(): RDD[InternalRow] = {
     val rdd = child.execute()
@@ -113,7 +93,6 @@ case class PartitionedNthValueExec(partKeys: Seq[Expression],
     val partExprs = partKeys
     val partTypes = partExprs.map(_.dataType)
     val ordExprs = order.map(_.child)
-    val ordTypes = ordExprs.map(_.dataType)
 
     // pass 1: first/last group-run heads + counts, edge groups
     val edges: Array[NthEdge] =
@@ -266,10 +245,11 @@ case class PartitionedNthValueExec(partKeys: Seq[Expression],
 
     val out = output
     val numOutputRows = longMetric("numOutputRows")
-    // pass 2: zip — the group-gated lead pre-scans interior segments
-    // into O(k) heads + counters; the lag streams with gates
-    rdd.zipPartitions(rdd, preservesPartitioning = true) { (leadIt0, lagIt) =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+    // pass 2: the group-gated lead (a second read of the partition)
+    // pre-scans interior segments into O(k) heads + counters; the lag
+    // streams with gates
+    val nthPartition: (Int, Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow] =
+        (pid, leadIt0, lagIt) => {
       val groupProjLead = UnsafeProjection.create(partExprs, childOutput)
       val groupProjLag = UnsafeProjection.create(partExprs, childOutput)
       val groupOrd = RowOrdering.createNaturalAscendingOrdering(partTypes)
@@ -392,80 +372,34 @@ case class PartitionedNthValueExec(partKeys: Seq[Expression],
       } else {
         // RANGE columns gate on the TIE GROUP's end position: buffer
         // one (g, v) group (composite tie containment), per-row values
-        // for the other kinds captured while buffering
-        val compExprs = partExprs ++ ordExprs
-        val compTypes = partTypes ++ ordTypes
-        val compProj = UnsafeProjection.create(compExprs, childOutput)
-        val compOrd = RowOrdering.createNaturalAscendingOrdering(compTypes)
-        new Iterator[InternalRow] {
-          private var groupRows: Array[InternalRow] = Array.empty
-          private var rowVals: Array[Array[Any]] = Array.empty
-          private var groupVals: Array[Any] = Array.empty
-          private var idx = 0
-          private var pendingRow: InternalRow = null
-          private var pendingComp: UnsafeRow = null
-          private def perRow(row: InternalRow): Array[Any] = {
+        // for the other kinds taken while the group is advanced over
+        KeyedWindow.tieGroups(lagIt, partExprs ++ ordExprs, childOutput).flatMap { group =>
+          val rowVals = group.map { row =>
             checkSegment(row)
             advance(row)
-            val vs = new Array[Any](nCols)
-            var j = 0
-            while (j < nCols) {
-              if (kindArr(j) != 1) vs(j) = valueAt(j)
-              j += 1
-            }
-            vs
+            Array.tabulate[Any](nCols)(j => if (kindArr(j) != 1) valueAt(j) else null)
           }
-          private def loadNextGroup(): Unit = {
-            val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-            val vals = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-            var comp: UnsafeRow = null
-            if (pendingRow != null) {
-              rows += pendingRow; vals += perRow(pendingRow); comp = pendingComp
-              pendingRow = null; pendingComp = null
-            } else {
-              val r = lagIt.next()
-              comp = compProj(r).copy()
-              val c = r.copy()
-              rows += c; vals += perRow(c)
-            }
-            var open = true
-            while (open && lagIt.hasNext) {
-              val r = lagIt.next()
-              val kk = compProj(r)
-              if (compOrd.compare(comp, kk) == 0) {
-                val c = r.copy()
-                rows += c; vals += perRow(c)
-              } else {
-                pendingRow = r.copy(); pendingComp = kk.copy(); open = false
-              }
-            }
-            // tie group consumed → pos/nnRun hold the group-end state
-            groupVals = new Array[Any](nCols)
+          // tie group consumed → pos/nnRun hold the group-end state
+          val groupVals = Array.tabulate[Any](nCols)(j => if (kindArr(j) == 1) valueAt(j) else null)
+          group.iterator.zip(rowVals.iterator).map { case (row, vs) =>
             var j = 0
             while (j < nCols) {
-              if (kindArr(j) == 1) groupVals(j) = valueAt(j)
+              aggRow.update(j, if (kindArr(j) == 1) groupVals(j) else vs(j))
               j += 1
             }
-            groupRows = rows.toArray
-            rowVals = vals.toArray
-            idx = 0
-          }
-          override def hasNext: Boolean =
-            idx < groupRows.length || pendingRow != null || lagIt.hasNext
-          override def next(): InternalRow = {
-            if (idx >= groupRows.length) loadNextGroup()
-            val row = groupRows(idx)
-            var j = 0
-            while (j < nCols) {
-              aggRow.update(j,
-                if (kindArr(j) == 1) groupVals(j) else rowVals(idx)(j))
-              j += 1
-            }
-            idx += 1
             emit(row)
           }
         }
       }
+    }
+    // every partition one group run (always so under the empty key):
+    // each partition's only segment takes the driver's run view, so
+    // nothing needs the lead — no second read
+    if (edges.forall(e => e.firstGroup == null || e.single))
+      rdd.mapPartitionsWithIndex((pid, it) => nthPartition(pid, Iterator.empty, it),
+        preservesPartitioning = true)
+    else rdd.zipPartitions(rdd, preservesPartitioning = true) { (lead, lag) =>
+      nthPartition(org.apache.spark.TaskContext.getPartitionId(), lead, lag)
     }
   }
 
@@ -497,14 +431,4 @@ object PartitionedNthValue {
                                     totNn: Array[Long],
                                     rowOff: Long,
                                     nnOff: Array[Long])
-
-  /** Idempotent, race-safe strategy registration — same idiom as the
-    * sibling operators. */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    PartitionedNthValue.synchronized {
-      if (!spark.experimental.extraStrategies.contains(PartitionedNthValueStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ PartitionedNthValueStrategy
-      }
-    }
 }

@@ -1,78 +1,75 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, WholeStageCodegenExec}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
-/** SKEW-AWARE distributed PARTITIONED rank windows (r13, VERDICT r12
-  * task 6 — genuinely new physical surface): the FULL rank family
-  * `row_number()/rank()/dense_rank()/percent_rank()/cume_dist()/
-  * ntile(b) OVER (PARTITION BY k ORDER BY v)` WITHOUT requiring all
-  * rows of one key in one task.
+/** Distributed EXACT rank windows, keyed or global: the FULL rank
+  * family `row_number()/rank()/dense_rank()/percent_rank()/cume_dist()/
+  * ntile(b) OVER ([PARTITION BY k] ORDER BY v)` in two passes over one
+  * composite range shuffle (see [[KeyedWindowNode]]) — never the
+  * single-partition funnel of an unpartitioned `WindowExec`, never a
+  * hot key in one task.
   *
-  * The built-in WindowExec demands hash-clustering on `k`: every row
-  * of a key lands in ONE task, so a hot key IS the job — and AQE
-  * cannot help, because its skew mitigation (OptimizeSkewedJoin /
-  * skewed-partition splitting) only applies where a partition can be
-  * split without changing operator semantics; a window's per-key frame
-  * computation is exactly the semantics splitting would break. The
-  * whitelist answer ("partitioned windows scale fine") is true only
-  * until the key histogram isn't flat.
-  *
-  * This operator applies the [[GlobalRankNode]] two-pass argument PER
-  * KEY under a COMPOSITE range partitioning:
-  *
-  *  1. the physical node declares `OrderedDistribution(k ++ v)`, so
-  *     EnsureRequirements plans ONE range exchange over the composite
-  *     order — a hot key's rows spread over a contiguous RUN of
-  *     partitions (range sub-split), each sorted by `(k, v)`; a
-  *     `(k, v)` tie group still maps to exactly one partition (the
-  *     tie-containment argument), so the tie-aware modes stay exact;
-  *  2. pass 1 collects per partition: its first/last key, the row counts of
-  *     the FIRST and LAST key runs, the last run's tie-group count,
-  *     and the single-key flag — five scalars and two narrow
+  *  1. pass 1 collects per partition: its first/last key, the row
+  *     counts of the FIRST and LAST key runs, the last run's tie-group
+  *     count, and the single-key flag — five scalars and two narrow
   *     key rows per partition, independent of data volume and of the
-  *     key histogram. The driver stitches runs left-to-right: a
+  *     key histogram. The driver stitches runs left to right: a
   *     partition whose first key continues its left neighbour's last
   *     key starts that key at the accumulated (rows, groups) offset,
   *     and — when a total-dependent mode is present — every
-  *     BOUNDARY-STRADDLING key's full row total telescopes from the
-  *     same stats (the "second stitching direction");
-  *  3. pass 2 streams local per-key position/tie arithmetic plus the
+  *     boundary-straddling key's full row total telescopes from the
+  *     same stats;
+  *  2. pass 2 streams local per-key position/tie arithmetic plus the
   *     stitched offsets. `percent_rank`/`cume_dist`/`ntile` also need
-  *     each key's TOTAL row count before its first row is emitted:
-  *     for the partition's first/last key that total is driver
-  *     state, and for INTERIOR keys pass 2 zips the sorted stream
-  *     with itself — a KEY-lead iterator counts the current key's
-  *     rows, and (for cume_dist) a GROUP-lead iterator counts the
-  *     current `(k, v)` tie group — O(1) state each, the
-  *     [[GlobalRangeMovingAgg]] zip idiom, never a buffered key.
+  *     each key's TOTAL row count before its first row is emitted: the
+  *     partition's first/last key take it from the driver, and only an
+  *     INTERIOR key (one that starts and ends inside the partition)
+  *     is counted by zipping the sorted stream with itself — a
+  *     key-lead iterator, O(1) state. `cume_dist` needs each tie
+  *     group's END position, so it buffers one tie group at a time.
   *
-  * Tie caveat identical to the built-in: row_number/ntile under a
-  * non-total `(k, v)` order are tie-order-dependent;
-  * rank/dense_rank/percent_rank/cume_dist are tie-exact (group
-  * boundaries and sizes are value-determined, so the zipped iterators'
-  * alignment is tie-safe for them).
+  * Tie semantics are sound without cross-partition negotiation: a tie
+  * group never straddles the range exchange, so a group's first row —
+  * the row whose position IS the group's `rank` — is always local, and
+  * per-partition group counts telescope into `dense_rank` offsets the
+  * same way row counts telescope into `row_number` offsets.
+  * row_number/ntile under a non-total order are tie-order-dependent,
+  * as in the built-in; rank/dense_rank/percent_rank/cume_dist are
+  * tie-exact.
   *
-  * Trade-off vs WindowExec, stated honestly: on a FLAT key histogram
+  * The empty key (the unpartitioned window) keeps the cheap shape the
+  * argument allows: with no dense_rank column, pass 1 is a pure
+  * row-COUNT job that reads the exchange output BELOW the per-partition
+  * `SortExec` ([[PartitionedRank.preSortSource]] — counts are
+  * sort-invariant) and leaves the last partition uncounted unless a
+  * mode needs the total; and since every partition then holds one key
+  * run, pass 2 never zips. One counting job is the floor — this is
+  * `RDD.zipWithIndex`'s own structure, and `MapOutputStatistics`
+  * reports bytes, not rows.
+  *
+  * Trade-off vs WindowExec on a keyed window: on a FLAT key histogram
   * the built-in's hash exchange is cheaper than a range exchange plus
-  * a count job (and the total-dependent modes add one or two zipped
-  * re-reads). This operator is for the skewed tail — which is why the
-  * rewrite routes through it only under its own conf
-  * (`spark.graft.rewrite.partitionedRankWindows`) or the explicit
-  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]] path, never via
-  * the default-path `force()`.
+  * a count job, so the rewrite routes keyed windows here only under
+  * `spark.graft.rewrite.partitionedRankWindows` or
+  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]].
+  *
+  * Reference point: the reference engine numbers its crawl-edge
+  * uploads by accumulation order (`web_spider_oo.py:125-128`, restated
+  * by `q_edges_actual`); the empty-key form is the declarative,
+  * partition-parallel form of that global numbering, generalized to
+  * any sort order and the full rank family.
   */
 case class PartitionedRankNode(partKeys: Seq[Expression],
                                order: Seq[SortOrder],
                                ranks: Seq[GlobalRank.RankCol],
-                               child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ ranks.map(_.attr)
-  override def producedAttributes: AttributeSet =
-    AttributeSet(ranks.map(_.attr))
+                               child: LogicalPlan) extends KeyedWindowNode {
+  override protected def generated: Seq[Attribute] = ranks.map(_.attr)
   override protected def withNewChildInternal(newChild: LogicalPlan): PartitionedRankNode =
     copy(child = newChild)
 }
@@ -88,29 +85,11 @@ object PartitionedRankStrategy extends SparkStrategy {
 case class PartitionedRankExec(partKeys: Seq[Expression],
                                order: Seq[SortOrder],
                                ranks: Seq[GlobalRank.RankCol],
-                               child: SparkPlan) extends UnaryExecNode {
+                               child: SparkPlan) extends KeyedWindowExec {
   import GlobalRank.RankMode
   import PartitionedRank.EdgeStats
 
-  override def output: Seq[Attribute] = child.output ++ ranks.map(_.attr)
-  override def producedAttributes: AttributeSet =
-    AttributeSet(ranks.map(_.attr))
-
-  /** The composite order: partition keys first (any deterministic
-    * direction works — ascending), then the window order. */
-  private def compositeOrder: Seq[SortOrder] =
-    partKeys.map(SortOrder(_, Ascending)) ++ order
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(compositeOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(compositeOrder)
-  override def outputOrdering: Seq[SortOrder] = compositeOrder
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
-
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override protected def generated: Seq[Attribute] = ranks.map(_.attr)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val rdd = child.execute()
@@ -125,17 +104,18 @@ case class PartitionedRankExec(partKeys: Seq[Expression],
       case RankMode.PercentRank | RankMode.CumeDist | RankMode.NTile(_) => true
       case _ => false
     }
-    val needGroupSize = modes.contains(RankMode.CumeDist)
+    val needCume = modes.contains(RankMode.CumeDist)
     val partExprs = partKeys
     val partTypes = partExprs.map(_.dataType)
     val ordExprs = order.map(_.child)
     val ordTypes = ordExprs.map(_.dataType)
 
-    // pass 1: per partition (firstKey, lastKey, first/last run
-    // rows+groups, single-key flag) — the only driver state, two
-    // narrow keys + six scalars per partition
     val edges: Array[EdgeStats] =
-      rdd.mapPartitionsWithIndex({ (pid, it) =>
+      if (partKeys.isEmpty && !modes.contains(RankMode.DenseRank))
+        countEdges(rdd, needTotals)
+      else rdd.mapPartitionsWithIndex({ (pid, it) =>
+        // pass 1: per partition (firstKey, lastKey, first/last run
+        // rows, last run groups, single-key flag)
         val keyProj = UnsafeProjection.create(partExprs, childOutput)
         val keyOrd = RowOrdering.createNaturalAscendingOrdering(partTypes)
         val ordProj = UnsafeProjection.create(ordExprs, childOutput)
@@ -167,10 +147,8 @@ case class PartitionedRankExec(partKeys: Seq[Expression],
           }
         }
         if (single) firstRunRows = runRows
-        Iterator((pid, EdgeStats(firstKey,
-          if (curKey == null) null
-          else if (curKey eq firstKey) firstKey else curKey,
-          firstRunRows, runRows, runGroups, single)))
+        Iterator((pid, EdgeStats(firstKey, curKey, firstRunRows, runRows,
+          runGroups, single)))
       }, preservesPartitioning = true).collect().sortBy(_._1).map(_._2)
 
     // driver stitching, direction 1: offset for each partition's FIRST
@@ -178,32 +156,29 @@ case class PartitionedRankExec(partKeys: Seq[Expression],
     // earlier partitions; every later key in the partition starts at 0
     val nParts = edges.length
     val keyOrdDriver = RowOrdering.createNaturalAscendingOrdering(partTypes)
+    def continues(runKey: UnsafeRow, key: UnsafeRow): Boolean =
+      runKey != null && keyOrdDriver.compare(runKey, key) == 0
     val rowOffsets = new Array[Long](nParts)
     val groupOffsets = new Array[Long](nParts)
     locally {
       var curKey: UnsafeRow = null
       var accRows = 0L
       var accGroups = 0L
-      var pid = 0
-      while (pid < nParts) {
-        val e = edges(pid)
-        if (e.firstKey != null) { // empty partitions don't break a run
-          if (curKey != null && keyOrdDriver.compare(curKey, e.firstKey) == 0) {
-            rowOffsets(pid) = accRows
-            groupOffsets(pid) = accGroups
-          }
-          if (e.single && curKey != null &&
-            keyOrdDriver.compare(curKey, e.firstKey) == 0) {
-            // the key keeps running through this whole partition
-            accRows += e.lastRunRows
-            accGroups += e.lastRunGroups
-          } else {
-            curKey = e.lastKey
-            accRows = e.lastRunRows
-            accGroups = e.lastRunGroups
-          }
+      for (pid <- 0 until nParts; e = edges(pid) if e.firstKey != null) {
+        // (empty partitions don't break a run)
+        if (continues(curKey, e.firstKey)) {
+          rowOffsets(pid) = accRows
+          groupOffsets(pid) = accGroups
         }
-        pid += 1
+        if (e.single && continues(curKey, e.firstKey)) {
+          // the key keeps running through this whole partition
+          accRows += e.lastRunRows
+          accGroups += e.lastRunGroups
+        } else {
+          curKey = e.lastKey
+          accRows = e.lastRunRows
+          accGroups = e.lastRunGroups
+        }
       }
     }
 
@@ -226,54 +201,97 @@ case class PartitionedRankExec(partKeys: Seq[Expression],
         }
         members.clear()
       }
-      var pid = 0
-      while (pid < nParts) {
-        val e = edges(pid)
-        if (e.firstKey != null) {
-          val continues = curKey != null &&
-            keyOrdDriver.compare(curKey, e.firstKey) == 0
-          if (continues && e.single) {
-            accRows += e.lastRunRows
+      for (pid <- 0 until nParts; e = edges(pid) if e.firstKey != null) {
+        val cont = continues(curKey, e.firstKey)
+        if (cont && e.single) {
+          accRows += e.lastRunRows
+          members += ((pid, true, true))
+        } else if (cont) {
+          accRows += e.firstRunRows
+          members += ((pid, true, false))
+          finalizeRun()
+          curKey = e.lastKey; accRows = e.lastRunRows
+          members += ((pid, false, true))
+        } else {
+          finalizeRun()
+          if (e.single) {
+            curKey = e.firstKey; accRows = e.lastRunRows
             members += ((pid, true, true))
-          } else if (continues) {
-            accRows += e.firstRunRows
-            members += ((pid, true, false))
-            finalizeRun()
+          } else {
+            // first key starts AND ends inside pid: local total
+            firstKeyTotals(pid) = e.firstRunRows
             curKey = e.lastKey; accRows = e.lastRunRows
             members += ((pid, false, true))
-          } else {
-            finalizeRun()
-            if (e.single) {
-              curKey = e.firstKey; accRows = e.lastRunRows
-              members += ((pid, true, true))
-            } else {
-              // first key starts AND ends inside pid: local total
-              firstKeyTotals(pid) = e.firstRunRows
-              curKey = e.lastKey; accRows = e.lastRunRows
-              members += ((pid, false, true))
-            }
           }
         }
-        pid += 1
       }
       finalizeRun()
     }
+    val lastKeys = edges.map(_.lastKey)
 
     val out = output
-    val nRanks = modes.length
     val numOutputRows = longMetric("numOutputRows")
-
-    // the per-row emission arithmetic shared by both pass-2 shapes
-    val emitModes = modes
-    val emitMetric = numOutputRows
-    final class Emitter(outProj: UnsafeProjection) extends Serializable {
-      private val joined = new JoinedRow
-      private val rankRow = new GenericInternalRow(emitModes.length)
-      def emit(row: InternalRow, pos: Long, curRank: Long, dense: Long,
-               keyTotal: Long, groupEnd: Long): InternalRow = {
+    // pass 2 over one partition; `keyLead0` is a second read of the
+    // same partition, consulted only for an interior key's total
+    val rankPartition: (Int, Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow] =
+        (pid, it, keyLead0) => {
+      val keyProj = UnsafeProjection.create(partExprs, childOutput)
+      val keyProjL = UnsafeProjection.create(partExprs, childOutput)
+      val keyOrd = RowOrdering.createNaturalAscendingOrdering(partTypes)
+      val ordProj = UnsafeProjection.create(ordExprs, childOutput)
+      val ordOrd = RowOrdering.createNaturalAscendingOrdering(ordTypes)
+      val outProj = UnsafeProjection.create(out, out)
+      val joined = new JoinedRow
+      val rankRow = new GenericInternalRow(modes.length)
+      val lastKey = lastKeys(pid)
+      val keyLead = keyLead0.buffered
+      // the rows of `target`, discarding anything before it — the lead
+      // only moves forward, so skipped (first/last) keys fast-forward
+      def countKey(target: UnsafeRow): Long = {
+        while (keyLead.hasNext &&
+          keyOrd.compare(keyProjL(keyLead.head), target) != 0) keyLead.next()
+        var n = 0L
+        while (keyLead.hasNext &&
+          keyOrd.compare(keyProjL(keyLead.head), target) == 0) {
+          keyLead.next(); n += 1L
+        }
+        n
+      }
+      var curKey: UnsafeRow = null
+      var pos = 0L
+      var curRank = 0L
+      var dense = 0L
+      var keyTotal = 0L
+      var prevOrd: UnsafeRow = null
+      def advance(row: InternalRow): Unit = {
+        val k = keyProj(row)
+        if (curKey == null || keyOrd.compare(curKey, k) != 0) {
+          val onFirstKey = curKey == null
+          curKey = k.copy()
+          pos = if (onFirstKey) rowOffsets(pid) else 0L
+          dense = if (onFirstKey) groupOffsets(pid) else 0L
+          curRank = 0L
+          prevOrd = null
+          if (needTotals) keyTotal =
+            if (onFirstKey) firstKeyTotals(pid)
+            else if (lastKey != null && keyOrd.compare(curKey, lastKey) == 0)
+              lastKeyTotals(pid)
+            else countKey(curKey)
+        }
+        pos += 1L
+        if (needTies) { // row_number/ntile-only windows skip the tie machinery
+          val o = ordProj(row)
+          if (prevOrd == null || ordOrd.compare(prevOrd, o) != 0) {
+            curRank = pos
+            dense += 1L
+            prevOrd = o.copy()
+          }
+        }
+      }
+      def emit(row: InternalRow, groupEnd: Long): InternalRow = {
         var i = 0
-        while (i < emitModes.length) {
-          emitModes(i) match {
+        while (i < modes.length) {
+          modes(i) match {
             case RankMode.RowNumber => rankRow.update(i, pos)
             case RankMode.Rank => rankRow.update(i, curRank)
             case RankMode.DenseRank => rankRow.update(i, dense)
@@ -287,146 +305,63 @@ case class PartitionedRankExec(partKeys: Seq[Expression],
           }
           i += 1
         }
-        emitMetric += 1
+        numOutputRows += 1
         outProj(joined(row, rankRow))
+      }
+      if (!needCume) it.map { row => advance(row); emit(row, 0L) }
+      else {
+        // cume_dist's numerator is the tie group's END position: buffer
+        // one (k, v) group at a time
+        var groupEnd = 0L
+        KeyedWindow.tieGroups(it, partExprs ++ ordExprs, childOutput).flatMap { group =>
+          group.iterator.zipWithIndex.map { case (row, i) =>
+            advance(row)
+            if (i == 0) groupEnd = pos - 1L + group.length
+            emit(row, groupEnd)
+          }
+        }
       }
     }
 
-    if (!needTotals) {
-      // pure streaming: per-key local arithmetic + the first key's
-      // stitched offset — no second read
-      rdd.mapPartitionsWithIndex({ (pid, it) =>
-        val keyProj = UnsafeProjection.create(partExprs, childOutput)
-        val keyOrd = RowOrdering.createNaturalAscendingOrdering(partTypes)
-        val ordProj = if (needTies) UnsafeProjection.create(ordExprs, childOutput) else null
-        val ordOrd = if (needTies) RowOrdering.createNaturalAscendingOrdering(ordTypes) else null
-        val outProj = UnsafeProjection.create(out, out)
-        val em = new Emitter(outProj)
-        var curKey: UnsafeRow = null
-        var pos = 0L
-        var curRank = 0L
-        var dense = 0L
-        var prevOrd: UnsafeRow = null
-        it.map { row =>
-          val k = keyProj(row)
-          if (curKey == null || keyOrd.compare(curKey, k) != 0) {
-            val onFirstKey = curKey == null
-            curKey = k.copy()
-            pos = if (onFirstKey) rowOffsets(pid) else 0L
-            dense = if (onFirstKey) groupOffsets(pid) else 0L
-            curRank = 0L
-            prevOrd = null
-          }
-          pos += 1L
-          if (needTies) {
-            val o = ordProj(row)
-            if (prevOrd == null || ordOrd.compare(prevOrd, o) != 0) {
-              curRank = pos
-              dense += 1L
-              prevOrd = o.copy()
-            }
-          }
-          em.emit(row, pos, curRank, dense, 0L, 0L)
-        }
-      }, preservesPartitioning = true)
-    } else {
-      // total-dependent modes: zip the stream with itself — a KEY-lead
-      // counts interior keys' totals (first/last keys take the driver's
-      // stitched totals), and a GROUP-lead (cume_dist only) counts the
-      // current (k, v) tie group — O(1) state each
-      val bcFirstTotals = sparkContext.broadcast(firstKeyTotals)
-      val bcLastTotals = sparkContext.broadcast(lastKeyTotals)
-      val bcLastKeys = sparkContext.broadcast(edges.map(_.lastKey))
-      def zipped(f: (Int, Iterator[InternalRow], Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow]): RDD[InternalRow] =
-        if (needGroupSize)
-          rdd.zipPartitions(rdd, rdd, preservesPartitioning = true) { (a, b, c) =>
-            f(org.apache.spark.TaskContext.getPartitionId(), a, b, c)
-          }
-        else
-          rdd.zipPartitions(rdd, preservesPartitioning = true) { (a, b) =>
-            f(org.apache.spark.TaskContext.getPartitionId(), a, b, Iterator.empty)
-          }
-      zipped { (pid, lagIt, keyLeadIt0, groupLeadIt0) =>
-        val keyProj = UnsafeProjection.create(partExprs, childOutput)
-        val keyProjL = UnsafeProjection.create(partExprs, childOutput)
-        val keyProjG = UnsafeProjection.create(partExprs, childOutput)
-        val keyOrd = RowOrdering.createNaturalAscendingOrdering(partTypes)
-        val ordProj = UnsafeProjection.create(ordExprs, childOutput)
-        val ordProjG = UnsafeProjection.create(ordExprs, childOutput)
-        val ordOrd = RowOrdering.createNaturalAscendingOrdering(ordTypes)
-        val outProj = UnsafeProjection.create(out, out)
-        val em = new Emitter(outProj)
-        val firstTot = bcFirstTotals.value(pid)
-        val lastTot = bcLastTotals.value(pid)
-        val lastKey = bcLastKeys.value(pid)
-
-        val keyLead = keyLeadIt0.buffered
-        // count the rows of `target`, discarding anything before it —
-        // the lead only moves forward, so skipped (first/last) keys
-        // fast-forward here
-        def countKey(target: UnsafeRow): Long = {
-          while (keyLead.hasNext &&
-            keyOrd.compare(keyProjL(keyLead.head), target) != 0) keyLead.next()
-          var n = 0L
-          while (keyLead.hasNext &&
-            keyOrd.compare(keyProjL(keyLead.head), target) == 0) {
-            keyLead.next(); n += 1L
-          }
-          n
-        }
-        val groupLead = groupLeadIt0.buffered
-        // size of the (targetKey, targetOrd) tie group
-        def countGroup(targetKey: UnsafeRow, targetOrd: UnsafeRow): Long = {
-          while (groupLead.hasNext && {
-            val h = groupLead.head
-            keyOrd.compare(keyProjG(h), targetKey) != 0 ||
-              ordOrd.compare(ordProjG(h), targetOrd) != 0
-          }) groupLead.next()
-          var n = 0L
-          while (groupLead.hasNext && {
-            val h = groupLead.head
-            keyOrd.compare(keyProjG(h), targetKey) == 0 &&
-              ordOrd.compare(ordProjG(h), targetOrd) == 0
-          }) { groupLead.next(); n += 1L }
-          n
-        }
-
-        var curKey: UnsafeRow = null
-        var onFirstKey = false
-        var pos = 0L
-        var curRank = 0L
-        var dense = 0L
-        var keyTotal = 0L
-        var groupEnd = 0L
-        var prevOrd: UnsafeRow = null
-        lagIt.map { row =>
-          val k = keyProj(row)
-          if (curKey == null || keyOrd.compare(curKey, k) != 0) {
-            onFirstKey = curKey == null
-            curKey = k.copy()
-            pos = if (onFirstKey) rowOffsets(pid) else 0L
-            dense = if (onFirstKey) groupOffsets(pid) else 0L
-            curRank = 0L
-            prevOrd = null
-            keyTotal =
-              if (onFirstKey) firstTot
-              else if (lastKey != null && keyOrd.compare(curKey, lastKey) == 0)
-                lastTot
-              else countKey(curKey)
-          }
-          pos += 1L
-          if (needTies) { // ntile-only windows skip the tie machinery
-            val o = ordProj(row)
-            if (prevOrd == null || ordOrd.compare(prevOrd, o) != 0) {
-              curRank = pos
-              dense += 1L
-              prevOrd = o.copy()
-              if (needGroupSize) groupEnd = pos - 1L + countGroup(curKey, o)
-            }
-          }
-          em.emit(row, pos, curRank, dense, keyTotal, groupEnd)
-        }
+    // every partition one key run (always so under the empty key):
+    // each partition's only key is its first, whose total is driver
+    // state — no second read
+    if (needTotals && !edges.forall(e => e.firstKey == null || e.single))
+      rdd.zipPartitions(rdd, preservesPartitioning = true) { (it, lead) =>
+        rankPartition(org.apache.spark.TaskContext.getPartitionId(), it, lead)
       }
+    else rdd.mapPartitionsWithIndex((pid, it) =>
+      rankPartition(pid, it, Iterator.empty), preservesPartitioning = true)
+  }
+
+  /** Pass 1 under the EMPTY key with no dense_rank column: per-partition
+    * row counts are all the driver needs, and they are sort-invariant,
+    * so the count job streams the exchange output below the
+    * per-partition sort. Like `zipWithIndex`, the LAST partition is not
+    * counted at all unless a mode needs the total: its offset is the
+    * sum of the others, and nothing after it reads its count. */
+  private def countEdges(rdd: RDD[InternalRow], needTotals: Boolean): Array[EdgeStats] = {
+    // reuse the already-built RDD when there is no SortExec to skip —
+    // SparkPlan.execute() is not memoized, and re-executing a stacked
+    // keyed child would re-run its own pass-1 driver jobs
+    val countRdd = PartitionedRank.preSortSource(child) match {
+      case same if same eq child => rdd
+      case preSort => preSort.execute()
+    }
+    val n = countRdd.getNumPartitions
+    val parts = if (needTotals) 0 until n else 0 until (n - 1)
+    val counts = Array.fill(n)(-1L) // -1: the uncounted last partition
+    val counted = sparkContext.runJob(countRdd,
+      (it: Iterator[InternalRow]) => {
+        var c = 0L
+        while (it.hasNext) { it.next(); c += 1L }
+        c
+      }, parts)
+    parts.zip(counted).foreach { case (p, c) => counts(p) = c }
+    val key = UnsafeProjection.create(Seq.empty[Expression]).apply(InternalRow.empty).copy()
+    counts.map { c =>
+      val k = if (c == 0L) null else key
+      EdgeStats(k, k, math.max(c, 0L), math.max(c, 0L), 0L, single = true)
     }
   }
 
@@ -445,13 +380,106 @@ object PartitionedRank {
                                       lastRunGroups: Long,
                                       single: Boolean)
 
-  /** Idempotent, race-safe strategy registration — same idiom as the
-    * sibling operators. */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    PartitionedRank.synchronized {
-      if (!spark.experimental.extraStrategies.contains(PartitionedRankStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ PartitionedRankStrategy
+  /** The plan whose rows the row-COUNT pass should read: the child of
+    * the EnsureRequirements-inserted per-partition SortExec (possibly
+    * inside its WholeStageCodegen pipeline) when one is directly on
+    * top — per-partition row counts are sort-invariant, and skipping
+    * the sort makes the count job a pure stream over shuffle files.
+    * Any other child shape (e.g. a stacked keyed operator that already
+    * satisfies the ordering) is returned as-is. Intra-partition sorts
+    * never move rows across partitions (SortExec with global=false
+    * preserves partitioning), so the counts are exactly pass 2's. */
+  private[plans] def preSortSource(child: SparkPlan): SparkPlan = child match {
+    case s: SortExec if !s.global => s.child
+    case w: WholeStageCodegenExec =>
+      w.child match {
+        case s: SortExec if !s.global => s.child
+        case _ => child
       }
+    case _ => child
+  }
+}
+
+/** The column-name API over the empty-key [[PartitionedRankNode]]:
+  * global rank columns without writing a window. */
+object GlobalRank {
+
+  /** One sort key: column name + direction (SQL default null ordering —
+    * nulls first ascending, nulls last descending, matching
+    * `Window.orderBy`). */
+  case class Key(col: String, desc: Boolean = false)
+
+  /** Which rank statistic a [[RankCol]] computes; `dataType` is the
+    * emitted column type (LONG for the integral forms — the operator
+    * exists for row counts past 2^31 — DOUBLE for percent_rank and
+    * cume_dist). */
+  sealed trait RankMode extends Serializable { def dataType: DataType = LongType }
+  object RankMode {
+    case object RowNumber extends RankMode
+    case object Rank extends RankMode
+    case object DenseRank extends RankMode
+    case object PercentRank extends RankMode { override def dataType: DataType = DoubleType }
+    case object CumeDist extends RankMode { override def dataType: DataType = DoubleType }
+    final case class NTile(buckets: Int) extends RankMode {
+      require(buckets >= 1, s"ntile buckets must be >= 1, got $buckets")
+    }
+  }
+
+  /** One output rank column: the generated attribute + its statistic. */
+  case class RankCol(attr: AttributeReference, mode: RankMode)
+
+  /** SQL-standard ntile bucket of position `pos` (1-based) among `n`
+    * rows in `k` buckets: first `n mod k` buckets take `n div k + 1`
+    * rows. The ELSE branch divides by `n div k` — only reachable when
+    * pos exceeds rem*(q+1), impossible for n < k, so the divisor is
+    * >= 1 there. */
+  def ntileOf(pos: Long, n: Long, k: Int): Long = {
+    val q = n / k
+    val rem = n % k
+    if (pos <= rem * (q + 1L)) (pos - 1L) / (q + 1L) + 1L
+    else rem + (pos - 1L - rem * (q + 1L)) / q + 1L
+  }
+
+  /** Append a global 1-based `row_number` column named `rankName`,
+    * ordered by `keys` — distributed: range-partitioned, no
+    * single-partition WindowExec anywhere in the plan. Pass a total
+    * order (unique last key) for deterministic ranks. */
+  def globalRowNumber(df: DataFrame, rankName: String,
+                      keys: Seq[Key]): DataFrame =
+    globalRanks(df, Seq(rankName -> RankMode.RowNumber), keys)
+
+  /** Append any subset of the global rank family in ONE two-pass
+    * operator over one range shuffle: `cols` names each output column
+    * and its statistic, all computed under the same `keys` order. */
+  def globalRanks(df: DataFrame, cols: Seq[(String, RankMode)],
+                  keys: Seq[Key]): DataFrame = {
+    require(keys.nonEmpty, "globalRanks needs at least one sort key")
+    require(cols.nonEmpty, "globalRanks needs at least one rank column")
+    val spark: SparkSession = df.sparkSession
+    KeyedWindow.ensureStrategies(spark)
+    val analyzed = df.queryExecution.analyzed
+    val order = keys.map(k => SortOrder(resolve(analyzed, k.col),
+      if (k.desc) Descending else Ascending))
+    // a duplicate output name would resolve ambiguously downstream —
+    // refuse now rather than at the caller's next select
+    val dup = cols.groupBy(_._1).collect { case (n, cs) if cs.size > 1 => n }
+    require(dup.isEmpty, s"duplicate rank column name(s): ${dup.mkString(", ")}")
+    cols.foreach { case (n, _) =>
+      require(!analyzed.output.exists(_.name == n),
+        s"rank column '$n' already exists in the input")
+    }
+    val ranks = cols.map { case (n, m) =>
+      RankCol(AttributeReference(n, m.dataType, nullable = false)(), m)
+    }
+    GraftSqlBridge.ofRows(spark, PartitionedRankNode(Nil, order, ranks, analyzed))
+  }
+
+  /** The one output attribute of `plan` named `name`. */
+  private[plans] def resolve(plan: LogicalPlan, name: String): Attribute =
+    plan.output.filter(_.name == name) match {
+      case Seq(a) => a
+      case Seq() => throw new IllegalArgumentException(s"no column $name")
+      case many => throw new IllegalArgumentException(
+        s"ambiguous column $name: ${many.size} matches — disambiguate first")
     }
 }

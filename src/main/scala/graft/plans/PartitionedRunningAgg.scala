@@ -2,65 +2,59 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** SKEW-AWARE distributed PARTITIONED running aggregate (r13, the
-  * second member of the skew tier after [[PartitionedRank]]):
-  * `agg(e) OVER (PARTITION BY k ORDER BY v [ROWS|RANGE] UNBOUNDED
-  * PRECEDING .. CURRENT ROW)` — the per-user cumulative total, THE
-  * most common skewed window at scale — without requiring all rows of
-  * one key in one task.
+/** Distributed EXACT RUNNING AGGREGATE, keyed or global: `agg(e) OVER
+  * ([PARTITION BY k] ORDER BY v [ROWS|RANGE] UNBOUNDED PRECEDING ..
+  * CURRENT ROW)` — the cumulative total, per user or over the whole
+  * input (the empty key; see [[KeyedWindowNode]]) — without a funnel
+  * task.
   *
-  * Same composite range sub-split as [[PartitionedRank]]
-  * (`OrderedDistribution(k ++ v)`: a hot key spreads over a contiguous
-  * partition run), with the [[GlobalRunningAgg]] prefix argument
-  * applied PER KEY:
+  * A running value is the aggregate of a PREFIX of the key's rows, and
+  * prefixes decompose by partition exactly like rank offsets do:
   *
   *  1. pass 1 aggregates each partition's LAST key run into the
   *     functions' own `DeclarativeAggregate` buffers — one buffer set
   *     plus two narrow key rows per partition to the driver;
   *  2. the driver stitches left-to-right: a partition whose first key
   *     continues its left neighbour's last key is seeded with the
-  *     key's accumulated prefix buffer (merged with the functions' own
-  *     `mergeExpressions`, in partition order — which IS global order,
-  *     so First/Last keep-left/keep-right merges stay exact, the same
-  *     ordered-allowlist argument as the global family); every other
-  *     key starts from `initialValues`;
+  *     key's accumulated prefix buffer, merged with the functions' own
+  *     `mergeExpressions` in partition order — which IS global order
+  *     under the range exchange; every other key starts from
+  *     `initialValues`;
   *  3. pass 2 streams: reset at key change, seed the partition's first
   *     key from the stitched prefix, update per row, emit
-  *     `evaluateExpression`. RANGE frames end at the current `(k, v)`
-  *     tie group, which never straddles the composite exchange — one
-  *     buffered group, as in the global operator.
+  *     `evaluateExpression`. RANGE frames (the SQL default) end at the
+  *     current `(k, v)` tie group, which never straddles the exchange —
+  *     one buffered group at a time.
   *
-  * Type behavior (decimal widening, ANSI overflow, null skipping)
-  * matches the built-in by construction — the operator only runs the
-  * functions' own Catalyst expressions. The floating caveat is the
-  * global family's: a REAL-valued double aggregate can differ in final
-  * ulps from the single-task built-in on the straddling key (prefix
-  * reassociation — the same reassociation Spark's partial aggregation
-  * performs everywhere); integer, decimal, min/max, count, bit/bool
-  * and First/Last results are bit-identical.
+  * Correct for the order-insensitive allowlist (sum/min/max/count/avg,
+  * moments, bit/bool) and ALSO for first_value/last_value (IGNORE NULLS
+  * included): pass 1 updates in sort order and the prefix merge runs
+  * in partition order, so First's keep-left / Last's keep-right merges
+  * are exact. Type behavior (decimal widening, ANSI overflow, null
+  * skipping) matches the built-in by construction — the operator only
+  * runs the functions' own Catalyst expressions. One floating caveat:
+  * the prefix seed merges per-partition partials, so a REAL-valued
+  * double aggregate can differ from the single-task built-in in final
+  * ulps (the reassociation every Spark partial aggregation performs);
+  * integer, decimal, min/max, count, bit/bool and First/Last results
+  * are bit-identical.
   *
-  * Like its sibling, routed ONLY behind
+  * Keyed windows route here only behind
   * `spark.graft.rewrite.partitionedRankWindows` or
-  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]]: the skew route
-  * is a choice, not a default (flat histograms prefer the built-in's
-  * hash exchange). Both skew operators declare the same composite
-  * distribution, so a window mixing ranks and running aggregates
-  * stacks them on ONE exchange.
+  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]].
   */
 case class PartitionedRunningAggNode(partKeys: Seq[Expression],
                                      order: Seq[SortOrder],
                                      attrs: Seq[AttributeReference],
                                      funcs: Seq[DeclarativeAggregate],
                                      rowsFrames: Seq[Boolean],
-                                     child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
+                                     child: LogicalPlan) extends KeyedWindowNode {
+  override protected def generated: Seq[Attribute] = attrs
   override protected def withNewChildInternal(newChild: LogicalPlan): PartitionedRunningAggNode =
     copy(child = newChild)
 }
@@ -79,25 +73,10 @@ case class PartitionedRunningAggExec(partKeys: Seq[Expression],
                                      attrs: Seq[AttributeReference],
                                      funcs: Seq[DeclarativeAggregate],
                                      rowsFrames: Seq[Boolean],
-                                     child: SparkPlan) extends UnaryExecNode {
+                                     child: SparkPlan) extends KeyedWindowExec {
   import PartitionedRunningAgg.RunEdge
 
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
-
-  private def compositeOrder: Seq[SortOrder] =
-    partKeys.map(SortOrder(_, Ascending)) ++ order
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(compositeOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(compositeOrder)
-  override def outputOrdering: Seq[SortOrder] = compositeOrder
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
-
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override protected def generated: Seq[Attribute] = attrs
 
   override protected def doExecute(): RDD[InternalRow] = {
     val rdd = child.execute()
@@ -109,7 +88,6 @@ case class PartitionedRunningAggExec(partKeys: Seq[Expression],
     val partExprs = partKeys
     val partTypes = partExprs.map(_.dataType)
     val ordExprs = order.map(_.child)
-    val ordTypes = ordExprs.map(_.dataType)
     val dataTypes = funcsArr.map(_.dataType)
 
     def newBuffers(): Array[SpecificInternalRow] =
@@ -199,7 +177,7 @@ case class PartitionedRunningAggExec(partKeys: Seq[Expression],
     val numOutputRows = longMetric("numOutputRows")
     // prefixes ride a broadcast: one executor-side deserialization
     // instead of per-task closure payload (r13 self-review, same as
-    // GlobalRangeMovingAgg's boundary buffers)
+    // PartitionedRangeMovingAgg's boundary buffers)
     val bcPrefixes = sparkContext.broadcast(prefixes)
     // pass 2: reset at key change, seed the first key from the prefix
     rdd.mapPartitionsWithIndex({ (pid, it) =>
@@ -262,77 +240,23 @@ case class PartitionedRunningAggExec(partKeys: Seq[Expression],
         }
       } else {
         // RANGE frames end at the (k, v) TIE GROUP's last row: buffer
-        // one group (composite tie containment), per-row values for any
-        // ROWS-frame columns captured during buffering
-        val compExprs = (partExprs ++ ordExprs)
-        val compTypes = partTypes ++ ordTypes
-        val compProj = UnsafeProjection.create(compExprs, childOutput)
-        val compOrd = RowOrdering.createNaturalAscendingOrdering(compTypes)
-        new Iterator[InternalRow] {
-          private var groupRows: Array[InternalRow] = Array.empty
-          private var rowsVals: Array[Array[Any]] = Array.empty
-          private var rangeVals: Array[Any] = Array.empty
-          private var idx = 0
-          private var pendingRow: InternalRow = null
-          private var pendingComp: UnsafeRow = null
-          private def perRow(row: InternalRow): Array[Any] = {
+        // one group (composite tie containment); ROWS-frame columns
+        // take their per-row values while the group is folded in
+        KeyedWindow.tieGroups(it, partExprs ++ ordExprs, childOutput).flatMap { group =>
+          val rowVals = group.map { row =>
             val k = keyProj(row)
             if (curKey == null || keyOrd.compare(curKey, k) != 0) startKey(k)
             updateWith(row)
-            val vs = new Array[Any](nFuncs)
-            var j = 0
-            while (j < nFuncs) {
-              if (rowsArr(j)) vs(j) = valueOf(j)
-              j += 1
-            }
-            vs
+            Array.tabulate[Any](nFuncs)(j => if (rowsArr(j)) valueOf(j) else null)
           }
-          private def loadNextGroup(): Unit = {
-            val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-            val vals = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-            var comp: UnsafeRow = null
-            if (pendingRow != null) {
-              rows += pendingRow; vals += perRow(pendingRow); comp = pendingComp
-              pendingRow = null; pendingComp = null
-            } else {
-              val r = it.next()
-              comp = compProj(r).copy()
-              val c = r.copy()
-              rows += c; vals += perRow(c)
-            }
-            var open = true
-            while (open && it.hasNext) {
-              val r = it.next()
-              val k = compProj(r)
-              if (compOrd.compare(comp, k) == 0) {
-                val c = r.copy()
-                rows += c; vals += perRow(c)
-              } else {
-                pendingRow = r.copy(); pendingComp = k.copy(); open = false
-              }
-            }
-            rangeVals = new Array[Any](nFuncs)
+          // group consumed → the buffers hold the group-end state
+          val rangeVals = Array.tabulate[Any](nFuncs)(j => if (rowsArr(j)) null else valueOf(j))
+          group.iterator.zip(rowVals.iterator).map { case (row, vs) =>
             var j = 0
             while (j < nFuncs) {
-              if (!rowsArr(j)) rangeVals(j) = valueOf(j)
+              aggRow.update(j, if (rowsArr(j)) vs(j) else rangeVals(j))
               j += 1
             }
-            groupRows = rows.toArray
-            rowsVals = vals.toArray
-            idx = 0
-          }
-          override def hasNext: Boolean =
-            idx < groupRows.length || pendingRow != null || it.hasNext
-          override def next(): InternalRow = {
-            if (idx >= groupRows.length) loadNextGroup()
-            val row = groupRows(idx)
-            var j = 0
-            while (j < nFuncs) {
-              aggRow.update(j,
-                if (rowsArr(j)) rowsVals(idx)(j) else rangeVals(j))
-              j += 1
-            }
-            idx += 1
             emit(row)
           }
         }
@@ -353,14 +277,4 @@ object PartitionedRunningAgg {
                                     lastKey: UnsafeRow,
                                     lastRunBufs: Array[UnsafeRow],
                                     single: Boolean)
-
-  /** Idempotent, race-safe strategy registration — same idiom as the
-    * sibling operators. */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    PartitionedRunningAgg.synchronized {
-      if (!spark.experimental.extraStrategies.contains(PartitionedRunningAggStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ PartitionedRunningAggStrategy
-      }
-    }
 }

@@ -1,58 +1,66 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Descending, Expression, GenericInternalRow, JoinedRow, Literal, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** SKEW-AWARE distributed PARTITIONED lead/lag (late r13, the third
-  * member of the skew tier after [[PartitionedRank]] and
-  * [[PartitionedRunningAgg]]): `lead/lag(e, k) OVER (PARTITION BY k
-  * ORDER BY v)` — the per-user event-delta, arguably the single most
-  * common window at scale — without requiring all rows of one key in
-  * one task.
+/** Distributed EXACT `lead`/`lag`, keyed or global: `lead/lag(e, k)
+  * OVER ([PARTITION BY g] ORDER BY v)` — the per-user event delta, or
+  * the global day-over-day delta under the empty key — without the
+  * single-partition WindowExec funnel or a hot key in one task (see
+  * [[KeyedWindowNode]] for the shared composite range sub-split).
   *
-  * Same composite `(k, v)` range sub-split as the siblings, with
-  * [[GlobalShift]]'s bounded-offset machinery applied PER KEY:
+  * A row's source is at most `k` rows away, so the only values a
+  * partition can need from outside itself sit next to its edges —
+  * BOUNDED boundary state instead of a funnel:
   *
   *  1. pass 1 collects, per partition, the first `maxFwd` values of
   *     its FIRST key run and the last `maxBack` values of its LAST key
   *     run (narrow single-column copies) plus the two keys and the
-  *     single-key flag;
+  *     single-key flag — at most `numPartitions * k` values per column
+  *     on the driver, independent of data volume;
   *  2. the driver chains boundaries KEY-MATCHED: a partition's
   *     prev-tail holds values of ITS first key only (telescoped
-  *     through single-key partitions of the same run), its next-head
-  *     values of its last key only — a key that ends at a boundary
-  *     contributes nothing across it, so out-of-key offsets fall to
-  *     the default exactly as the built-in's per-partition frames do;
-  *  3. pass 2 streams with the GlobalShift value ring, SEGMENT-tagged:
-  *     each buffered value carries its key-segment id, an offset
-  *     resolves in-ring only when source and current row share the
-  *     segment, below-zero sources consult the prev-tail (first
-  *     segment only), past-end sources the next-head (last segment
-  *     only — a segment that ends mid-partition defaults instead).
-  *     Bounded row read-ahead of `maxFwd`, zero unbounded state.
+  *     through single-key partitions of the same run — under the empty
+  *     key, through every partition), its next-head values of its last
+  *     key only; a key that ends at a boundary contributes nothing
+  *     across it, so out-of-key offsets fall to the default exactly as
+  *     the built-in's per-partition frames do;
+  *  3. pass 2 streams with a value ring and a bounded row read-ahead of
+  *     `maxFwd`, SEGMENT-tagged: each buffered value carries its
+  *     key-segment id, an offset resolves in-ring only when source and
+  *     current row share the segment, below-zero sources consult the
+  *     prev-tail (first segment only), past-end sources the next-head
+  *     (last segment only). Defaults are evaluated against the CURRENT
+  *     row, WindowExec's own offset-frame semantics.
   *
-  * `lag(e, k) IGNORE NULLS` rides the same machinery (late r13 —
-  * the former "non-null ring seeded key-matched" refusal): its
-  * boundary tails hold the last k NON-NULL values of the last key run,
-  * the driver chains them key-matched exactly like the plain tails,
-  * and pass 2 keeps a per-SEGMENT k-capacity non-null ring (reset at
-  * key change, seeded from the chained tail for the first segment
-  * only) — [[GlobalShift]]'s ring with the key boundary as one more
-  * reset point. The lead mirror stays on WindowExec in this tier
-  * (the zipped-lookahead machinery, per key, when a query needs it);
-  * non-literal and over-cap offsets keep WindowExec. Tie caveat
-  * identical to the built-in: offsets under a non-total `(k, v)` order
-  * are tie-order-dependent; pass a total order for determinism.
+  * `lag(e, k) IGNORE NULLS` is the k-th most recent NON-NULL value
+  * strictly before the row — still k values of state: its tails hold
+  * the last k non-null values, chained key-matched like the plain
+  * tails, and pass 2 keeps a per-SEGMENT k-capacity non-null ring
+  * (reset at key change, seeded from the chained tail for the first
+  * segment only). The LEAD mirror can need unbounded lookahead and is
+  * [[PartitionedLookahead]]'s. Offsets are capped by the rewrite rule
+  * (`spark.graft.rewrite.maxShiftOffset`) because boundary state scales
+  * linearly with them.
   *
-  * Like its siblings, routed ONLY behind
-  * `spark.graft.rewrite.partitionedRankWindows` or
-  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]]; all skew
-  * operators declare the same composite distribution and stack on ONE
-  * exchange.
+  * Tie caveat, stronger than the built-in's: the two passes re-read
+  * the shuffle independently, so under a NON-total order a
+  * boundary-crossing value may reflect a different permutation of a
+  * tie group than the in-partition values do — pass a total order for
+  * deterministic, exact output.
+  *
+  * Parallel-seq layout (attrs(i) carries inputs(i) shifted by
+  * offsets(i) with defaults(i)) rather than a Seq of bundles: QueryPlan
+  * collects `expressions` only from TOP-LEVEL Expression/Seq[Expression]
+  * constructor fields, so nesting the inputs inside a carrier case
+  * class would hide them from `references` — and ColumnPruning would
+  * prune the shifted columns out of the child. Keyed windows route
+  * here only behind `spark.graft.rewrite.partitionedRankWindows` or
+  * [[graft.rules.RewriteGlobalRankWindows.forceSkew]].
   */
 case class PartitionedShiftNode(partKeys: Seq[Expression],
                                 order: Seq[SortOrder],
@@ -61,9 +69,8 @@ case class PartitionedShiftNode(partKeys: Seq[Expression],
                                 offsets: Seq[Int],
                                 defaults: Seq[Expression],
                                 ignoreNullsFlags: Seq[Boolean],
-                                child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
+                                child: LogicalPlan) extends KeyedWindowNode {
+  override protected def generated: Seq[Attribute] = attrs
   override protected def withNewChildInternal(newChild: LogicalPlan): PartitionedShiftNode =
     copy(child = newChild)
 }
@@ -84,25 +91,10 @@ case class PartitionedShiftExec(partKeys: Seq[Expression],
                                 offsets: Seq[Int],
                                 defaults: Seq[Expression],
                                 ignoreNullsFlags: Seq[Boolean],
-                                child: SparkPlan) extends UnaryExecNode {
+                                child: SparkPlan) extends KeyedWindowExec {
   import PartitionedShift.ShiftEdge
 
-  override def output: Seq[Attribute] = child.output ++ attrs
-  override def producedAttributes: AttributeSet = AttributeSet(attrs)
-
-  private def compositeOrder: Seq[SortOrder] =
-    partKeys.map(SortOrder(_, Ascending)) ++ order
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(compositeOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(compositeOrder)
-  override def outputOrdering: Seq[SortOrder] = compositeOrder
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
-
-  override lazy val metrics =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
+  override protected def generated: Seq[Attribute] = attrs
 
   override protected def doExecute(): RDD[InternalRow] = {
     val rdd = child.execute()
@@ -111,8 +103,8 @@ case class PartitionedShiftExec(partKeys: Seq[Expression],
     val inputsArr = inputs.toArray
     val offsetsArr = offsets.toArray
     val defaultsArr = defaults.toArray
-    // IGNORE NULLS columns (lag-only by construction, as in
-    // GlobalShift): tails and the per-segment ring hold NON-NULL
+    // IGNORE NULLS columns (lag-only by construction): tails and the
+    // per-segment ring hold NON-NULL
     // values only — the state stays k values, just k non-null ones
     val ign = (if (ignoreNullsFlags.isEmpty) Seq.fill(nShifts)(false)
                else ignoreNullsFlags).toArray
@@ -262,7 +254,7 @@ case class PartitionedShiftExec(partKeys: Seq[Expression],
 
     val out = output
     val numOutputRows = longMetric("numOutputRows")
-    // pass 2: GlobalShift's value ring + bounded read-ahead, with each
+    // pass 2: a value ring + bounded read-ahead, with each
     // buffered value tagged by its key SEGMENT — offsets resolve
     // in-ring only within the segment
     rdd.mapPartitionsWithIndex({ (pid, it) =>
@@ -317,7 +309,7 @@ case class PartitionedShiftExec(partKeys: Seq[Expression],
         }
       // IGNORE NULLS lag columns: a k-capacity ring of the last k
       // NON-NULL values strictly before the current row WITHIN ITS KEY
-      // SEGMENT — GlobalShift's ring with the key boundary as one more
+      // SEGMENT — the key boundary is one more
       // reset point. Reset at every emit-segment change; the FIRST
       // segment seeds from the key-matched chained tail (<= k
       // non-nulls of this key before this partition, globally); the
@@ -429,13 +421,33 @@ object PartitionedShift {
                                       tails: Array[Array[UnsafeRow]],
                                       single: Boolean)
 
-  /** Idempotent, race-safe strategy registration — same idiom as the
-    * sibling operators. */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    PartitionedShift.synchronized {
-      if (!spark.experimental.extraStrategies.contains(PartitionedShiftStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ PartitionedShiftStrategy
-      }
+  /** One requested shift for the column-name API: `offset > 0` looks
+    * ahead (lead), `< 0` behind (lag); out-of-range rows get null. */
+  case class Shift(name: String, input: String, offset: Int)
+
+  /** Append global lead/lag columns ordered by `keys` — the empty-key
+    * [[PartitionedShiftNode]]: range-partitioned with bounded boundary
+    * state, no single-partition WindowExec anywhere in the plan. */
+  def globalShift(df: DataFrame, shifts: Seq[Shift], keys: Seq[GlobalRank.Key]): DataFrame = {
+    require(keys.nonEmpty, "globalShift needs at least one sort key")
+    require(shifts.nonEmpty, "globalShift needs at least one shift column")
+    val spark = df.sparkSession
+    KeyedWindow.ensureStrategies(spark)
+    val analyzed = df.queryExecution.analyzed
+    val order = keys.map(k => SortOrder(GlobalRank.resolve(analyzed, k.col),
+      if (k.desc) Descending else Ascending))
+    val dup = shifts.groupBy(_.name).collect { case (n, cs) if cs.size > 1 => n }
+    require(dup.isEmpty, s"duplicate shift column name(s): ${dup.mkString(", ")}")
+    shifts.foreach { s =>
+      require(!analyzed.output.exists(_.name == s.name),
+        s"shift column '${s.name}' already exists in the input")
     }
+    val inputs = shifts.map(s => GlobalRank.resolve(analyzed, s.input))
+    GraftSqlBridge.ofRows(spark, PartitionedShiftNode(Nil, order,
+      shifts.zip(inputs).map { case (s, in) =>
+        AttributeReference(s.name, in.dataType, nullable = true)() },
+      inputs, shifts.map(_.offset),
+      inputs.map(in => Literal.create(null, in.dataType)),
+      shifts.map(_ => false), analyzed))
+  }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{JoinedRow, MutableProjection, SpecificInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 
-import graft.plans.GlobalRangeMovingAgg.KeyBufs
+import graft.plans.PartitionedRangeMovingAgg.KeyBufs
 
 /** Amortized-O(1) sliding RANGE-frame evaluation over per-key partial
   * buffers (r14, ADVICE r13) — replaces the per-key full-deque rescan
-  * in [[GlobalRangeMovingAgg]] / [[PartitionedRangeMovingAgg]]'s
+  * in [[PartitionedRangeMovingAgg]]'s
   * pass 2, which merged `O((backExtent + fwdExtent) * nFuncs)` buffers
   * PER DISTINCT KEY even when per-function frames were much narrower —
   * quadratic-ish in dense key regions near the `maxShiftOffset` cap
@@ -43,7 +43,7 @@ import graft.plans.GlobalRangeMovingAgg.KeyBufs
 private[plans] final class SlidingFrames(funcs: Array[DeclarativeAggregate],
                                          lowers: Array[Long],
                                          uppers: Array[Long]) {
-  import GlobalRangeMovingAgg.addSat
+  import PartitionedRangeMovingAgg.addSat
 
   private val nFuncs = funcs.length
 

@@ -103,7 +103,7 @@ object R102Queries {
       val wy = Window.orderBy("y")
       // r13 (VERDICT r12 task 1): both global rank() windows route
       // through GlobalRank (rank is tie-exact — see the tie-containment
-      // argument on GlobalRankNode), retiring the ENTITY whitelist
+      // argument on PartitionedRankNode), retiring the ENTITY whitelist
       // entry; the per-x/per-y tie counts stay on keyed (partitioned)
       // WindowExec, which scales by key.
       val r = RewriteGlobalRankWindows.force(per

@@ -11,7 +11,7 @@ import graft.queries.Queries.QueryDef
 
 /** Hundred-eighth wave — justified under the r7
   * no-new-wave-without-new-surface rule (SURVEY §7.2): the distributed
-  * exact-rank primitive ([[graft.plans.GlobalRank]], VERDICT r11 task 1
+  * exact-rank primitive ([[graft.plans.PartitionedRank]], VERDICT r11 task 1
   * — the EXECUTED form of the `WindowWhitelist` ENTITY-class entries'
   * documented 100 TB alternative).
   *
@@ -24,7 +24,7 @@ import graft.queries.Queries.QueryDef
   *    is recomputed from (rank, n) with the standard first-`n % k`-
   *    buckets-get-the-extra-row rule, in pure integer arithmetic.
   *    PlanShapeSpec pins the shape: zero WindowExec, three
-  *    GlobalRankExec, no single-partition exchange anywhere.
+  *    PartitionedRankExec, no single-partition exchange anywhere.
   *
   *  - `q_dsv2_views`: the DSv2 VIEW CATALOG tier (VERDICT r11 task 2;
   *    [[graft.catalog.GraftViewCatalogSupport]] + the analyzer wiring

@@ -10,9 +10,9 @@ import graft.rules.RewriteGlobalRankWindows
 
 /** Hundred-ninth wave — justified under the r7
   * no-new-wave-without-new-surface rule (SURVEY §7.2): the rank-family
-  * generalization of [[graft.plans.GlobalRank]] (rank / dense_rank /
+  * generalization of [[graft.plans.PartitionedRank]] (rank / dense_rank /
   * percent_rank / cume_dist / ntile, tie-aware, one two-pass operator),
-  * the distributed offset-window operator [[graft.plans.GlobalShift]]
+  * the distributed offset-window operator [[graft.plans.PartitionedShift]]
   * (global lead/lag with bounded boundary state), and the
   * [[graft.rules.RewriteGlobalRankWindows]] optimizer rule that turns
   * unpartitioned rank/offset windows INTO them. All queries here are
@@ -36,7 +36,7 @@ import graft.rules.RewriteGlobalRankWindows
   *    1..n positions produced by the two-pass offsets.
   *
   * Plan shape for both is pinned in PlanShapeSpec: zero WindowExec,
-  * ONE GlobalRankExec (all functions of a window node land in one
+  * ONE PartitionedRankExec (all functions of a window node land in one
   * operator, one range shuffle).
   */
 object R109Queries {
@@ -106,7 +106,7 @@ object R109Queries {
   /** `q_shift_rewrite`: the CALENDAR-class twin — daily revenue with
     * day-over-day delta (lag) and next-day lookahead (lead), written
     * with the BUILT-IN offset windows and routed through the rewrite,
-    * so [[graft.plans.GlobalShift]]'s bounded boundary state sits on
+    * so [[graft.plans.PartitionedShift]]'s bounded boundary state sits on
     * the oracle-checked path. Day is unique after the rollup → total
     * order → exact. */
   val qShiftRewrite = QueryDef("q_shift_rewrite",
@@ -138,7 +138,7 @@ object R109Queries {
   /** `q_runagg_rewrite`: the running-aggregate family through the
     * rewrite — cumulative revenue and day count over MONTHS (a
     * tie-heavy order key: every day of a month is a peer), using the
-    * SQL-DEFAULT RANGE frame, so [[graft.plans.GlobalRunningAgg]]'s
+    * SQL-DEFAULT RANGE frame, so [[graft.plans.PartitionedRunningAgg]]'s
     * prefix-merged buffers AND its tie-group-end semantics both sit on
     * the oracle-checked path. RANGE values are functions of the order
     * key, so the DISTINCT projection is deterministic despite
@@ -224,7 +224,7 @@ object R109Queries {
   /** `q_movagg_rewrite`: the MOVING-FRAME family through the rewrite —
     * 7-day trailing revenue (sum/min/max/count), a centered 3-day sum,
     * and a pure-future 2-day sum, all as BUILT-IN bounded ROWS windows
-    * routed through [[graft.plans.GlobalMovingAgg]]'s boundary-row
+    * routed through [[graft.plans.PartitionedMovingAgg]]'s boundary-row
     * machinery. Day is unique after the rollup → total order → exact;
     * the pure-future frame empties at the last days (null sum on both
     * engines). Integer cents keep every value hash-comparable. */

@@ -14,8 +14,8 @@ import graft.rules.RewriteGlobalRankWindows
   * ()` — ratio-to-total — computed as partial buffers + driver merge +
   * broadcast evaluate, ZERO shuffle) and the ordered-allowlist widening
   * that routes `first_value`/`last_value` (IGNORE NULLS included)
-  * through [[graft.plans.GlobalRunningAgg]]'s prefix-merged buffers.
-  * Late r12 added [[graft.plans.GlobalNthValue]] (`nth_value` under
+  * through [[graft.plans.PartitionedRunningAgg]]'s prefix-merged buffers.
+  * Late r12 added [[graft.plans.PartitionedNthValue]] (`nth_value` under
   * start-anchored frames: one global constant gated on frame length).
   * All queries are written with the BUILT-IN window functions and
   * routed through [[RewriteGlobalRankWindows.force]], so the rewrite
@@ -65,7 +65,7 @@ object R110Queries {
 
   /** `q_firstlast_rewrite`: first_value/last_value — plain AND IGNORE
     * NULLS — as RUNNING windows over unique days, routed through
-    * [[graft.plans.GlobalRunningAgg]] (the r12 ordered-allowlist
+    * [[graft.plans.PartitionedRunningAgg]] (the r12 ordered-allowlist
     * widening: First/Last prefix-merge exactly because the range
     * exchange + sort feed the driver merge in global order). The
     * nullable column is a deterministic function of the day
@@ -107,7 +107,7 @@ object R110Queries {
         |FROM k WINDOW w AS (ORDER BY day) ORDER BY day""".stripMargin))
 
   /** `q_nthvalue_rewrite`: `nth_value` — plain, IGNORE NULLS, and
-    * whole-frame — through [[graft.plans.GlobalNthValue]]: the k-th
+    * whole-frame — through [[graft.plans.PartitionedNthValue]]: the k-th
     * (non-null) row of the ordered input is ONE global constant, and
     * each row shows it iff its frame already reaches k rows. Day is
     * unique after the rollup -> total order -> exact; the nullable
@@ -151,7 +151,7 @@ object R110Queries {
         |FROM k WINDOW w AS (ORDER BY day) ORDER BY day""".stripMargin))
 
   /** `q_shiftnn_rewrite`: `lag ... IGNORE NULLS` through
-    * [[graft.plans.GlobalShift]]'s non-null ring (late r12, lag-only —
+    * [[graft.plans.PartitionedShift]]'s non-null ring (late r12, lag-only —
     * the lead mirror needs unbounded lookahead and keeps WindowExec).
     * The nullable column is the deterministic day-of-month % 3
     * pattern, so ~1/3 of days are null and boundary telescoping

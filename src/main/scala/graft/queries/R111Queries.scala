@@ -8,7 +8,7 @@ import graft.rules.RewriteGlobalRankWindows
 
 /** Hundred-eleventh wave (r13) — justified under the §7.2
   * no-new-wave-without-new-surface rule by the round's new physical
-  * surface: [[graft.plans.GlobalRangeMovingAgg]], the dense-domain
+  * surface: [[graft.plans.PartitionedRangeMovingAgg]], the dense-domain
   * RANGE-moving-frame tier (VERDICT r12 task 3 — previously the larger
   * documented non-rewrite: value-bounded frames kept the
   * single-partition WindowExec because boundary state in ROWS is
@@ -203,7 +203,7 @@ object R111Queries {
         |ORDER BY k, event_id""".stripMargin))
 
   /** `q_leadnn_rewrite`: `lead ... IGNORE NULLS` through the late-r13
-    * [[graft.plans.GlobalLookahead]] — the offset family's LAST
+    * [[graft.plans.PartitionedLookahead]] — the offset family's LAST
     * retired refusal (the r12 lag-only mirror documented "the lead
     * form needs unbounded lookahead"; the zipped lead/lag pass holds k
     * VALUES, never the null-run row gap). Same deterministic

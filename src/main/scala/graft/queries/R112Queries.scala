@@ -110,7 +110,7 @@ object R112Queries {
     * frame execution") retired by admitting NthValue, itself a
     * DeclarativeAggregate, into the moving-frame rebuffer of BOTH
     * tiers: a global trailing/centered pair (incl. IGNORE NULLS)
-    * through [[graft.plans.GlobalMovingAgg]] and a per-key trailing
+    * through [[graft.plans.PartitionedMovingAgg]] and a per-key trailing
     * form under the hot key through
     * [[graft.plans.PartitionedMovingAgg]], in ONE query. Total orders
     * on both windows (event_id breaks cents ties); non-null order
@@ -346,7 +346,7 @@ object R112Queries {
     * monotone reversal with no overflow, under which the frame bounds
     * carry over unchanged) plus one-shot null frames for the trailing
     * null block. A global DESC window rides
-    * [[graft.plans.GlobalRangeMovingAgg]], a per-key DESC window under
+    * [[graft.plans.PartitionedRangeMovingAgg]], a per-key DESC window under
     * the hot key rides [[graft.plans.PartitionedRangeMovingAgg]] — one
     * query, both tiers, zero WindowExec. Gappy non-null axis (RANGE ≠
     * ROWS); explicit NULLS FIRST on the DuckDB side is unnecessary

@@ -13,7 +13,7 @@ import graft.rules.RewriteGlobalRankWindows
   * CURRENT ROW` over a TIMESTAMP order key, previously a documented
   * non-rewrite in both window tiers). A timestamp is epoch MICROS in a
   * Long and a day/hour-pure interval bound is an exact micro count, so
-  * the per-key-buffer argument of [[graft.plans.GlobalRangeMovingAgg]]
+  * the per-key-buffer argument of [[graft.plans.PartitionedRangeMovingAgg]]
   * / [[graft.plans.PartitionedRangeMovingAgg]] carries unchanged; the
   * queries are written with the BUILT-IN window functions (SQL interval
   * frames through `expr`) and routed through

@@ -41,8 +41,9 @@ object R8Queries {
     * still computes and writes from scratch (nothing persists across
     * JVM runs — this is input STAGING, the same cadence as
     * [[graft.core.Tables.stageEventsDir]]'s deterministic tmp reuse);
-    * later calls copy the one-file result. */
-  private val sentinelFileByDir =
+    * later calls copy the one-file result, and re-write it if the
+    * memoised file has since been deleted. */
+  private[graft] val sentinelFileByDir =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Stage the events fixture plus two one-row sentinel files whose
@@ -55,8 +56,8 @@ object R8Queries {
     * sentinel therefore impersonates each side ('view' and 'purchase',
     * in-range user); their negative event_ids keep them out of the
     * result. */
-  private[queries] def stageWithSentinel(s: SparkSession, dir: String,
-                                         prefix: String = "graft_slo_src"): String = {
+  private[graft] def stageWithSentinel(s: SparkSession, dir: String,
+                                       prefix: String = "graft_slo_src"): String = {
     val stageDir = Tables.stageEventsDir(dir, prefix)
     // drop sentinels from any previous layout so reruns see exactly ours
     val stale = Files.list(Paths.get(stageDir))
@@ -70,25 +71,39 @@ object R8Queries {
     // query for no covered surface. r16: the write itself runs once per
     // JVM per data dir (see [[sentinelFileByDir]]) — the other
     // consumers copy the staged file.
-    val part = sentinelFileByDir.computeIfAbsent(dir, _ => {
-      import s.implicits._
-      // sentinel ts must be in the SAME raw unit as the staged fixture:
-      // nanos when Tables.eventsTsDiv = 1000, micros when it's 1
-      val nsToRaw = 1000L / Tables.eventsTsDiv(s, dir)
-      val rows = Seq((1, "view"), (2, "purchase")).map { case (i, et) =>
-        (-i.toLong, (SentinelNs + i * 86400L * 1000000000L) / nsToRaw, 59L, et)
+    // a memo whose temp file is gone (a tmp cleaner, a deleted tmp
+    // dir) is recomputed; the Spark write never runs inside the map's
+    // computeIfAbsent (a concurrent first use then writes twice — both
+    // files are complete, and the last one memoised wins)
+    val part = Option(sentinelFileByDir.get(dir))
+      .filter(p => Files.exists(Paths.get(p)))
+      .getOrElse {
+        val written = writeSentinelFile(s, dir)
+        sentinelFileByDir.put(dir, written)
+        written
       }
-      val tmp = Files.createTempDirectory("graft_slo_sent").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val listing = Files.list(Paths.get(tmp))
-      try listing.toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS")).head
-      finally listing.close()
-    })
     Files.copy(Paths.get(part), Paths.get(stageDir, "zz_sentinel12.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     stageDir
+  }
+
+  /** Writes the two sentinel rows as one parquet file in a fresh temp
+    * dir; returns the file's path. */
+  private def writeSentinelFile(s: SparkSession, dir: String): String = {
+    import s.implicits._
+    // sentinel ts must be in the SAME raw unit as the staged fixture:
+    // nanos when Tables.eventsTsDiv = 1000, micros when it's 1
+    val nsToRaw = 1000L / Tables.eventsTsDiv(s, dir)
+    val rows = Seq((1, "view"), (2, "purchase")).map { case (i, et) =>
+      (-i.toLong, (SentinelNs + i * 86400L * 1000000000L) / nsToRaw, 59L, et)
+    }
+    val tmp = Files.createTempDirectory("graft_slo_sent").toString
+    rows.toDF("event_id", "ts", "user_id", "event_type")
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val listing = Files.list(Paths.get(tmp))
+    try listing.toArray.map(_.toString)
+      .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS")).head
+    finally listing.close()
   }
 
   /** Stream-stream LEFT OUTER join: views left, purchases right, same

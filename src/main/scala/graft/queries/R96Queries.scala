@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -161,6 +161,17 @@ object R96Queries {
 
   // ---------- q_ipf ----------
 
+  /** One rake's new integer weight, `(p - p % ms) div ms` for
+    * `p = w * tgt`, in exact LONG arithmetic. The numerator is a
+    * multiple of `ms`, so the quotient is exact — but only as an
+    * integer division: `p` reaches ~2e16, past 2^53, where a DOUBLE
+    * division can land just under the exact quotient and a truncating
+    * cast then drops one. */
+  private[graft] def rakedWeight(w: Column, tgt: Column, ms: Column): Column = {
+    val p = w * tgt
+    call_function("div", p - p % ms, ms)
+  }
+
   private val ipfRounds = 3
   private val ipfScale = 100000L
 
@@ -186,9 +197,7 @@ object R96Queries {
       def rake(key: String): Unit = {
         val sums = cells.groupBy(key).agg(sum(col("w")).cast("long").as("ms"))
         val next = cells.join(broadcast(sums), key)
-          .withColumn("w",
-            ((col("w") * col("tgt") - (col("w") * col("tgt")) % col("ms")) /
-              col("ms")).cast("long"))
+          .withColumn("w", rakedWeight(col("w"), col("tgt"), col("ms")))
           .drop("ms").localCheckpoint()
         org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(cells)
         cells = next

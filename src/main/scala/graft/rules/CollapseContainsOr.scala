@@ -63,27 +63,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalShiftStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalLookaheadStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalRunningAggStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalMovingAggStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalRangeMovingAggStrategy)
     e.injectPlannerStrategy(_ => graft.plans.GlobalFrameAggStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.GlobalNthValueStrategy)
     e.injectPlannerStrategy(_ => graft.plans.GlobalExactPercentileStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedRankStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedRunningAggStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedShiftStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedMovingAggStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedRangeMovingAggStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedLookaheadStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.PartitionedNthValueStrategy)
-    // conf-gated (spark.graft.rewrite.globalRankWindows, default off):
-    // rewrite unpartitioned rank-family windows into the distributed
-    // GlobalRankNode. Pre-CBO, not operator-optimization: it runs ONCE,
-    // after pushdowns and window collapsing settle, and introduces a
-    // node the operator batch's rules should not have to re-walk.
+    graft.plans.KeyedWindow.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
+    // conf-gated (spark.graft.rewrite.globalRankWindows and
+    // .partitionedRankWindows, default off): rewrite funnel-shaped
+    // windows into the keyed window tier. Pre-CBO, not
+    // operator-optimization: it runs ONCE, after pushdowns and window
+    // collapsing settle, and introduces nodes the operator batch's
+    // rules should not have to re-walk.
     e.injectPreCBORule(_ => RewriteGlobalRankWindows)
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),

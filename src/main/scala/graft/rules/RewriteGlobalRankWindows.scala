@@ -2,96 +2,93 @@ package graft.rules
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftSqlBridge
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeMap, AttributeReference, AttributeSet, Cast, CumeDist, CurrentRow, DenseRank, EqualNullSafe, Expression, Lag, Lead, Literal, NTile, NamedExpression, NthValue, PercentRank, RangeFrame, Rank, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnaryMinus, UnboundedFollowing, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeMap, AttributeReference, AttributeSet, Cast, CumeDist, CurrentRow, DenseRank, Descending, EqualNullSafe, Expression, Lag, Lead, Literal, NTile, NamedExpression, NthValue, PercentRank, RangeFrame, Rank, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnaryMinus, UnboundedFollowing, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, BitAndAgg, BitOrAgg, BitXorAgg, Complete, Count, DeclarativeAggregate, First, Last, Max, Min, StddevPop, StddevSamp, Sum, VariancePop, VarianceSamp}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
-import graft.plans.{GlobalExactPercentile, GlobalExactPercentileNode, GlobalFrameAgg, GlobalFrameAggNode, GlobalLookahead, GlobalLookaheadNode, GlobalMovingAgg, GlobalMovingAggNode, GlobalNthValue, GlobalNthValueNode, GlobalRangeMovingAgg, GlobalRangeMovingAggNode, GlobalRank, GlobalRankNode, GlobalRunningAgg, GlobalRunningAggNode, GlobalShift, GlobalShiftNode, PartitionedLookahead, PartitionedLookaheadNode, PartitionedMovingAgg, PartitionedMovingAggNode, PartitionedNthValue, PartitionedNthValueNode, PartitionedRangeMovingAgg, PartitionedRangeMovingAggNode, PartitionedRank, PartitionedRankNode, PartitionedRunningAgg, PartitionedRunningAggNode, PartitionedShift, PartitionedShiftNode}
+import graft.plans.{GlobalExactPercentile, GlobalExactPercentileNode, GlobalFrameAgg, GlobalFrameAggNode, KeyedWindow, PartitionedLookaheadNode, PartitionedMovingAggNode, PartitionedNthValueNode, PartitionedRangeMovingAgg, PartitionedRangeMovingAggNode, PartitionedRankNode, PartitionedRunningAggNode, PartitionedShiftNode}
 import graft.plans.GlobalRank.{RankCol, RankMode}
-import graft.plans.GlobalShift.ShiftCol
 
-/** Optimizer rule: rewrite an UNPARTITIONED rank-family or
-  * offset-family `Window` into the distributed two-pass
-  * [[graft.plans.GlobalRankNode]] / [[graft.plans.GlobalShiftNode]] —
-  * the engine removing its own worst plan shape instead of merely
-  * auditing it.
+/** Optimizer rule: rewrite a window the built-in `WindowExec` would run
+  * in one task per partition key — or, UNPARTITIONED, in one task for
+  * the whole input — into the keyed window tier ([[graft.plans
+  * .KeyedWindowNode]]): the engine removing its own worst plan shapes
+  * instead of merely auditing them.
   *
-  * `row_number()/rank()/dense_rank()/percent_rank()/cume_dist()/
-  * ntile(k)/lead(e,k)/lag(e,k) OVER (ORDER BY ...)` with no PARTITION
-  * BY plans as a WindowExec that
-  * warns "No Partition Defined ... moving all data to a single
-  * partition": one task sorts and ranks everything — the funnel the
+  * `row_number()/rank()/.../lead(e,k)/lag(e,k)/sum(e)/... OVER (ORDER
+  * BY ...)` with no PARTITION BY plans as a WindowExec that warns "No
+  * Partition Defined ... moving all data to a single partition": one
+  * task sorts and computes everything — the funnel the
   * `WindowWhitelist` audit reviews case-by-case, and the one plan shape
-  * that cannot survive 100 TB. Every rank function is
-  * position-arithmetic over the globally sorted order — exactly what
-  * [[GlobalRankNode]] computes range-partitioned in two passes over one
-  * shuffle — and every literal-offset lead/lag is a bounded-distance
-  * lookup over the same order, which [[GlobalShiftNode]] resolves with
-  * bounded boundary state. The rewrite is an equivalence, not an
+  * that cannot survive 100 TB. With a PARTITION BY, the hash exchange
+  * puts every row of one key in one task, so a hot key IS the job. The
+  * keyed operators compute both shapes in two passes over one
+  * composite range shuffle; the unpartitioned window is the same
+  * operator with an EMPTY key. The rewrite is an equivalence, not an
   * approximation:
   *
-  *  - all window expressions of one `Window` node share its ORDER BY
-  *    (Catalyst groups window expressions by spec), so they land in ONE
-  *    GlobalRankNode and/or ONE GlobalShiftNode — stacked nodes share
-  *    the range partitioning, one shuffle regardless of how many
-  *    functions;
-  *  - `row_number`/`ntile`/`lead`/`lag` keep their tie caveat (physical
-  *    position breaks ties — nondeterministic under a non-total order,
-  *    same as the built-ins); `rank`/`dense_rank`/`percent_rank`/
-  *    `cume_dist` are tie-exact (see the range-partitioning
-  *    tie-containment argument on [[GlobalRankNode]]);
-  *  - output attributes keep their exprIds (the rewrite projects the
-  *    generated LONG rank back to the built-in's INT / DOUBLE type
-  *    under the original alias; lead/lag types pass through), so
-  *    nothing upstream re-resolves.
+  *  - all window expressions of one `Window` node share its spec
+  *    (Catalyst groups window expressions by spec), so each family
+  *    lands in ONE node and the families stack on the one exchange —
+  *    one shuffle regardless of how many functions;
+  *  - `row_number`/`ntile`/`lead`/`lag` and ROWS frames keep their tie
+  *    caveat (physical position breaks ties — nondeterministic under a
+  *    non-total order, same as the built-ins); the rank statistics and
+  *    RANGE frames are tie-exact (the range-partitioning
+  *    tie-containment argument);
+  *  - output attributes keep their exprIds (the rewrite projects each
+  *    generated column back under the original alias, casting the
+  *    LONG ranks to the built-in's INT), so nothing upstream
+  *    re-resolves.
   *
-  * Seven families rewrite: rank (GlobalRank), offset lead/lag
-  * (GlobalShift), running aggregates incl. first_value/last_value
-  * (GlobalRunningAgg), bounded-ROWS moving aggregates
-  * (GlobalMovingAgg), bounded-RANGE moving aggregates on a single
-  * ascending integral key (GlobalRangeMovingAgg — the r13
-  * dense-domain tier: per-key buffers bounded by the VALUE extent),
-  * whole-frame aggregates — `agg(e) OVER ()` / `UNBOUNDED ..
-  * UNBOUNDED`, the ratio-to-total shape, which [[GlobalFrameAggNode]]
-  * computes with ZERO shuffle — and `nth_value` under frames anchored
-  * at the global start ([[GlobalNthValueNode]]: one global constant
-  * gated on frame length). Late r13 retired the offset family's last
-  * refusal: `lead(e, k) IGNORE NULLS` routes through
-  * [[GlobalLookaheadNode]] (the zipped lead/lag pass holds k VALUES,
-  * never the null-run row gap; lag IGNORE NULLS was already the
-  * non-null ring), and moving-lower-bound `nth_value` rides the
-  * moving-frame rebuffer (NthValue is itself a DeclarativeAggregate —
-  * see [[movAggOf]]'s second arm). A `Window` node is left alone when
-  * any of its expressions is outside the families (RANGE moving frames
-  * on non-integral or descending/multi-key orders and nth_value under
-  * an unbounded-FOLLOWING moving frame need real frame execution;
-  * non-literal or over-cap offsets fall back), when it HAS a partition
-  * spec (partitioned windows scale fine; the r13 SKEW tier routes
-  * rank/shift/running/moving/whole-frame members behind its own gate),
-  * or when an ordered-family member rides a non-deterministic order
-  * key.
+  * Seven ordered families route to the keyed tier: rank
+  * ([[graft.plans.PartitionedRankNode]]), literal-offset lead/lag and
+  * lag IGNORE NULLS (`PartitionedShiftNode`), lead IGNORE NULLS
+  * (`PartitionedLookaheadNode`), running aggregates incl.
+  * first_value/last_value (`PartitionedRunningAggNode`), bounded-ROWS
+  * moving aggregates and moving-lower-bound nth_value
+  * (`PartitionedMovingAggNode`), bounded-RANGE moving aggregates on one
+  * dense-domain order key (`PartitionedRangeMovingAggNode`), and
+  * start-anchored nth_value (`PartitionedNthValueNode`). Two composed
+  * shapes reuse them: suffix-running frames (mirrored onto running
+  * ones, [[suffixRunningOf]]) and delayed/extended running frames
+  * (lag/lead over a running column, [[delayedRunAggOf]]). Whole-frame
+  * members take one more route per tier: globally, `agg(e) OVER ()`
+  * computes with ZERO shuffle ([[GlobalFrameAggNode]], plus exact
+  * percentiles and `mode()`); per key, a window-to-join
+  * ([[rewriteSkewFrameAgg]]).
   *
-  * OFF by default — enable with `spark.graft.rewrite.globalRankWindows=
-  * true` (session conf; the rule is injected by [[GraftExtensions]] as
-  * a pre-CBO rule so it runs once, after pushdowns settle below the
-  * window) — or apply explicitly to one DataFrame with [[force]], which
-  * rewrites unconditionally without touching session state: the
-  * registry's queries use that form so a shared Bench/Verify session
-  * never has plans silently change shape mid-suite.
+  * Two gates decide the route, never the shape of a window alone:
+  *  - the GLOBAL tier (empty or all-foldable PARTITION BY) runs under
+  *    `spark.graft.rewrite.globalRankWindows=true` or [[force]];
+  *  - the KEYED tier (a real PARTITION BY) runs only under
+  *    `spark.graft.rewrite.partitionedRankWindows=true` or
+  *    [[forceSkew]] — on a FLAT key histogram the built-in's hash
+  *    exchange beats a range exchange plus a count job, so flat-key
+  *    windows stay on WindowExec unless the skew route is chosen.
+  *
+  * A `Window` node is left alone when any of its expressions is outside
+  * the families (non-literal or over-cap offsets, RANGE frames on
+  * non-dense keys, ...), or when an ordered member rides a
+  * non-deterministic order key or child plan. Both confs are session
+  * confs (the rule is injected by [[GraftExtensions]] as a pre-CBO rule
+  * so it runs once, after pushdowns settle below the window); the
+  * registry's queries use [[force]]/[[forceSkew]] so a shared
+  * Bench/Verify session never has plans silently change shape
+  * mid-suite.
   */
 object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.rewrite.globalRankWindows"
 
-  /** The r13 skew tier's own gate (VERDICT r12 task 6): PARTITIONED
-    * rank windows through [[graft.plans.PartitionedRankNode]]. A
-    * separate conf on purpose — on a FLAT key histogram the built-in's
-    * hash exchange beats a range exchange plus a count job, so the
-    * skew route must be an explicit choice (this conf, or
+  /** The keyed tier's own gate: PARTITIONED windows through the keyed
+    * operators. A separate conf on purpose — on a FLAT key histogram
+    * the built-in's hash exchange beats a range exchange plus a count
+    * job, so the skew route must be an explicit choice (this conf, or
     * [[forceSkew]]), never a side effect of enabling the global-window
     * rewrite. */
   val SkewConfKey = "spark.graft.rewrite.partitionedRankWindows"
@@ -106,11 +103,68 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     if (!skewEnabled) p1 else rewriteSkew(p1)
   }
 
+  /** Max |offset| (and ROWS-frame extent) the rule routes to the keyed
+    * operators: their boundary state is `numPartitions * offset`
+    * values per column, so an absurd literal offset must fall back to
+    * the built-in rather than bloat the driver. */
+  val MaxShiftKey = "spark.graft.rewrite.maxShiftOffset"
+  private def maxShift: Int =
+    SQLConf.get.getConfString(MaxShiftKey, "1024").toInt
+
+  /** The partition keys the keyed operators take for a window
+    * partitioned by `ps`, if the tier routes it. The KEYED tier takes
+    * a non-empty deterministic spec as is. The GLOBAL tier takes an
+    * empty or all-FOLDABLE spec (the `partitionBy(lit(1))` idiom — a
+    * constant key puts every row in ONE partition, so the window is
+    * semantically unpartitioned) as the EMPTY key, evaluating each
+    * foldable key eagerly and declining if evaluation throws:
+    * discarding an expression like PARTITION BY 1/0 unevaluated would
+    * optimize away its ANSI runtime error. */
+  private def tierKeys(ps: Seq[Expression], keyed: Boolean): Option[Seq[Expression]] =
+    if (keyed) Some(ps).filter(p => p.nonEmpty && p.forall(_.deterministic))
+    else if (ps.forall(e => e.foldable && {
+      try { e.eval(); true } catch { case _: Exception => false }
+    })) Some(Nil)
+    else None
+
+  /** One classified window expression: its alias and the generated
+    * attribute the rewritten node emits for it, plus the family's
+    * arguments. Matching classifies each expression ONCE, allocating
+    * its attribute exactly once. */
+  private sealed trait Member { def a: Alias; def attr: AttributeReference }
+  private case class AsRank(a: Alias, mode: RankMode,
+                            attr: AttributeReference) extends Member
+  private case class AsShift(a: Alias, input: Expression, offset: Int,
+                             default: Expression, ignoreNulls: Boolean,
+                             attr: AttributeReference) extends Member
+  private case class AsLeadNN(a: Alias, input: Expression, k: Int,
+                              default: Expression,
+                              attr: AttributeReference) extends Member
+  private case class AsRunAgg(a: Alias, fn: DeclarativeAggregate,
+                              rows: Boolean, attr: AttributeReference) extends Member
+  private case class AsMovAgg(a: Alias, fn: DeclarativeAggregate, lo: Int,
+                              hi: Int, attr: AttributeReference) extends Member
+  private case class AsRangeMov(a: Alias, fn: DeclarativeAggregate, lo: Long,
+                                hi: Long, attr: AttributeReference) extends Member
+  private case class AsNth(a: Alias, input: Expression, k: Int,
+                           ignoreNulls: Boolean, kind: Int,
+                           attr: AttributeReference) extends Member
+  private case class AsFrameAgg(a: Alias, fn: AggregateFunction,
+                                attr: AttributeReference) extends Member
+  private case class AsPct(a: Alias, input: Expression, pct: Double,
+                           attr: AttributeReference) extends Member
+  private case class AsMode(a: Alias, input: Expression, tieSmallest: Boolean,
+                            attr: AttributeReference) extends Member
+
+  /** The attribute a rewritten node emits for alias `a`. */
+  private def genAttr(a: Alias, dt: DataType, nullable: Boolean): AttributeReference =
+    AttributeReference(s"__graft_${a.name}", dt, nullable)()
+
   /** The rank statistic `fn` computes, if `fn` is in the rewritable
     * family. `ntile` only with a positive integer-literal bucket count
     * (the analyzer requires a foldable bucket expression; non-literal
     * folds are rare enough to skip rather than evaluate here). */
-  private def modeOf(fn: Expression): Option[RankMode] = fn match {
+  private def rankModeOf(fn: Expression): Option[RankMode] = fn match {
     case _: RowNumber => Some(RankMode.RowNumber)
     case _: Rank => Some(RankMode.Rank)
     case _: DenseRank => Some(RankMode.DenseRank)
@@ -123,53 +177,31 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** (alias, mode) iff `ne` is `<rank-family fn> OVER (ORDER BY ...)`
-    * with no PARTITION BY. The frame is irrelevant: every family member
+  /** A rank-family window. The frame is irrelevant: every family member
     * is position-determined, and the analyzer has already pinned each
     * one's required frame. */
-  /** Matches a window PARTITION BY spec that is GLOBAL in effect:
-    * empty, or all-FOLDABLE (the `partitionBy(lit(1))` idiom several
-    * statistics queries use to name the funnel explicitly) — a
-    * constant key puts every row in ONE partition, so the window is
-    * semantically unpartitioned and the whole global family applies
-    * (r14, VERDICT r13 task 3: this is what lets the VALUE-DOMAIN
-    * whitelist class route instead of being reviewed). */
-  private object GlobalPart {
-    def unapplySeq(ps: Seq[Expression]): Option[Seq[Expression]] =
-      // ADVICE r14 #5: eagerly evaluate each foldable key and decline
-      // the rewrite if evaluation throws — discarding an expression
-      // like PARTITION BY 1/0 unevaluated would optimize away its ANSI
-      // runtime error, changing observable behavior
-      if (ps.forall(e => e.foldable && {
-        try { e.eval(); true } catch { case _: Exception => false }
-      })) Some(Nil) else None
-  }
-
-  private def rankOf(ne: NamedExpression): Option[(Alias, RankMode)] = ne match {
-    case a @ Alias(WindowExpression(fn, WindowSpecDefinition(GlobalPart(), _, _)), _) =>
-      modeOf(fn).map(m => (a, m))
+  private def rankOf(ne: NamedExpression): Option[Member] = ne match {
+    case a @ Alias(WindowExpression(fn, _), _) =>
+      rankModeOf(fn).map(m => AsRank(a, m, genAttr(a, m.dataType, nullable = false)))
     case _ => None
   }
 
-  /** Max |offset| the rule will route through GlobalShift: its boundary
-    * state is `numPartitions * offset` values per shift column, so an
-    * absurd literal offset must fall back to the built-in rather than
-    * bloat the driver. */
-  val MaxShiftKey = "spark.graft.rewrite.maxShiftOffset"
-  private def maxShift: Int =
-    SQLConf.get.getConfString(MaxShiftKey, "1024").toInt
+  /** A default the offset operators can evaluate: a null literal, or
+    * the input's type, evaluated against the current row —
+    * WindowExec's own offset-frame semantics. */
+  private def defaultOk(default: Expression, input: Expression): Boolean =
+    default.deterministic &&
+      (default.foldable && default.eval() == null ||
+        DataType.equalsStructurally(default.dataType, input.dataType,
+          ignoreNullability = true))
 
-  /** (input, signed offset, default, ignoreNulls) iff `ne` is a
-    * rewritable `lead`/`lag` global window: literal int offset within
-    * the cap, and a default the offset node can evaluate (null
-    * literal, or same type as the input, evaluated against the current
-    * row — WindowExec's own offset-frame semantics). The sign is
-    * normalized so positive looks ahead: `lag(e, -2)` IS `lead(e, 2)`,
-    * as with the built-ins. IGNORE NULLS routes only when the
-    * NORMALIZED offset looks BACK: the k-th non-null behind is a
-    * k-value ring over the stream, but the k-th non-null AHEAD can be
-    * arbitrarily far (a null run has no bound) and keeps WindowExec. */
-  private def shiftOf(ne: NamedExpression): Option[(Alias, ShiftCol)] = {
+  /** A rewritable `lead`/`lag`: literal int offset within the cap, and
+    * a default per [[defaultOk]]. The sign is normalized so positive
+    * looks ahead: `lag(e, -2)` IS `lead(e, 2)`, as with the built-ins.
+    * IGNORE NULLS routes here only when the NORMALIZED offset looks
+    * BACK (the k-th non-null behind is a k-value ring); the k-th
+    * non-null AHEAD can be arbitrarily far and is [[leadNNOf]]'s. */
+  private def shiftOf(ne: NamedExpression): Option[Member] = {
     def spec(fn: Expression): Option[(Expression, Int, Expression, Boolean)] = fn match {
       case l: Lag => l.inputOffset match {
         case Literal(k: Int, IntegerType) => Some((l.input, -k, l.default, l.ignoreNulls))
@@ -182,69 +214,46 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
       case _ => None
     }
     ne match {
-      case a @ Alias(we @ WindowExpression(fn, WindowSpecDefinition(GlobalPart(), _, _)), _) =>
+      case a @ Alias(we @ WindowExpression(fn, _), _) =>
         spec(fn).collect {
           case (input, off, default, ignoreNulls)
               if math.abs(off) <= maxShift && input.deterministic &&
-                (!ignoreNulls || off < 0) &&
-                default.deterministic &&
-                (default.foldable && default.eval() == null ||
-                  org.apache.spark.sql.types.DataType.equalsStructurally(
-                    default.dataType, input.dataType, ignoreNullability = true)) =>
-            (a, ShiftCol(AttributeReference(s"__graft_${a.name}",
-              input.dataType, nullable = we.nullable)(), input, off, default,
-              ignoreNulls))
+                (!ignoreNulls || off < 0) && defaultOk(default, input) =>
+            AsShift(a, input, off, default, ignoreNulls,
+              genAttr(a, input.dataType, we.nullable))
         }
       case _ => None
     }
   }
 
-  /** (alias, input, k, default, generated attr) iff `ne` is a
-    * `lead(e, k) IGNORE NULLS` global window with a positive literal
-    * offset within the cap — the r13 [[GlobalLookaheadNode]] tier (the
-    * former "unbounded lookahead" refusal: the VALUE state is k
-    * values; the zipped pass 2 never buffers the null-run row gap).
-    * One node per expression — see the operator's single-column
-    * rationale. */
-  private def leadNNOf(ne: NamedExpression): Option[(Alias, Expression, Int, Expression, AttributeReference)] = {
+  /** `lead(e, k) IGNORE NULLS` (or its `lag(e, -k)` spelling) with a
+    * positive literal offset within the cap — the lookahead operator:
+    * the VALUE state is k values; the zipped pass 2 never buffers the
+    * null-run row gap. One node per expression — see the operator's
+    * single-column rationale. */
+  private def leadNNOf(ne: NamedExpression): Option[Member] = {
     def spec(fn: Expression): Option[(Expression, Int, Expression)] = fn match {
       case l: Lead if l.ignoreNulls => l.offset match {
         case Literal(kk: Int, IntegerType) if kk > 0 => Some((l.input, kk, l.default))
         case _ => None
       }
       case l: Lag if l.ignoreNulls => l.inputOffset match {
-        // lag(e, -k) IGNORE NULLS is lead(e, k) IGNORE NULLS
         case Literal(kk: Int, IntegerType) if kk < 0 => Some((l.input, -kk, l.default))
         case _ => None
       }
       case _ => None
     }
     ne match {
-      case a @ Alias(we @ WindowExpression(fn, WindowSpecDefinition(GlobalPart(), _, _)), _) =>
+      case a @ Alias(we @ WindowExpression(fn, _), _) =>
         spec(fn).collect {
           case (input, kk, default)
-              if kk <= maxShift && input.deterministic &&
-                default.deterministic &&
-                (default.foldable && default.eval() == null ||
-                  org.apache.spark.sql.types.DataType.equalsStructurally(
-                    default.dataType, input.dataType, ignoreNullability = true)) =>
-            (a, input, kk, default,
-              AttributeReference(s"__graft_${a.name}", input.dataType,
-                nullable = we.nullable)())
+              if kk <= maxShift && input.deterministic && defaultOk(default, input) =>
+            AsLeadNN(a, input, kk, default, genAttr(a, input.dataType, we.nullable))
         }
       case _ => None
     }
   }
 
-  /** (alias, function, isRowsFrame, generated attr) iff `ne` is a
-    * rewritable RUNNING AGGREGATE global window: an allowlisted
-    * DeclarativeAggregate (sum/min/max/count/avg, moments, bit/bool —
-    * plus first_value/last_value via [[allowedOrderedAgg]], whose
-    * order-sensitivity the running operator's in-order prefix merge
-    * satisfies) in Complete mode with no DISTINCT and no FILTER,
-    * framed UNBOUNDED PRECEDING .. CURRENT ROW (ROWS or RANGE — RANGE
-    * is the SQL default and ends at the tie group, which
-    * GlobalRunningAgg honors). */
   /** The shared frame-aggregate allowlist: order-insensitive within
     * the frame. Used by both the running (UNBOUNDED PRECEDING) and
     * moving (bounded ROWS) matchers. */
@@ -290,131 +299,109 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def runAggOf(ne: NamedExpression): Option[(Alias, DeclarativeAggregate, Boolean, AttributeReference)] = {
-    def allowed(fn: DeclarativeAggregate): Boolean = allowedOrderedAgg(fn)
-    def unwrap(fn: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction)
-        : Option[DeclarativeAggregate] = unwrapAgg(fn)
-    ne match {
-      case a @ Alias(we @ WindowExpression(
-          AggregateExpression(fn0, Complete, false, None, _),
-          WindowSpecDefinition(GlobalPart(), _,
-            SpecifiedWindowFrame(ft, UnboundedPreceding, CurrentRow))), _) =>
-        unwrap(fn0).collect {
-          case fn if allowed(fn) && fn.deterministic =>
-            (a, fn, ft == RowFrame,
-              AttributeReference(s"__graft_${a.name}", fn.dataType,
-                nullable = we.nullable)())
-        }
-      case _ => None
-    }
+  /** A RUNNING-AGGREGATE window: an allowlisted DeclarativeAggregate —
+    * [[allowedOrderedAgg]], whose first_value/last_value
+    * order-sensitivity the running operator's in-order prefix merge
+    * satisfies — in Complete mode with no DISTINCT and no FILTER,
+    * framed UNBOUNDED PRECEDING .. CURRENT ROW (ROWS or RANGE — RANGE
+    * is the SQL default and ends at the tie group, which the operator
+    * honors). */
+  private def runAggOf(ne: NamedExpression): Option[Member] = ne match {
+    case a @ Alias(we @ WindowExpression(
+        AggregateExpression(fn0, Complete, false, None, _),
+        WindowSpecDefinition(_, _,
+          SpecifiedWindowFrame(ft, UnboundedPreceding, CurrentRow))), _) =>
+      unwrapAgg(fn0).collect {
+        case fn if allowedOrderedAgg(fn) && fn.deterministic =>
+          AsRunAgg(a, fn, ft == RowFrame, genAttr(a, fn.dataType, we.nullable))
+      }
+    case _ => None
   }
 
-  /** (alias, function, frame offsets, generated attr) iff `ne` is a
-    * rewritable MOVING-FRAME global window: an allowlisted aggregate
-    * over `ROWS BETWEEN lo AND hi` with literal row offsets within the
-    * boundary-state cap — trailing (`-6..0`), centered (`-1..1`),
-    * pure-past, or pure-future. UNBOUNDED PRECEDING frames are the
-    * running family; RANGE moving frames are value-bounded, not
-    * row-bounded, and keep WindowExec. */
-  private def movAggOf(ne: NamedExpression): Option[(Alias, DeclarativeAggregate, Int, Int, AttributeReference)] = {
-    // the parser writes "k PRECEDING" as UnaryMinus(Literal(k)); the
-    // DataFrame API writes rowsBetween offsets as signed literals;
-    // CurrentRow is offset 0 on either end
-    def bound(e: Expression): Option[Int] = e match {
-      case CurrentRow => Some(0)
-      case Literal(v: Int, IntegerType) => Some(v)
-      case Literal(v: Long, LongType) if v.isValidInt => Some(v.toInt)
-      case UnaryMinus(Literal(v: Int, IntegerType), _) => Some(-v)
-      case UnaryMinus(Literal(v: Long, LongType), _) if v.isValidInt => Some(-v.toInt)
-      case _ => None
-    }
+  /** A literal ROWS-frame bound as a signed row offset: CurrentRow is
+    * 0; the parser writes "k PRECEDING" as UnaryMinus(Literal(k)), the
+    * DataFrame API writes rowsBetween offsets as signed literals. */
+  private def rowOffset(e: Expression): Option[Int] = e match {
+    case CurrentRow => Some(0)
+    case Literal(v: Int, IntegerType) => Some(v)
+    case Literal(v: Long, LongType) if v.isValidInt => Some(v.toInt)
+    case UnaryMinus(Literal(v: Int, IntegerType), _) => Some(-v)
+    case UnaryMinus(Literal(v: Long, LongType), _) if v.isValidInt => Some(-v.toInt)
+    case _ => None
+  }
+
+  /** A MOVING-FRAME window: an allowlisted aggregate over `ROWS BETWEEN
+    * lo AND hi` with literal row offsets within the boundary-state cap
+    * — trailing (`-6..0`), centered (`-1..1`), pure-past, or
+    * pure-future. UNBOUNDED PRECEDING frames are the running family;
+    * RANGE moving frames are [[rangeMovAggOf]]'s. */
+  private def movAggOf(ne: NamedExpression): Option[Member] = {
+    def frame(lo0: Expression, hi0: Expression): Option[(Int, Int)] = for {
+      lo <- rowOffset(lo0)
+      hi <- rowOffset(hi0)
+      if lo <= hi && math.max(math.abs(lo), math.abs(hi)) <= maxShift
+    } yield (lo, hi)
     ne match {
       case a @ Alias(we @ WindowExpression(
           AggregateExpression(fn0, Complete, false, None, _),
-          WindowSpecDefinition(GlobalPart(), _,
+          WindowSpecDefinition(_, _,
             SpecifiedWindowFrame(RowFrame, lo0, hi0))), _) =>
         for {
-          lo <- bound(lo0)
-          hi <- bound(hi0)
-          if lo <= hi && math.max(math.abs(lo), math.abs(hi)) <= maxShift
-          if !(lo0 == UnboundedPreceding) // belongs to the running family
+          (lo, hi) <- frame(lo0, hi0)
           fn <- unwrapAgg(fn0)
           if allowedOrderedAgg(fn) && fn.deterministic
-        } yield (a, fn, lo, hi,
-          AttributeReference(s"__graft_${a.name}", fn.dataType,
-            nullable = we.nullable)())
-      // MOVING-LOWER-BOUND nth_value (late r13 — previously a
-      // documented non-rewrite): NthValue is itself a
+        } yield AsMovAgg(a, fn, lo, hi, genAttr(a, fn.dataType, we.nullable))
+      // MOVING-LOWER-BOUND nth_value: NthValue is itself a
       // DeclarativeAggregate (AggregateWindowFunction) whose
       // initial/update/evaluate expressions the frame REBUFFER runs
       // verbatim in frame order — exactly how WindowExec's
       // AggregateProcessor evaluates it — so a literal-bounded ROWS
       // frame rides the moving ring like any other ordered aggregate.
-      // (Start-anchored frames are GlobalNthValue's one-constant
-      // family; frames with an unbounded FOLLOWING end have unbounded
-      // forward state and keep WindowExec.)
+      // (Start-anchored frames are [[nthOf]]'s one-constant family;
+      // frames with an unbounded FOLLOWING end keep WindowExec.)
       case a @ Alias(we @ WindowExpression(
           nv @ NthValue(input, Literal(n: Int, IntegerType), _),
-          WindowSpecDefinition(GlobalPart(), _,
-            SpecifiedWindowFrame(RowFrame, lo0, hi0))), _) =>
-        for {
-          lo <- bound(lo0)
-          hi <- bound(hi0)
-          if lo <= hi && math.max(math.abs(lo), math.abs(hi)) <= maxShift
-          if !(lo0 == UnboundedPreceding) // GlobalNthValue's family
-          if n > 0 && input.deterministic
-        } yield (a, nv, lo, hi,
-          AttributeReference(s"__graft_${a.name}", nv.dataType,
-            nullable = we.nullable)())
+          WindowSpecDefinition(_, _,
+            SpecifiedWindowFrame(RowFrame, lo0, hi0))), _)
+          if n > 0 && input.deterministic =>
+        frame(lo0, hi0).map { case (lo, hi) =>
+          AsMovAgg(a, nv, lo, hi, genAttr(a, nv.dataType, we.nullable))
+        }
       case _ => None
     }
   }
 
-  /** (alias, function, lo, hi, generated attr) iff `ne` is a rewritable
-    * RANGE-MOVING global window (r13, the dense-domain tier): an
-    * order-INSENSITIVE allowlisted aggregate ([[allowedAgg]] — not the
-    * ordered widening: per-key buffers make First/Last undefined) over
-    * `RANGE BETWEEN lo AND hi` with integral-literal value offsets
-    * within the boundary-state cap, on a SINGLE order key that is
-    * INTEGRAL (int/long/short/byte/date — the dense-domain
-    * precondition: the value window holds at most `hi - lo + 1`
-    * distinct keys, so [[GlobalRangeMovingAggNode]] ships per-key
-    * BUFFERS bounded by the value extent, never rows bounded by
-    * density) or a TIMESTAMP (r14 — epoch micros with micros-exact
-    * interval bounds; see [[graft.plans.GlobalRangeMovingAgg.timeKey]]
-    * for the changed buffer bound and the day-denominated cap).
-    * `UNBOUNDED PRECEDING .. CURRENT ROW` RANGE frames are the running
-    * family; multi-key orders, non-integral numeric keys,
-    * month-bearing interval bounds, and half-unbounded bounded frames
-    * keep WindowExec. */
-  private def rangeMovAggOf(ne: NamedExpression): Option[(Alias, DeclarativeAggregate, Long, Long, AttributeReference)] = {
-    ne match {
-      case a @ Alias(we @ WindowExpression(
-          AggregateExpression(fn0, Complete, false, None, _),
-          WindowSpecDefinition(GlobalPart(),
-            // ANY direction and null placement since late r13: a
-            // DESCENDING key reads through the bitwise-NOT reversal
-            // (frame bounds carry over unchanged — see longReader),
-            // and the one-shot null compute handles a LEADING or
-            // TRAILING null block alike (the r13 self-review
-            // nulls-first restriction, retired)
-            Seq(SortOrder(key, _, _, _)),
-            SpecifiedWindowFrame(RangeFrame, lo0, hi0))), _)
-          if lo0 != UnboundedPreceding && hi0 != UnboundedFollowing &&
-            GlobalRangeMovingAgg.rangeKey(key.dataType) &&
-            key.deterministic =>
-        for {
-          lo <- rangeValueBound(lo0, key.dataType)
-          hi <- rangeValueBound(hi0, key.dataType)
-          if lo <= hi &&
-            math.max(math.abs(lo), math.abs(hi)) <= rangeExtentCap(key.dataType)
-          fn <- unwrapAgg(fn0)
-          if allowedAgg(fn) && fn.deterministic
-        } yield (a, fn, lo, hi,
-          AttributeReference(s"__graft_${a.name}", fn.dataType,
-            nullable = we.nullable)())
-      case _ => None
-    }
+  /** A RANGE-MOVING window (the dense-domain tier): an order-INSENSITIVE
+    * allowlisted aggregate ([[allowedAgg]] — not the ordered widening:
+    * per-key buffers make First/Last undefined) over `RANGE BETWEEN lo
+    * AND hi` with value offsets within the cap, on a SINGLE order key
+    * of any direction and null placement that is integral/date
+    * (at most `hi - lo + 1` distinct keys per frame, so the operator
+    * ships per-key BUFFERS bounded by the value extent, never rows
+    * bounded by density), a TIMESTAMP (epoch micros, micros-exact
+    * interval bounds), or a compact DECIMAL — see
+    * [[graft.plans.PartitionedRangeMovingAgg.rangeKey]]. `UNBOUNDED
+    * PRECEDING .. CURRENT ROW` RANGE frames are the running family;
+    * multi-key orders, non-integral numeric keys, month-bearing
+    * interval bounds, and half-unbounded bounded frames keep
+    * WindowExec. */
+  private def rangeMovAggOf(ne: NamedExpression): Option[Member] = ne match {
+    case a @ Alias(we @ WindowExpression(
+        AggregateExpression(fn0, Complete, false, None, _),
+        WindowSpecDefinition(_, Seq(SortOrder(key, _, _, _)),
+          SpecifiedWindowFrame(RangeFrame, lo0, hi0))), _)
+        if lo0 != UnboundedPreceding && hi0 != UnboundedFollowing &&
+          PartitionedRangeMovingAgg.rangeKey(key.dataType) &&
+          key.deterministic =>
+      for {
+        lo <- rangeValueBound(lo0, key.dataType)
+        hi <- rangeValueBound(hi0, key.dataType)
+        if lo <= hi &&
+          math.max(math.abs(lo), math.abs(hi)) <= rangeExtentCap(key.dataType)
+        fn <- unwrapAgg(fn0)
+        if allowedAgg(fn) && fn.deterministic
+      } yield AsRangeMov(a, fn, lo, hi, genAttr(a, fn.dataType, we.nullable))
+    case _ => None
   }
 
   /** Sub-gate for the sketch tier (ADVICE r12): routing
@@ -451,49 +438,41 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
       case _ => false
     })
 
-  /** (alias, function, generated attr) iff `ne` is a rewritable
-    * WHOLE-FRAME global window: an order-insensitive allowlisted
-    * aggregate — declarative, or a bounded-sketch imperative from
-    * [[sketchAllowed]] — over `... BETWEEN UNBOUNDED PRECEDING AND
-    * UNBOUNDED FOLLOWING` (ROWS or RANGE — over the full frame they
-    * are the same set) or the analyzer's resolution of `OVER ()`. The
-    * value is one constant — the aggregate of the whole input — so no
-    * order is needed at all and [[GlobalFrameAggNode]] computes it
-    * with zero shuffle. First/Last stay out: their whole-frame value
-    * depends on the global order, which this family never
-    * establishes. */
-  private def frameAggOf(ne: NamedExpression): Option[(Alias, org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction, AttributeReference)] = ne match {
+  /** A WHOLE-FRAME window: an order-insensitive allowlisted aggregate —
+    * declarative, or (global tier only, `sketch`) a bounded-sketch
+    * imperative from [[sketchAllowed]] — over `... BETWEEN UNBOUNDED
+    * PRECEDING AND UNBOUNDED FOLLOWING` (ROWS or RANGE — over the full
+    * frame they are the same set) or the analyzer's resolution of
+    * `OVER ()` / `OVER (PARTITION BY k)`. The value is one constant per
+    * key, so no order is needed at all. First/Last stay out: their
+    * whole-frame value depends on an order neither route establishes. */
+  private def frameAggOf(ne: NamedExpression, sketch: Boolean): Option[AsFrameAgg] = ne match {
     case a @ Alias(we @ WindowExpression(
         AggregateExpression(fn0, Complete, false, None, _),
-        WindowSpecDefinition(GlobalPart(), _,
+        WindowSpecDefinition(_, _,
           SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing))), _) =>
-      val fn: Option[org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction] =
-        unwrapAgg(fn0) match {
-          case Some(d) if allowedAgg(d) => Some(d)
-          case _ if sketchAllowed(fn0) => Some(fn0)
-          case _ => None
-        }
+      val fn: Option[AggregateFunction] = unwrapAgg(fn0) match {
+        case Some(d) if allowedAgg(d) => Some(d)
+        case _ if sketch && sketchAllowed(fn0) => Some(fn0)
+        case _ => None
+      }
       fn.collect {
-        case f if f.deterministic =>
-          (a, f, AttributeReference(s"__graft_${a.name}", f.dataType,
-            nullable = we.nullable)())
+        case f if f.deterministic => AsFrameAgg(a, f, genAttr(a, f.dataType, we.nullable))
       }
     case _ => None
   }
 
-  /** (alias, input, k, ignoreNulls, frame kind, generated attr) iff
-    * `ne` is a rewritable `nth_value` global window: a positive
-    * integer-literal offset within the boundary-state cap, under a
-    * running (`UNBOUNDED PRECEDING .. CURRENT ROW`, ROWS or RANGE) or
-    * whole-frame spec — every such frame starts at global row 1, so
-    * the k-th frame row is ONE global constant and each row's value is
-    * that constant gated on its frame reaching k rows
-    * ([[GlobalNthValueNode]]). Frames with a moving lower bound need
-    * real frame execution and keep WindowExec. */
-  private def nthOf(ne: NamedExpression): Option[(Alias, Expression, Int, Boolean, Int, AttributeReference)] = ne match {
+  /** A start-anchored `nth_value`: a positive integer-literal offset
+    * within the boundary-state cap, under a running (`UNBOUNDED
+    * PRECEDING .. CURRENT ROW`, ROWS or RANGE) or whole-frame spec —
+    * every such frame starts at the key's first row, so the k-th frame
+    * row is ONE per-key constant and each row's value is that constant
+    * gated on its frame reaching k rows. Frames with a moving lower
+    * bound are [[movAggOf]]'s. */
+  private def nthOf(ne: NamedExpression): Option[Member] = ne match {
     case a @ Alias(we @ WindowExpression(
         NthValue(input, Literal(k: Int, IntegerType), ignoreNulls),
-        WindowSpecDefinition(GlobalPart(), _, SpecifiedWindowFrame(ft, lo, hi))), _)
+        WindowSpecDefinition(_, _, SpecifiedWindowFrame(ft, lo, hi))), _)
         if lo == UnboundedPreceding && k > 0 && k <= maxShift &&
           input.deterministic =>
       val kind = (ft, hi) match {
@@ -502,14 +481,12 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
         case (_, CurrentRow) => Some(1)
         case _ => None
       }
-      kind.map(fk => (a, input, k, ignoreNulls, fk,
-        AttributeReference(s"__graft_${a.name}", input.dataType,
-          nullable = we.nullable)()))
+      kind.map(fk => AsNth(a, input, k, ignoreNulls, fk,
+        genAttr(a, input.dataType, we.nullable)))
     case _ => None
   }
 
-  /** (alias, input, percentage, generated attr) iff `ne` is a
-    * rewritable EXACT-PERCENTILE whole-frame global window:
+  /** A rewritable EXACT-PERCENTILE whole-frame global window:
     * `percentile(e, p) OVER ()` / `median(e) OVER ()` (Median is
     * RuntimeReplaceable to Percentile) with a scalar literal
     * percentage, unit frequency, no REVERSE, and an integral or
@@ -522,12 +499,12 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     * the 128-bit unscaled value for 19..38 (late r13). Array
     * percentages, weighted frequencies, and percentile_disc's reverse
     * form keep WindowExec. */
-  private def pctOf(ne: NamedExpression): Option[(Alias, Expression, Double, AttributeReference)] = {
+  private def pctOf(ne: NamedExpression): Option[Member] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
     ne match {
       case a @ Alias(WindowExpression(
           AggregateExpression(fn0, Complete, false, None, _),
-          WindowSpecDefinition(GlobalPart(), _,
+          WindowSpecDefinition(_, _,
             SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing))), _) =>
         val pctFn = fn0 match {
           case p: Percentile => Some(p)
@@ -569,56 +546,16 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
           if (!ok) None
           else foldedDouble(p.percentageExpression)
             .filter(d => d >= 0.0 && d <= 1.0)
-            .map(d => (a, p.child, d,
-              AttributeReference(s"__graft_${a.name}",
-                org.apache.spark.sql.types.DoubleType, nullable = true)()))
+            .map(d => AsPct(a, p.child, d,
+              genAttr(a, org.apache.spark.sql.types.DoubleType, nullable = true)))
         }
       case _ => None
     }
   }
 
-  private sealed trait Rewritten
-  private case class AsRank(a: Alias, mode: RankMode, rc: RankCol) extends Rewritten
-  private case class AsShift(a: Alias, sc: ShiftCol) extends Rewritten
-  private case class AsRunAgg(a: Alias, fn: DeclarativeAggregate,
-                              rows: Boolean, attr: AttributeReference) extends Rewritten
-  private case class AsMovAgg(a: Alias, fn: DeclarativeAggregate,
-                              lo: Int, hi: Int,
-                              attr: AttributeReference) extends Rewritten
-  private case class AsRangeMov(a: Alias, fn: DeclarativeAggregate,
-                                lo: Long, hi: Long,
-                                attr: AttributeReference) extends Rewritten
-  private case class AsLeadNN(a: Alias, input: Expression, k: Int,
-                              default: Expression,
-                              attr: AttributeReference) extends Rewritten
-  private case class AsFrameAgg(a: Alias,
-                                fn: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction,
-                                attr: AttributeReference) extends Rewritten
-  private case class AsNth(a: Alias, input: Expression, k: Int,
-                           ignoreNulls: Boolean, kind: Int,
-                           attr: AttributeReference) extends Rewritten
-  private case class AsPct(a: Alias, input: Expression, pct: Double,
-                           attr: AttributeReference) extends Rewritten
-  private case class AsMode(a: Alias, input: Expression, reverse: Boolean,
-                            attr: AttributeReference) extends Rewritten
-
-  /** (alias, input, reverse, generated attr) iff `ne` is a whole-frame
-    * GLOBAL `mode()` window (r14, VERDICT r13 task 4) — the
-    * unbounded-buffer imperative that IS retirable: `mode(e)` is
-    * order-insensitive and equals argmax-of-value-counts, so it
-    * rewrites to the two-level counts→argmax aggregate joined back
-    * (see [[globalModeRel]]) instead of shipping a per-value hash-map
-    * buffer anywhere. Tie-break: `mode() WITHIN GROUP (ORDER BY v)`
-    * carries its direction in `reverseOpt` and the rewrite reproduces
-    * it exactly; plain `mode(e)` (reverseOpt empty) is
-    * tie-NONDETERMINISTIC in the built-in (hash-map iteration order),
-    * so the rewrite's first-in-ascending-order choice is a
-    * deterministic refinement of an unspecified result, not a
-    * divergence. `collect_list` stays refused — its value is
-    * order-DEFINED, which no order-free aggregation can reproduce. */
   /** True iff every expression in the plan subtree is deterministic.
     * Every rewrite target is a MULTI-EXECUTION shape — the two-pass
-    * Global and Partitioned operators re-execute their child RDD once
+    * keyed operators re-execute their child RDD once
     * per pass (pass-1 boundary partials, pass-2 emission), and the
     * mode/frame-agg join-backs reference the child subtree twice — so a
     * non-deterministic child (rand(), sample, a non-deterministic UDF
@@ -630,39 +567,41 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
   private def planDeterministic(p: LogicalPlan): Boolean =
     !p.exists(n => n.expressions.exists(e => !e.deterministic))
 
-  private def modeFrameAggOf(ne: NamedExpression): Option[(Alias, Expression, Boolean, AttributeReference)] = ne match {
+  /** A whole-frame `mode()` window (global or per key) — the
+    * unbounded-buffer imperative that IS retirable: `mode(e)` is
+    * order-insensitive and equals argmax-of-value-counts, so it
+    * rewrites to the two-level counts→argmax aggregate joined back
+    * (see [[globalModeRel]] / [[skewModeRel]]) instead of shipping a
+    * per-value hash-map buffer anywhere. Tie-break: `mode() WITHIN
+    * GROUP (ORDER BY v)` carries its direction in `reverseOpt` and the
+    * rewrite reproduces it exactly; plain `mode(e)` (reverseOpt empty)
+    * is tie-NONDETERMINISTIC in the built-in (hash-map iteration
+    * order), so the rewrite's first-in-ascending-order choice is a
+    * deterministic refinement of an unspecified result, not a
+    * divergence. `collect_list` stays refused — its value is
+    * order-DEFINED, which no order-free aggregation can reproduce. */
+  private def modeAggOf(ne: NamedExpression): Option[AsMode] = ne match {
     case a @ Alias(we @ WindowExpression(
         AggregateExpression(m: org.apache.spark.sql.catalyst.expressions.aggregate.Mode,
           Complete, false, None, _),
-        WindowSpecDefinition(GlobalPart(), _,
+        WindowSpecDefinition(_, _,
           SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing))), _)
         if m.child.deterministic &&
           org.apache.spark.sql.catalyst.expressions.RowOrdering
             .isOrderable(m.child.dataType) =>
-      Some((a, m.child, m.reverseOpt.getOrElse(true),
-        AttributeReference(s"__graft_${a.name}", m.dataType,
-          nullable = we.nullable)()))
+      Some(AsMode(a, m.child, m.reverseOpt.getOrElse(true),
+        genAttr(a, m.dataType, we.nullable)))
     case _ => None
   }
 
-  /** The PARTITIONED sibling of [[modeFrameAggOf]]:
-    * `mode(e) OVER (PARTITION BY k)` — the skew tier's member
-    * (per-key value counts are map-side combined; the hot key costs
-    * one combiner slot per task, never a task). */
-  private def skewModeOf(ne: NamedExpression): Option[(Alias, Expression, Boolean, AttributeReference)] = ne match {
-    case a @ Alias(we @ WindowExpression(
-        AggregateExpression(m: org.apache.spark.sql.catalyst.expressions.aggregate.Mode,
-          Complete, false, None, _),
-        WindowSpecDefinition(ps, _,
-          SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing))), _)
-        if ps.nonEmpty && m.child.deterministic &&
-          org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(m.child.dataType) =>
-      Some((a, m.child, m.reverseOpt.getOrElse(true),
-        AttributeReference(s"__graft_${a.name}", m.dataType,
-          nullable = we.nullable)()))
-    case _ => None
-  }
+  /** The ordered families, in the order their nodes stack. */
+  private def classifyOrdered(ne: NamedExpression): Option[Member] =
+    rankOf(ne).orElse(shiftOf(ne)).orElse(leadNNOf(ne)).orElse(runAggOf(ne))
+      .orElse(movAggOf(ne)).orElse(rangeMovAggOf(ne)).orElse(nthOf(ne))
+
+  /** The global tier's whole-frame members (order-independent). */
+  private def classifyWhole(ne: NamedExpression): Option[Member] =
+    modeAggOf(ne).orElse(frameAggOf(ne, sketch = true)).orElse(pctOf(ne))
 
   /** The one-row relation `SELECT mode-of(input) FROM child`: per-value
     * counts (map-side combined, nulls excluded — mode ignores null
@@ -718,42 +657,26 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     * cap) mirror onto `UNBOUNDED PRECEDING .. k-offset`, which the
     * delayed/extended composition ([[delayedRunAggOf]]) then routes;
     * offset RANGE starts and over-cap offsets stay on WindowExec. */
-  private def suffixRunningOf(ne: NamedExpression): Option[(Alias, Boolean)] = {
-    // CurrentRow anchors mirror for ROWS and RANGE; literal ROW-offset
-    // anchors mirror onto the r14 delayed/extended composition (ROWS
-    // only, within the shift cap)
-    def loOk(lo: Expression, ft: Any): Boolean = lo match {
-      case CurrentRow => true
-      case Literal(k: Int, IntegerType) =>
-        ft == RowFrame && k != 0 && math.abs(k) <= maxShift
-      case Literal(k: Long, LongType) =>
-        ft == RowFrame && k.isValidInt && k != 0L &&
-          math.abs(k.toInt) <= maxShift
-      case UnaryMinus(Literal(k: Int, IntegerType), _) =>
-        ft == RowFrame && k != 0 && math.abs(k) <= maxShift
-      case UnaryMinus(Literal(k: Long, LongType), _) =>
-        ft == RowFrame && k.isValidInt && k != 0L &&
-          math.abs(k.toInt) <= maxShift
-      case _ => false
-    }
-    ne match {
-      case a @ Alias(WindowExpression(
-          AggregateExpression(fn0, Complete, false, None, _),
-          WindowSpecDefinition(_, os,
-            SpecifiedWindowFrame(ft, lo, UnboundedFollowing))), _)
-          if os.nonEmpty && loOk(lo, ft) =>
-        val swapped = fn0 match {
-          case f: First => Last(f.child, f.ignoreNulls)
-          case l: Last => First(l.child, l.ignoreNulls)
-          case other => other
-        }
-        unwrapAgg(swapped) match {
-          case Some(fn) if allowedOrderedAgg(fn) && fn.deterministic =>
-            Some((a, ft == RowFrame))
-          case _ => None
-        }
-      case _ => None
-    }
+  private def suffixRunningOf(ne: NamedExpression): Boolean = ne match {
+    case Alias(WindowExpression(
+        AggregateExpression(fn0, Complete, false, None, _),
+        WindowSpecDefinition(_, os,
+          SpecifiedWindowFrame(ft, lo, UnboundedFollowing))), _)
+        // CurrentRow anchors mirror for ROWS and RANGE; literal
+        // ROW-offset anchors mirror onto the delayed/extended
+        // composition (ROWS only, within the shift cap)
+        if os.nonEmpty && (lo == CurrentRow || ft == RowFrame &&
+          rowOffset(lo).exists(k => k != 0 && math.abs(k) <= maxShift)) =>
+      unwrapAgg(swapFirstLast(fn0)).exists(fn => allowedOrderedAgg(fn) && fn.deterministic)
+    case _ => false
+  }
+
+  /** First <-> Last: frame CONTENT survives the suffix mirror, but
+    * these two read frame ORDER, which the reversal inverts. */
+  private def swapFirstLast(fn: AggregateFunction): AggregateFunction = fn match {
+    case f: First => Last(f.child, f.ignoreNulls)
+    case l: Last => First(l.child, l.ignoreNulls)
+    case other => other
   }
 
   /** Exact total-order reversal: ASC NULLS FIRST <-> DESC NULLS LAST
@@ -775,27 +698,17 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     * MIRROR (same alias exprId, so downstream projection is
     * untouched): reversed order, mirrored frame, First<->Last swap. */
   private def mirrorSuffix(ne: NamedExpression): NamedExpression = ne match {
-    case a @ Alias(we @ WindowExpression(
+    case a @ Alias(WindowExpression(
         ae @ AggregateExpression(fn0, _, _, _, _),
         WindowSpecDefinition(ps, os,
           SpecifiedWindowFrame(ft, lo, UnboundedFollowing))), _) =>
-      val swapped = fn0 match {
-        case f: First => Last(f.child, f.ignoreNulls)
-        case l: Last => First(l.child, l.ignoreNulls)
-        case other => other
-      }
       // the mirrored END is the NEGATED start: CURRENT ROW stays,
-      // `k PRECEDING` becomes `k FOLLOWING` and vice versa (the r14
+      // `k PRECEDING` becomes `k FOLLOWING` and vice versa (the
       // delayed/extended composition then handles the offset ends)
-      val hi: Expression = lo match {
-        case CurrentRow => CurrentRow
-        case Literal(k: Int, IntegerType) => Literal(-k)
-        case Literal(k: Long, LongType) => Literal(-k.toInt)
-        case UnaryMinus(Literal(k: Int, IntegerType), _) => Literal(k)
-        case UnaryMinus(Literal(k: Long, LongType), _) => Literal(k.toInt)
-        case other => other // unreachable under suffixRunningOf
-      }
-      Alias(WindowExpression(ae.copy(aggregateFunction = swapped),
+      val hi: Expression =
+        if (lo == CurrentRow) CurrentRow
+        else rowOffset(lo).map(k => Literal(-k)).getOrElse(lo)
+      Alias(WindowExpression(ae.copy(aggregateFunction = swapFirstLast(fn0)),
         WindowSpecDefinition(ps, os.map(reverseOrder),
           SpecifiedWindowFrame(ft, UnboundedPreceding, hi))),
         a.name)(exprId = a.exprId, qualifier = a.qualifier,
@@ -829,18 +742,10 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
         ae @ AggregateExpression(fn0, Complete, false, None, _),
         WindowSpecDefinition(_, os,
           SpecifiedWindowFrame(RowFrame, UnboundedPreceding, hi))), _)
-        if os.nonEmpty =>
-      val kOpt: Option[Int] = hi match {
-        case Literal(k: Int, IntegerType) if k != 0 => Some(k)
-        case Literal(k: Long, LongType) if k.isValidInt && k != 0L => Some(k.toInt)
-        case UnaryMinus(Literal(k: Int, IntegerType), _) if k != 0 => Some(-k)
-        case UnaryMinus(Literal(k: Long, LongType), _)
-          if k.isValidInt && k != 0L => Some(-k.toInt)
-        case _ => None // CurrentRow = running; UnboundedFollowing = whole-frame
-      }
+        if os.nonEmpty && hi != CurrentRow => // CurrentRow = running
       for {
-        k <- kOpt
-        if math.abs(k) <= maxShift
+        k <- rowOffset(hi) // UnboundedFollowing = whole-frame
+        if k != 0 && math.abs(k) <= maxShift
         fn <- unwrapAgg(fn0)
         if allowedOrderedAgg(fn) && fn.deterministic
       } yield (a, ae, k, fn)
@@ -861,577 +766,246 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     Literal.create(v, fn.dataType)
   }
 
-  /** Unconditional rewrite (the conf gate lives in [[apply]]).
-    * Idempotent: the result contains no matching `Window`, so a
-    * fixed-point batch terminates immediately. */
-  def rewrite(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    // delayed/extended running windows (r14): compose lag/lead over a
-    // generated running column (plus row_number + whole-frame totals
-    // for the k-FOLLOWING end), all riding the chain's ONE exchange —
-    // peel them, stack helper + shift windows, rewrite each half, and
-    // restore the original columns in a final Project
-    case Window(wexprs, ps, orderSpec, child, hint)
-        if wexprs.nonEmpty && ps.forall(_.foldable) &&
-          planDeterministic(child) &&
-          orderSpec.nonEmpty && orderSpec.forall(_.deterministic) &&
-          wexprs.exists(e => delayedRunAggOf(e).isDefined) &&
-          wexprs.forall(e => delayedRunAggOf(e).isDefined ||
-            suffixRunningOf(e).isDefined ||
-            frameAggOf(e).isDefined || pctOf(e).isDefined ||
-            modeFrameAggOf(e).isDefined ||
-            rankOf(e).isDefined || shiftOf(e).isDefined ||
-            leadNNOf(e).isDefined || runAggOf(e).isDefined ||
-            movAggOf(e).isDefined || rangeMovAggOf(e).isDefined ||
-            nthOf(e).isDefined) =>
-      val delayed = wexprs.flatMap(e => delayedRunAggOf(e).map(e -> _))
-      val rest = wexprs.filterNot(e => delayedRunAggOf(e).isDefined)
-      val base: LogicalPlan =
-        if (rest.isEmpty) child
-        else rewrite(Window(rest, ps, orderSpec, child, hint))
-      def freshAe(ae: AggregateExpression): AggregateExpression =
-        ae.copy(resultId = NamedExpression.newExprId)
-      val needTotals = delayed.exists(_._2._3 > 0)
-      // helper window: one running column per delayed expr, plus
-      // row_number and per-aggregate whole-frame totals when any end
-      // EXTENDS (k > 0) — rank, running, and whole-frame members all
-      // stack in one node on one exchange
-      val runA = delayed.map { case (_, (a, ae, _, _)) =>
-        Alias(WindowExpression(freshAe(ae),
-          WindowSpecDefinition(ps, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))),
-          s"__graft_dr_${a.name}")()
-      }
-      val rnA =
-        if (!needTotals) None
-        else Some(Alias(WindowExpression(RowNumber(),
-          WindowSpecDefinition(ps, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))),
-          "__graft_dr_rn")())
-      val cntA =
-        if (!needTotals) None
-        else Some(Alias(WindowExpression(
-          AggregateExpression(Count(Seq(Literal(1))), Complete,
-            isDistinct = false),
-          WindowSpecDefinition(ps, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding,
-              UnboundedFollowing))), "__graft_dr_n")())
-      val totA = delayed.map { case (_, (a, ae, k, _)) =>
-        if (k <= 0) None
-        else Some(Alias(WindowExpression(freshAe(ae),
-          WindowSpecDefinition(ps, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding,
-              UnboundedFollowing))), s"__graft_dt_${a.name}")())
-      }
-      val helperExprs: Seq[NamedExpression] =
-        runA ++ rnA.toSeq ++ cntA.toSeq ++ totA.flatten
-      val helper = rewrite(Window(helperExprs, ps, orderSpec, base))
-      // shift window over the helper outputs
-      val shiftA = delayed.zip(runA).map { case ((_, (a, _, k, fn)), ra) =>
-        val shifted: Expression =
-          if (k < 0) Lag(ra.toAttribute, Literal(-k), emptyFrameLiteral(fn),
-            false)
-          // the default never surfaces (the If picks the whole-frame
-          // value past the end) but the empty-frame literal keeps the
-          // STATIC nullability identical to the built-in's (count stays
-          // non-nullable)
-          else Lead(ra.toAttribute, Literal(k), emptyFrameLiteral(fn), false)
-        Alias(WindowExpression(shifted,
-          WindowSpecDefinition(ps, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnaryMinus(Literal(math.abs(k))),
-              Literal(math.abs(k))))), s"__graft_ds_${a.name}")()
-      }
-      val shifted = rewrite(Window(shiftA, ps, orderSpec, helper))
-      val restored: Seq[NamedExpression] = wexprs.map { e =>
-        delayed.indexWhere(_._1 eq e) match {
-          case -1 => e.toAttribute
-          case i =>
-            val (a, _, k, _) = delayed(i)._2
-            val value: Expression =
-              if (k < 0) shiftA(i).toAttribute
-              else org.apache.spark.sql.catalyst.expressions.If(
-                org.apache.spark.sql.catalyst.expressions.GreaterThan(
-                  org.apache.spark.sql.catalyst.expressions.Add(
-                    Cast(rnA.get.toAttribute, LongType), Literal(k.toLong)),
-                  cntA.get.toAttribute),
-                totA(i).get.toAttribute, shiftA(i).toAttribute)
-            Alias(value, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-              explicitMetadata = Some(a.metadata))
-        }
-      }
-      Project(child.output ++ restored, shifted)
-    // suffix-running windows (r14): peel them onto a REVERSED-order
-    // running chain stacked over the rest of the node, then let the
-    // standard case below rewrite both halves — each half is
-    // row-preserving and column-appending, so stacking composes, and
-    // the final Project restores the original column order
-    case Window(wexprs, ps, orderSpec, child, hint)
-        if wexprs.nonEmpty && ps.forall(_.foldable) &&
-          planDeterministic(child) &&
-          orderSpec.nonEmpty && orderSpec.forall(_.deterministic) &&
-          wexprs.exists(e => suffixRunningOf(e).isDefined) &&
-          wexprs.forall(e => suffixRunningOf(e).isDefined ||
-            frameAggOf(e).isDefined || pctOf(e).isDefined ||
-            modeFrameAggOf(e).isDefined ||
-            rankOf(e).isDefined || shiftOf(e).isDefined ||
-            leadNNOf(e).isDefined || runAggOf(e).isDefined ||
-            movAggOf(e).isDefined || rangeMovAggOf(e).isDefined ||
-            nthOf(e).isDefined) =>
-      val (suffix, rest) = wexprs.partition(e => suffixRunningOf(e).isDefined)
-      val base: LogicalPlan =
-        if (rest.isEmpty) child
-        else rewrite(Window(rest, ps, orderSpec, child, hint))
-      val mirrored = Window(suffix.map(mirrorSuffix), ps,
-        orderSpec.map(reverseOrder), base, hint)
-      Project(child.output ++ wexprs.map(_.toAttribute), rewrite(mirrored))
-    case Window(wexprs, GlobalPart(), orderSpec, child, _)
-        if wexprs.nonEmpty && planDeterministic(child) && {
-          // whole-frame expressions are order-independent, so a window
-          // of nothing else rewrites even with no (or a nondeterministic)
-          // ORDER BY — `sum(x) OVER ()` has an empty orderSpec by
-          // construction; the ordered families still require a
-          // deterministic order
-          val orderedOk = orderSpec.nonEmpty && orderSpec.forall(_.deterministic)
-          wexprs.forall(e => frameAggOf(e).isDefined || pctOf(e).isDefined ||
-            modeFrameAggOf(e).isDefined ||
-            (orderedOk && (rankOf(e).isDefined || shiftOf(e).isDefined ||
-              leadNNOf(e).isDefined || runAggOf(e).isDefined ||
-              movAggOf(e).isDefined || rangeMovAggOf(e).isDefined ||
-              nthOf(e).isDefined)))
-        } =>
-      // classify once (fresh generated attrs must be created exactly
-      // once per expression); the families are disjoint — a whole-frame
-      // spec (UNBOUNDED..UNBOUNDED) can match neither the running
-      // (..CURRENT ROW) nor the moving (literal bounds) matcher
-      val classified: Seq[Rewritten] = wexprs.map { e =>
-        modeFrameAggOf(e) match {
-          case Some((a, input, rev, attr)) => AsMode(a, input, rev, attr)
-          case None =>
-        frameAggOf(e) match {
-          case Some((a, fn, attr)) => AsFrameAgg(a, fn, attr)
-          case None => pctOf(e) match {
-            case Some((a, input, pct, attr)) => AsPct(a, input, pct, attr)
-            case None => rankOf(e) match {
-            case Some((a, m)) => AsRank(a, m,
-              RankCol(AttributeReference(s"__graft_${a.name}", m.dataType,
-                nullable = false)(), m))
-            case None => shiftOf(e) match {
-              case Some((a, sc)) => AsShift(a, sc)
-              case None => leadNNOf(e) match {
-                case Some((a, input, kk, default, attr)) =>
-                  AsLeadNN(a, input, kk, default, attr)
-              case None => runAggOf(e) match {
-                case Some((a, fn, rows, attr)) => AsRunAgg(a, fn, rows, attr)
-                case None => movAggOf(e) match {
-                  case Some((a, fn, lo, hi, attr)) => AsMovAgg(a, fn, lo, hi, attr)
-                  case None => rangeMovAggOf(e) match {
-                    case Some((a, fn, lo, hi, attr)) =>
-                      AsRangeMov(a, fn, lo, hi, attr)
-                    case None =>
-                      val (a, input, k, ign, kind, attr) = nthOf(e).get
-                      AsNth(a, input, k, ign, kind, attr)
-                  }
-                }
-              }
-              }
-            }
-            }
-          }
-        }
-        }
-      }
-      val rankCols = classified.collect { case AsRank(_, _, rc) => rc }
-      val shiftCols = classified.collect { case AsShift(_, sc) => sc }
-      val leadNNCols = classified.collect { case r: AsLeadNN => r }
-      val aggCols = classified.collect { case r: AsRunAgg => r }
-      val movCols = classified.collect { case r: AsMovAgg => r }
-      val rangeMovCols = classified.collect { case r: AsRangeMov => r }
-      val frameCols = classified.collect { case r: AsFrameAgg => r }
-      val nthCols = classified.collect { case r: AsNth => r }
-      val pctCols = classified.collect { case r: AsPct => r }
-      // rank node below, shift above, running agg, moving agg on top —
-      // all four declare the same OrderedDistribution and pass
-      // partitioning + ordering through, so stacking costs no extra
-      // exchange
-      val withRanks: LogicalPlan =
-        if (rankCols.isEmpty) child
-        else GlobalRankNode(orderSpec, rankCols, child)
-      val withShifts: LogicalPlan =
-        if (shiftCols.isEmpty) withRanks
-        else GlobalShiftNode(orderSpec, shiftCols.map(_.attr),
-          shiftCols.map(_.input), shiftCols.map(_.offset),
-          shiftCols.map(_.default), shiftCols.map(_.ignoreNulls), withRanks)
-      // one lookahead node per expression (single-column by design —
-      // the deque bound is per-column; see GlobalLookaheadNode)
-      val withLookaheads: LogicalPlan = leadNNCols.foldLeft(withShifts) {
-        case (p, AsLeadNN(_, input, kk, default, attr)) =>
-          GlobalLookaheadNode(orderSpec, attr, input, kk, default, p)
-      }
-      val withRunAggs: LogicalPlan =
-        if (aggCols.isEmpty) withLookaheads
-        else GlobalRunningAggNode(orderSpec, aggCols.map(_.attr),
-          aggCols.map(_.fn), aggCols.map(_.rows), withLookaheads)
-      val withMovAggs: LogicalPlan =
-        if (movCols.isEmpty) withRunAggs
-        else GlobalMovingAggNode(orderSpec, movCols.map(_.attr),
-          movCols.map(_.fn), movCols.map(_.lo), movCols.map(_.hi),
-          withRunAggs)
-      val withRangeMov: LogicalPlan =
-        if (rangeMovCols.isEmpty) withMovAggs
-        else GlobalRangeMovingAggNode(orderSpec, rangeMovCols.map(_.attr),
-          rangeMovCols.map(_.fn), rangeMovCols.map(_.lo),
-          rangeMovCols.map(_.hi),
-          orderSpec.head.direction == org.apache.spark.sql.catalyst.expressions.Descending,
-          withMovAggs)
-      val withNth: LogicalPlan =
-        if (nthCols.isEmpty) withRangeMov
-        else GlobalNthValueNode(orderSpec, nthCols.map(_.attr),
-          nthCols.map(_.input), nthCols.map(_.k),
-          nthCols.map(_.ignoreNulls), nthCols.map(_.kind), withRangeMov)
-      // the whole-frame nodes require nothing and preserve everything,
-      // so they ride the ordered siblings' shared range exchange when
-      // mixed, and introduce NO exchange when alone
-      val withFrameAggs: LogicalPlan =
-        if (frameCols.isEmpty) withNth
-        else GlobalFrameAggNode(frameCols.map(_.attr),
-          frameCols.map(_.fn), withNth)
-      val node0: LogicalPlan =
-        if (pctCols.isEmpty) withFrameAggs
-        else GlobalExactPercentileNode(pctCols.map(_.attr),
-          pctCols.map(_.input), pctCols.map(_.pct), withFrameAggs)
-      // whole-frame mode (r14): each distinct mode expression joins its
-      // ONE-ROW counts→argmax relation back onto the chain — a
-      // broadcast of a single row, zero shuffle of the big side
-      val modeCols = classified.collect { case r: AsMode => r }
-      val node: LogicalPlan = modeCols.foldLeft(node0) {
-        case (p, AsMode(_, input, rev, attr)) =>
-          Join(p, globalModeRel(child, input, rev, attr),
+  /** The global tier's rewrite, unconditionally (the conf gate lives in
+    * [[apply]]). Idempotent: the result contains no matching `Window`,
+    * so a fixed-point batch terminates immediately. */
+  def rewrite(plan: LogicalPlan): LogicalPlan = rewriteTier(plan, keyed = false)
+
+  /** The keyed tier's rewrite, unconditionally. */
+  private[graft] def rewriteSkew(plan: LogicalPlan): LogicalPlan =
+    rewriteTier(plan, keyed = true)
+
+  /** One rewrite for both tiers; `keyed` picks which windows it takes
+    * ([[tierKeys]]) and how whole-frame members route. Four shapes:
+    *
+    *  1. delayed/extended running members ([[rewriteDelayed]]);
+    *  2. suffix-running members, mirrored onto a REVERSED-order running
+    *     window stacked over the node's other members — each half is
+    *     row-preserving and column-appending, so stacking composes;
+    *  3. (keyed) all members whole-frame: a window-to-join
+    *     ([[rewriteSkewFrameAgg]]) — the one per-key window shape AQE
+    *     can then fix (skewed join partitions split, a small key set
+    *     broadcasts), while WindowExec funnels a hot key through one
+    *     task;
+    *  4. all members in the ordered families (plus, globally, the
+    *     whole-frame ones): the keyed node chain on one exchange.
+    *
+    * A keyed window mixing whole-frame and ordered members keeps
+    * WindowExec — rare, and correctly handled there. */
+  private def rewriteTier(plan: LogicalPlan, keyed: Boolean): LogicalPlan = {
+    def admitted(e: NamedExpression): Boolean =
+      classifyOrdered(e).isDefined || !keyed && classifyWhole(e).isDefined
+    def ordered(ps: Seq[Expression], orderSpec: Seq[SortOrder],
+                child: LogicalPlan): Boolean =
+      tierKeys(ps, keyed).isDefined && planDeterministic(child) &&
+        orderSpec.nonEmpty && orderSpec.forall(_.deterministic)
+    plan.transformUp {
+      case w @ Window(wexprs, ps, orderSpec, child, _)
+          if ordered(ps, orderSpec, child) &&
+            wexprs.exists(e => delayedRunAggOf(e).isDefined) &&
+            wexprs.forall(e => delayedRunAggOf(e).isDefined ||
+              suffixRunningOf(e) || admitted(e)) =>
+        rewriteDelayed(w, keyed)
+      case Window(wexprs, ps, orderSpec, child, hint)
+          if ordered(ps, orderSpec, child) && wexprs.exists(suffixRunningOf) &&
+            wexprs.forall(e => suffixRunningOf(e) || admitted(e)) =>
+        val (suffix, rest) = wexprs.partition(suffixRunningOf)
+        val base: LogicalPlan =
+          if (rest.isEmpty) child
+          else rewriteTier(Window(rest, ps, orderSpec, child, hint), keyed)
+        val mirrored = Window(suffix.map(mirrorSuffix), ps,
+          orderSpec.map(reverseOrder), base, hint)
+        Project(child.output ++ wexprs.map(_.toAttribute), rewriteTier(mirrored, keyed))
+      case Window(wexprs, ps, _, child, _)
+          if keyed && wexprs.nonEmpty && tierKeys(ps, keyed).isDefined &&
+            // the join-back re-executes the child on its aggregate
+            // branch, so the child PLAN must be deterministic
+            planDeterministic(child) &&
+            wexprs.forall(e => frameAggOf(e, sketch = false).isDefined ||
+              modeAggOf(e).isDefined) =>
+        rewriteSkewFrameAgg(wexprs, ps, child)
+      case Window(wexprs, ps, orderSpec, child, _)
+          if wexprs.nonEmpty && tierKeys(ps, keyed).isDefined &&
+            planDeterministic(child) && {
+              // whole-frame expressions are order-independent, so a
+              // window of nothing else rewrites even with no (or a
+              // nondeterministic) ORDER BY — `sum(x) OVER ()` has an
+              // empty orderSpec by construction
+              val orderedOk = orderSpec.nonEmpty && orderSpec.forall(_.deterministic)
+              wexprs.forall(e => !keyed && classifyWhole(e).isDefined ||
+                orderedOk && classifyOrdered(e).isDefined)
+            } =>
+        // classify once: fresh generated attrs are created exactly once
+        // per expression; the families are disjoint
+        val members = wexprs.map(e =>
+          (if (keyed) None else classifyWhole(e)).orElse(classifyOrdered(e)).get)
+        val chain = orderedChain(tierKeys(ps, keyed).get, orderSpec, members, child)
+        // the whole-frame nodes require nothing and preserve everything,
+        // so they ride the ordered members' shared range exchange when
+        // mixed, and introduce NO exchange when alone
+        val frames = members.collect { case f: AsFrameAgg => f }
+        val pcts = members.collect { case p: AsPct => p }
+        val withFrames =
+          if (frames.isEmpty) chain
+          else GlobalFrameAggNode(frames.map(_.attr), frames.map(_.fn), chain)
+        val withPcts =
+          if (pcts.isEmpty) withFrames
+          else GlobalExactPercentileNode(pcts.map(_.attr), pcts.map(_.input),
+            pcts.map(_.pct), withFrames)
+        // whole-frame mode: each distinct mode expression joins its
+        // ONE-ROW counts→argmax relation back onto the chain — a
+        // broadcast of a single row, zero shuffle of the big side
+        val node = members.collect { case m: AsMode => m }.foldLeft(withPcts) {
+          (p, m) => Join(p, globalModeRel(child, m.input, m.tieSmallest, m.attr),
             org.apache.spark.sql.catalyst.plans.Cross, None, JoinHint.NONE)
-      }
-      val projected = child.output ++ classified.map {
-        case AsRank(a, m, rc) =>
-          val value: Expression = m match {
-            // percent_rank / cume_dist are DOUBLE on both sides — as-is
-            case RankMode.PercentRank | RankMode.CumeDist => rc.attr
-            // the built-ins are INT; the node emits LONG (it exists for
-            // row counts past 2^31) — cast back so downstream types and
-            // the user-visible schema are unchanged
-            case _ => Cast(rc.attr, IntegerType)
-          }
+        }
+        Project(child.output ++ members.map(restore), node)
+    }
+  }
+
+  /** The keyed node chain for a window's ordered members, stacked
+    * rank, shift, lookaheads, running, moving, range-moving, nth —
+    * every node declares the same composite distribution and passes
+    * partitioning + ordering through, so stacking costs no extra
+    * exchange. */
+  private def orderedChain(partKeys: Seq[Expression], orderSpec: Seq[SortOrder],
+                           members: Seq[Member], child: LogicalPlan): LogicalPlan = {
+    val ranks = members.collect { case r: AsRank => RankCol(r.attr, r.mode) }
+    val shifts = members.collect { case s: AsShift => s }
+    val runs = members.collect { case r: AsRunAgg => r }
+    val movs = members.collect { case m: AsMovAgg => m }
+    val rangeMovs = members.collect { case m: AsRangeMov => m }
+    val nths = members.collect { case n: AsNth => n }
+    val withRanks =
+      if (ranks.isEmpty) child
+      else PartitionedRankNode(partKeys, orderSpec, ranks, child)
+    val withShifts =
+      if (shifts.isEmpty) withRanks
+      else PartitionedShiftNode(partKeys, orderSpec, shifts.map(_.attr),
+        shifts.map(_.input), shifts.map(_.offset), shifts.map(_.default),
+        shifts.map(_.ignoreNulls), withRanks)
+    // one lookahead node per expression (single-column by design — the
+    // deque bound is per-column; see PartitionedLookaheadNode)
+    val withLookaheads = members.collect { case l: AsLeadNN => l }.foldLeft(withShifts) {
+      (p, l) => PartitionedLookaheadNode(partKeys, orderSpec, l.attr, l.input,
+        l.k, l.default, p)
+    }
+    val withRuns =
+      if (runs.isEmpty) withLookaheads
+      else PartitionedRunningAggNode(partKeys, orderSpec, runs.map(_.attr),
+        runs.map(_.fn), runs.map(_.rows), withLookaheads)
+    val withMovs =
+      if (movs.isEmpty) withRuns
+      else PartitionedMovingAggNode(partKeys, orderSpec, movs.map(_.attr),
+        movs.map(_.fn), movs.map(_.lo), movs.map(_.hi), withRuns)
+    val withRangeMovs =
+      if (rangeMovs.isEmpty) withMovs
+      else PartitionedRangeMovingAggNode(partKeys, orderSpec,
+        rangeMovs.map(_.attr), rangeMovs.map(_.fn), rangeMovs.map(_.lo),
+        rangeMovs.map(_.hi), orderSpec.head.direction == Descending, withMovs)
+    if (nths.isEmpty) withRangeMovs
+    else PartitionedNthValueNode(partKeys, orderSpec, nths.map(_.attr),
+      nths.map(_.input), nths.map(_.k), nths.map(_.ignoreNulls),
+      nths.map(_.kind), withRangeMovs)
+  }
+
+  /** The member's original column, read back from its generated
+    * attribute under the original alias and exprId. The nodes emit
+    * LONG ranks (they exist for row counts past 2^31); the integral
+    * built-ins are INT, so those cast back and the user-visible schema
+    * is unchanged. */
+  private def restore(m: Member): NamedExpression = {
+    val value: Expression = m match {
+      case r: AsRank if r.mode.dataType == LongType => Cast(r.attr, IntegerType)
+      case other => other.attr
+    }
+    Alias(value, m.a.name)(exprId = m.a.exprId, qualifier = m.a.qualifier,
+      explicitMetadata = Some(m.a.metadata))
+  }
+
+  /** Delayed/extended running windows: compose lag/lead over a
+    * generated running column (plus row_number and whole-frame totals
+    * for a k-FOLLOWING end), all riding the chain's ONE exchange —
+    * peel them, stack helper and shift windows, rewrite each, and
+    * restore the original columns in a final Project. The global tier
+    * stacks the totals in the helper window (rank, running and
+    * whole-frame members share one node chain); the keyed tier, whose
+    * main shape refuses whole-frame members beside ordered ones,
+    * computes them in a window-to-join of their own below it. */
+  private def rewriteDelayed(w: Window, keyed: Boolean): LogicalPlan = {
+    val Window(wexprs, ps, orderSpec, child, hint) = w
+    def window(exprs: Seq[NamedExpression], c: LogicalPlan): LogicalPlan =
+      rewriteTier(Window(exprs, ps, orderSpec, c), keyed)
+    def frame(lo: Expression, hi: Expression): WindowSpecDefinition =
+      WindowSpecDefinition(ps, orderSpec, SpecifiedWindowFrame(RowFrame, lo, hi))
+    def freshAe(ae: AggregateExpression): AggregateExpression =
+      ae.copy(resultId = NamedExpression.newExprId)
+    val delayed = wexprs.flatMap(e => delayedRunAggOf(e).map(e -> _))
+    val rest = wexprs.filterNot(e => delayedRunAggOf(e).isDefined)
+    val base: LogicalPlan =
+      if (rest.isEmpty) child
+      else rewriteTier(Window(rest, ps, orderSpec, child, hint), keyed)
+    val needTotals = delayed.exists(_._2._3 > 0)
+    // helper columns: one running column per delayed expr, plus
+    // row_number and per-aggregate whole-frame totals when any end
+    // EXTENDS (k > 0)
+    val runA = delayed.map { case (_, (a, ae, _, _)) =>
+      Alias(WindowExpression(freshAe(ae), frame(UnboundedPreceding, CurrentRow)),
+        s"__graft_dr_${a.name}")()
+    }
+    val rnA =
+      if (!needTotals) None
+      else Some(Alias(WindowExpression(RowNumber(),
+        frame(UnboundedPreceding, CurrentRow)), "__graft_dr_rn")())
+    val cntA =
+      if (!needTotals) None
+      else Some(Alias(WindowExpression(
+        AggregateExpression(Count(Seq(Literal(1))), Complete, isDistinct = false),
+        frame(UnboundedPreceding, UnboundedFollowing)), "__graft_dr_n")())
+    val totA = delayed.map { case (_, (a, ae, k, _)) =>
+      if (k <= 0) None
+      else Some(Alias(WindowExpression(freshAe(ae),
+        frame(UnboundedPreceding, UnboundedFollowing)), s"__graft_dt_${a.name}")())
+    }
+    val totals = cntA.toSeq ++ totA.flatten
+    val helper =
+      if (!keyed) window(runA ++ rnA.toSeq ++ totals, base)
+      else window(runA ++ rnA.toSeq, if (totals.isEmpty) base else window(totals, base))
+    // shift window over the helper outputs
+    val shiftA = delayed.zip(runA).map { case ((_, (a, _, k, fn)), ra) =>
+      val shifted: Expression =
+        if (k < 0) Lag(ra.toAttribute, Literal(-k), emptyFrameLiteral(fn), false)
+        // the default never surfaces (the If picks the whole-frame
+        // value past the end) but the empty-frame literal keeps the
+        // STATIC nullability identical to the built-in's (count stays
+        // non-nullable)
+        else Lead(ra.toAttribute, Literal(k), emptyFrameLiteral(fn), false)
+      Alias(WindowExpression(shifted,
+        frame(UnaryMinus(Literal(math.abs(k))), Literal(math.abs(k)))),
+        s"__graft_ds_${a.name}")()
+    }
+    val shifted = window(shiftA, helper)
+    val restored: Seq[NamedExpression] = wexprs.map { e =>
+      delayed.indexWhere(_._1 eq e) match {
+        case -1 => e.toAttribute
+        case i =>
+          val (a, _, k, _) = delayed(i)._2
+          val value: Expression =
+            if (k < 0) shiftA(i).toAttribute
+            else org.apache.spark.sql.catalyst.expressions.If(
+              org.apache.spark.sql.catalyst.expressions.GreaterThan(
+                org.apache.spark.sql.catalyst.expressions.Add(
+                  Cast(rnA.get.toAttribute, LongType), Literal(k.toLong)),
+                cntA.get.toAttribute),
+              totA(i).get.toAttribute, shiftA(i).toAttribute)
           Alias(value, a.name)(exprId = a.exprId, qualifier = a.qualifier,
             explicitMetadata = Some(a.metadata))
-        case AsShift(a, sc) =>
-          Alias(sc.attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsLeadNN(a, _, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsRunAgg(a, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsMovAgg(a, _, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsRangeMov(a, _, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsFrameAgg(a, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsNth(a, _, _, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsPct(a, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
-        case AsMode(a, _, _, attr) =>
-          Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata))
       }
-      Project(projected, node)
+    }
+    Project(child.output ++ restored, shifted)
   }
 
-  /** The skew tier's rewrite, two disjoint shapes:
-    *
-    *  1. a PARTITIONED `Window` whose expressions are ALL stitchable —
-    *     rank modes (row_number/rank/dense_rank: the per-key position
-    *     arithmetic that telescopes across a hot key's range
-    *     sub-split), plain literal-offset lead/lag, running aggregates
-    *     (UNBOUNDED PRECEDING .. CURRENT ROW over the ordered
-    *     allowlist: per-key prefix buffers stitch the same way),
-    *     and/or bounded-ROWS moving aggregates (key-gated frame rings
-    *     with key-matched boundary rows) — becomes
-    *     [[PartitionedRankNode]] / [[PartitionedShiftNode]] /
-    *     [[PartitionedRunningAggNode]] / [[PartitionedMovingAggNode]],
-    *     stacked on ONE composite range exchange;
-    *  2. a PARTITIONED `Window` whose expressions are ALL per-key
-    *     WHOLE-FRAME aggregates (`agg(e) OVER (PARTITION BY k)` — the
-    *     ratio-to-group-total shape) — becomes a map-side-combined
-    *     `Aggregate` on the keys null-safe-equi-JOINED back to the
-    *     child (see [[rewriteSkewFrameAgg]]): no new physical node at
-    *     all, and the one per-key window shape AQE can then actually
-    *     fix — a skewed sort-merge join splits, the one-row-per-key
-    *     aggregate side replicates, or broadcasts outright when the
-    *     key count is small, while WindowExec's hash exchange funnels
-    *     the whole hot key through one task no matter what.
-    *
-    * A window mixing the two shapes (same partition AND order spec,
-    * whole-frame next to running members in one node) keeps WindowExec
-    * — rare, and correctly handled there. */
-  private[graft] def rewriteSkew(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    // per-key delayed/extended running windows (r14): the same
-    // composition as the global tier — lag/lead of a generated per-key
-    // running column, with per-key row_number + whole-frame totals
-    // (via the window-to-join shape) for the extended end — stacked
-    // windows each routed through the standard skew machinery
-    case Window(wexprs, partSpec, orderSpec, child, hint)
-        if wexprs.nonEmpty && partSpec.nonEmpty &&
-          partSpec.forall(_.deterministic) && planDeterministic(child) &&
-          orderSpec.nonEmpty && orderSpec.forall(_.deterministic) &&
-          wexprs.exists(e => delayedRunAggOf(e).isDefined) &&
-          wexprs.forall(e => delayedRunAggOf(e).isDefined ||
-            suffixRunningOf(e).isDefined || classifySkew(e).isDefined) =>
-      val delayed = wexprs.flatMap(e => delayedRunAggOf(e).map(e -> _))
-      val rest = wexprs.filterNot(e => delayedRunAggOf(e).isDefined)
-      val base: LogicalPlan =
-        if (rest.isEmpty) child
-        else rewriteSkew(Window(rest, partSpec, orderSpec, child, hint))
-      def freshAe(ae: AggregateExpression): AggregateExpression =
-        ae.copy(resultId = NamedExpression.newExprId)
-      val needTotals = delayed.exists(_._2._3 > 0)
-      // per-key totals ride their OWN whole-frame node (the
-      // window-to-join shape); rank + running stack in shape 1
-      val cntA =
-        if (!needTotals) None
-        else Some(Alias(WindowExpression(
-          AggregateExpression(Count(Seq(Literal(1))), Complete,
-            isDistinct = false),
-          WindowSpecDefinition(partSpec, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding,
-              UnboundedFollowing))), "__graft_dr_n")())
-      val totA = delayed.map { case (_, (a, ae, k, _)) =>
-        if (k <= 0) None
-        else Some(Alias(WindowExpression(freshAe(ae),
-          WindowSpecDefinition(partSpec, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding,
-              UnboundedFollowing))), s"__graft_dt_${a.name}")())
-      }
-      val withTotals: LogicalPlan =
-        if (!needTotals) base
-        else rewriteSkew(Window(cntA.toSeq ++ totA.flatten, partSpec,
-          orderSpec, base))
-      val runA = delayed.map { case (_, (a, ae, _, _)) =>
-        Alias(WindowExpression(freshAe(ae),
-          WindowSpecDefinition(partSpec, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))),
-          s"__graft_dr_${a.name}")()
-      }
-      val rnA =
-        if (!needTotals) None
-        else Some(Alias(WindowExpression(RowNumber(),
-          WindowSpecDefinition(partSpec, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))),
-          "__graft_dr_rn")())
-      val helper = rewriteSkew(Window(runA ++ rnA.toSeq, partSpec,
-        orderSpec, withTotals))
-      val shiftA = delayed.zip(runA).map { case ((_, (a, _, k, fn)), ra) =>
-        val shifted: Expression =
-          if (k < 0) Lag(ra.toAttribute, Literal(-k), emptyFrameLiteral(fn),
-            false)
-          // the default never surfaces (the If picks the whole-frame
-          // value past the end) but the empty-frame literal keeps the
-          // STATIC nullability identical to the built-in's (count stays
-          // non-nullable)
-          else Lead(ra.toAttribute, Literal(k), emptyFrameLiteral(fn), false)
-        Alias(WindowExpression(shifted,
-          WindowSpecDefinition(partSpec, orderSpec,
-            SpecifiedWindowFrame(RowFrame, UnaryMinus(Literal(math.abs(k))),
-              Literal(math.abs(k))))), s"__graft_ds_${a.name}")()
-      }
-      val shifted = rewriteSkew(Window(shiftA, partSpec, orderSpec, helper))
-      val restored: Seq[NamedExpression] = wexprs.map { e =>
-        delayed.indexWhere(_._1 eq e) match {
-          case -1 => e.toAttribute
-          case i =>
-            val (a, _, k, _) = delayed(i)._2
-            val value: Expression =
-              if (k < 0) shiftA(i).toAttribute
-              else org.apache.spark.sql.catalyst.expressions.If(
-                org.apache.spark.sql.catalyst.expressions.GreaterThan(
-                  org.apache.spark.sql.catalyst.expressions.Add(
-                    Cast(rnA.get.toAttribute, LongType), Literal(k.toLong)),
-                  cntA.get.toAttribute),
-                totA(i).get.toAttribute, shiftA(i).toAttribute)
-            Alias(value, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-              explicitMetadata = Some(a.metadata))
-        }
-      }
-      Project(child.output ++ restored, shifted)
-    // per-key suffix-running windows (r14): the same mirror as the
-    // global tier — reversed (k, v) order, mirrored frame, First<->Last
-    // swap — stacked over the node's other members, each half routed
-    // through the standard skew machinery below
-    case Window(wexprs, partSpec, orderSpec, child, hint)
-        if wexprs.nonEmpty && partSpec.nonEmpty &&
-          partSpec.forall(_.deterministic) && planDeterministic(child) &&
-          orderSpec.nonEmpty && orderSpec.forall(_.deterministic) &&
-          wexprs.exists(e => suffixRunningOf(e).isDefined) &&
-          wexprs.forall(e => suffixRunningOf(e).isDefined ||
-            classifySkew(e).isDefined) =>
-      val (suffix, rest) = wexprs.partition(e => suffixRunningOf(e).isDefined)
-      val base: LogicalPlan =
-        if (rest.isEmpty) child
-        else rewriteSkew(Window(rest, partSpec, orderSpec, child, hint))
-      val mirrored = Window(suffix.map(mirrorSuffix), partSpec,
-        orderSpec.map(reverseOrder), base, hint)
-      Project(child.output ++ wexprs.map(_.toAttribute), rewriteSkew(mirrored))
-    case Window(wexprs, partSpec, _, child, _)
-        if wexprs.nonEmpty && partSpec.nonEmpty &&
-          partSpec.forall(_.deterministic) &&
-          // the per-key frame-agg/mode rewrite is a JOIN-BACK that
-          // re-executes the child plan on its aggregate branch, so the
-          // child PLAN must be deterministic — see the global mode
-          // admission note (ADVICE r14 #1)
-          planDeterministic(child) &&
-          wexprs.forall(e => skewFrameAggOf(e).isDefined ||
-            skewModeOf(e).isDefined) =>
-      rewriteSkewFrameAgg(wexprs, partSpec, child)
-    case Window(wexprs, partSpec, orderSpec, child, _)
-        if wexprs.nonEmpty && partSpec.nonEmpty &&
-          partSpec.forall(_.deterministic) && planDeterministic(child) &&
-          orderSpec.nonEmpty && orderSpec.forall(_.deterministic) &&
-          wexprs.forall(e => classifySkew(e).isDefined) =>
-      // classify each expression ONCE into the ADT (ADVICE r13: the
-      // previous per-class exclusion chains re-invoked every earlier
-      // matcher per expression — O(k²) matcher calls, each allocating
-      // fresh exprIds along the way); the guard above costs one more
-      // chain pass per expression, nothing downstream re-matches
-      val skClassified: Seq[(NamedExpression, SkewClass)] =
-        wexprs.map(e => e -> classifySkew(e).get)
-      val rankClassified = skClassified.collect {
-        case (e, SkRank(a, m)) => e -> (a, m)
-      }
-      val shiftClassified = skClassified.collect {
-        case (e, SkShift(a, sc2, sc3, sc4, sc5, sc6)) =>
-          e -> (a, sc2, sc3, sc4, sc5, sc6)
-      }
-      val leadNNClassified = skClassified.collect {
-        case (e, SkLeadNN(a, input, kk, default, lkAttr)) =>
-          e -> (a, input, kk, default, lkAttr)
-      }
-      val runClassified = skClassified.collect {
-        case (e, SkRun(a, fn, rows, attr)) => e -> (a, fn, rows, attr)
-      }
-      val movClassified = skClassified.collect {
-        case (e, SkMov(a, fn, lo, hi, attr)) => e -> (a, fn, lo, hi, attr)
-      }
-      val rangeMovClassified = skClassified.collect {
-        case (e, SkRangeMov(a, fn, lo, hi, attr)) => e -> (a, fn, lo, hi, attr)
-      }
-      val nthClassified = skClassified.collect {
-        case (e, SkNth(a, input, k, ign, kind, attr)) =>
-          e -> (a, input, k, ign, kind, attr)
-      }
-      val rankCols = rankClassified.map { case (_, (a, m)) =>
-        RankCol(AttributeReference(s"__graft_${a.name}", m.dataType,
-          nullable = false)(), m)
-      }
-      val withRanks: LogicalPlan =
-        if (rankCols.isEmpty) child
-        else PartitionedRankNode(partSpec, orderSpec, rankCols, child)
-      val withShifts: LogicalPlan =
-        if (shiftClassified.isEmpty) withRanks
-        else PartitionedShiftNode(partSpec, orderSpec,
-          shiftClassified.map(_._2._6), shiftClassified.map(_._2._2),
-          shiftClassified.map(_._2._3), shiftClassified.map(_._2._4),
-          shiftClassified.map(_._2._5), withRanks)
-      // one lookahead node per expression (single-column by design —
-      // the GlobalLookahead deque-bound argument, per key)
-      val withLookaheads: LogicalPlan = leadNNClassified.foldLeft(withShifts) {
-        case (p, (_, (_, input, kk, default, lkAttr))) =>
-          PartitionedLookaheadNode(partSpec, orderSpec, lkAttr, input, kk,
-            default, p)
-      }
-      val withRuns: LogicalPlan =
-        if (runClassified.isEmpty) withLookaheads
-        else PartitionedRunningAggNode(partSpec, orderSpec,
-          runClassified.map(_._2._4), runClassified.map(_._2._2),
-          runClassified.map(_._2._3), withLookaheads)
-      val withMovs: LogicalPlan =
-        if (movClassified.isEmpty) withRuns
-        else PartitionedMovingAggNode(partSpec, orderSpec,
-          movClassified.map(_._2._5), movClassified.map(_._2._2),
-          movClassified.map(_._2._3), movClassified.map(_._2._4), withRuns)
-      val withRangeMovs: LogicalPlan =
-        if (rangeMovClassified.isEmpty) withMovs
-        else PartitionedRangeMovingAggNode(partSpec, orderSpec,
-          rangeMovClassified.map(_._2._5), rangeMovClassified.map(_._2._2),
-          rangeMovClassified.map(_._2._3), rangeMovClassified.map(_._2._4),
-          orderSpec.head.direction == org.apache.spark.sql.catalyst.expressions.Descending,
-          withMovs)
-      val node: LogicalPlan =
-        if (nthClassified.isEmpty) withRangeMovs
-        else PartitionedNthValueNode(partSpec, orderSpec,
-          nthClassified.map(_._2._6), nthClassified.map(_._2._2),
-          nthClassified.map(_._2._3), nthClassified.map(_._2._4),
-          nthClassified.map(_._2._5), withRangeMovs)
-      // replacement aliases keyed by SOURCE expression so the Project
-      // preserves the original per-expression column ORDER even when
-      // ranks and running aggregates interleave in wexprs (r13
-      // self-review: grouping by class would silently reorder the
-      // user-visible schema when the Window is the plan root)
-      val rankAliasByExpr: Map[NamedExpression, NamedExpression] =
-        rankClassified.zip(rankCols).map { case ((e, (a, m)), rc) =>
-          val value: Expression = m match {
-            // percent_rank / cume_dist are DOUBLE on both sides — as-is
-            case RankMode.PercentRank | RankMode.CumeDist => rc.attr
-            // the integral built-ins are INT; the node emits LONG —
-            // cast back so the user-visible schema is unchanged
-            case _ => Cast(rc.attr, IntegerType)
-          }
-          (e, Alias(value, a.name)(exprId = a.exprId,
-            qualifier = a.qualifier, explicitMetadata = Some(a.metadata)))
-        }.toMap
-      val shiftAliasByExpr: Map[NamedExpression, NamedExpression] =
-        shiftClassified.map { case (e, (a, _, _, _, _, attr)) =>
-          (e, Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata)))
-        }.toMap
-      val leadNNAliasByExpr: Map[NamedExpression, NamedExpression] =
-        leadNNClassified.map { case (e, (a, _, _, _, lkAttr)) =>
-          (e, Alias(lkAttr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata)))
-        }.toMap
-      val runAliasByExpr: Map[NamedExpression, NamedExpression] =
-        runClassified.map { case (e, (a, _, _, attr)) =>
-          (e, Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata)))
-        }.toMap
-      val movAliasByExpr: Map[NamedExpression, NamedExpression] =
-        movClassified.map { case (e, (a, _, _, _, attr)) =>
-          (e, Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata)))
-        }.toMap
-      val rangeMovAliasByExpr: Map[NamedExpression, NamedExpression] =
-        rangeMovClassified.map { case (e, (a, _, _, _, attr)) =>
-          (e, Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata)))
-        }.toMap
-      val nthAliasByExpr: Map[NamedExpression, NamedExpression] =
-        nthClassified.map { case (e, (a, _, _, _, _, attr)) =>
-          (e, Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
-            explicitMetadata = Some(a.metadata)))
-        }.toMap
-      Project(child.output ++ wexprs.map(e =>
-        rankAliasByExpr.getOrElse(e,
-          shiftAliasByExpr.getOrElse(e,
-            leadNNAliasByExpr.getOrElse(e,
-              runAliasByExpr.getOrElse(e,
-                movAliasByExpr.getOrElse(e,
-                  rangeMovAliasByExpr.getOrElse(e, nthAliasByExpr(e)))))))),
-        node)
-  }
-
-  /** Shape 2 of [[rewriteSkew]]: per-key whole-frame aggregates become
+  /** Shape 3 of [[rewriteTier]]: per-key whole-frame aggregates become
     * `Aggregate` + null-safe equi-`Join` — window-to-join, the classic
     * relational unnesting of `agg(e) OVER (PARTITION BY k)`.
     *
@@ -1464,10 +1038,10 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
                                   partSpec: Seq[Expression],
                                   child: LogicalPlan): LogicalPlan = {
     val classified: Seq[(Alias, AggregateFunction)] =
-      wexprs.flatMap(e => skewFrameAggOf(e))
-    val modeClassified: Seq[(NamedExpression, (Alias, Expression, Boolean, AttributeReference))] =
+      wexprs.flatMap(e => frameAggOf(e, sketch = false)).map(f => (f.a, f.fn))
+    val modeClassified: Seq[(NamedExpression, AsMode)] =
       wexprs.flatMap { e =>
-        if (skewFrameAggOf(e).isDefined) None else skewModeOf(e).map(e -> _)
+        if (frameAggOf(e, sketch = false).isDefined) None else modeAggOf(e).map(e -> _)
       }
     // Stacked whole-frame windows over DIFFERENT keys (share-of-region
     // next to share-of-nation) rewrite bottom-up, so the outer window's
@@ -1480,7 +1054,7 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     // never a re-derivation of the stack below it.
     val needed = AttributeSet(
       partSpec.flatMap(_.references) ++ classified.flatMap(_._2.references) ++
-        modeClassified.flatMap(_._2._2.references))
+        modeClassified.flatMap(_._2.input.references))
     @annotation.tailrec
     def peel(p: LogicalPlan): LogicalPlan =
       keyCompleteJoinBase(p) match {
@@ -1518,7 +1092,7 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     // vanish. Exactly one right row per key, so left multiplicity is
     // preserved either way.
     val withModes: LogicalPlan = modeClassified.foldLeft(withPlain) {
-      case (cur, (_, (_, input, rev, attr))) =>
+      case (cur, (_, AsMode(_, input, rev, attr))) =>
         val (rel, keyAttrs) = skewModeRel(aggBase, partSpec, input, rev, attr)
         val cond: Expression = partSpec.zip(keyAttrs)
           .map { case (l, ka) => EqualNullSafe(l, ka) }
@@ -1527,13 +1101,13 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
           Some(cond), JoinHint.NONE)
     }
     val plainAliasByExpr: Map[NamedExpression, NamedExpression] =
-      wexprs.flatMap(e => skewFrameAggOf(e).map(e -> _)).zip(aggAliases).map {
-        case ((e, (a, _)), aa) =>
+      wexprs.flatMap(e => frameAggOf(e, sketch = false).map(f => e -> f.a))
+        .zip(aggAliases).map { case ((e, a), aa) =>
           (e, Alias(aa.toAttribute, a.name)(exprId = a.exprId,
             qualifier = a.qualifier, explicitMetadata = Some(a.metadata)))
       }.toMap
     val modeAliasByExpr: Map[NamedExpression, NamedExpression] =
-      modeClassified.map { case (e, (a, _, _, attr)) =>
+      modeClassified.map { case (e, AsMode(a, _, _, attr)) =>
         (e, Alias(attr, a.name)(exprId = a.exprId, qualifier = a.qualifier,
           explicitMetadata = Some(a.metadata)))
       }.toMap
@@ -1627,112 +1201,8 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** (alias, unwrapped function) iff `ne` is a PARTITIONED whole-frame
-    * aggregate window — `agg(e) OVER (PARTITION BY k)` (the analyzer
-    * normalizes the frame to UNBOUNDED .. UNBOUNDED; an explicit
-    * ORDER BY with that frame is the same whole partition). Admission
-    * is [[allowedAgg]] (order-insensitive only — no First/Last, no
-    * DISTINCT, no FILTER). */
-  private def skewFrameAggOf(ne: NamedExpression): Option[(Alias, AggregateFunction)] = ne match {
-    case a @ Alias(WindowExpression(
-        AggregateExpression(fn0, Complete, false, None, _),
-        WindowSpecDefinition(ps, _,
-          SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing))), _)
-        if ps.nonEmpty =>
-      unwrapAgg(fn0).collect {
-        case fn if allowedAgg(fn) && fn.deterministic => (a, fn)
-      }
-    case _ => None
-  }
-
-  /** (alias, function, lo, hi, generated attr) iff `ne` is a
-    * PARTITIONED bounded-ROWS moving-frame window over the ordered
-    * allowlist with literal offsets within the boundary-state cap —
-    * the skew tier's [[PartitionedMovingAggNode]] (late r13).
-    * UNBOUNDED PRECEDING frames are the running member's; RANGE moving
-    * frames keep WindowExec in this tier. */
-  private def skewMovAggOf(ne: NamedExpression): Option[(Alias, DeclarativeAggregate, Int, Int, AttributeReference)] = {
-    def bound(e: Expression): Option[Int] = e match {
-      case CurrentRow => Some(0)
-      case Literal(v: Int, IntegerType) => Some(v)
-      case Literal(v: Long, LongType) if v.isValidInt => Some(v.toInt)
-      case UnaryMinus(Literal(v: Int, IntegerType), _) => Some(-v)
-      case UnaryMinus(Literal(v: Long, LongType), _) if v.isValidInt => Some(-v.toInt)
-      case _ => None
-    }
-    ne match {
-      case a @ Alias(we @ WindowExpression(
-          AggregateExpression(fn0, Complete, false, None, _),
-          WindowSpecDefinition(ps, _,
-            SpecifiedWindowFrame(RowFrame, lo0, hi0))), _) if ps.nonEmpty =>
-        for {
-          lo <- bound(lo0)
-          hi <- bound(hi0)
-          if lo <= hi && math.max(math.abs(lo), math.abs(hi)) <= maxShift
-          if !(lo0 == UnboundedPreceding) // the running member's shape
-          fn <- unwrapAgg(fn0)
-          if allowedOrderedAgg(fn) && fn.deterministic
-        } yield (a, fn, lo, hi,
-          AttributeReference(s"__graft_${a.name}", fn.dataType,
-            nullable = we.nullable)())
-      // per-key moving-lower-bound nth_value: the same rebuffer-only
-      // admission as the global matcher (NthValue is a
-      // DeclarativeAggregate; the segment-gated frame rebuffer runs
-      // its own expressions in frame order)
-      case a @ Alias(we @ WindowExpression(
-          nv @ NthValue(input, Literal(n: Int, IntegerType), _),
-          WindowSpecDefinition(ps, _,
-            SpecifiedWindowFrame(RowFrame, lo0, hi0))), _) if ps.nonEmpty =>
-        for {
-          lo <- bound(lo0)
-          hi <- bound(hi0)
-          if lo <= hi && math.max(math.abs(lo), math.abs(hi)) <= maxShift
-          if !(lo0 == UnboundedPreceding)
-          if n > 0 && input.deterministic
-        } yield (a, nv, lo, hi,
-          AttributeReference(s"__graft_${a.name}", nv.dataType,
-            nullable = we.nullable)())
-      case _ => None
-    }
-  }
-
-  /** (alias, function, lo, hi, generated attr) iff `ne` is a
-    * PARTITIONED RANGE-moving window on a single ascending
-    * NULLS-FIRST integral order key with integral-literal value
-    * offsets within the cap — the skew tier's dense-domain member
-    * ([[PartitionedRangeMovingAggNode]], late r13): "the last 7 days'
-    * total, per user". The same admission as the global
-    * [[rangeMovAggOf]] (order-insensitive [[allowedAgg]] only — per-
-    * value buffers; bounded both sides; day-pure interval bounds on
-    * DATE keys; micros-exact interval bounds on TIMESTAMP keys since
-    * r14), with a partition spec present. */
-  private def skewRangeMovAggOf(ne: NamedExpression): Option[(Alias, DeclarativeAggregate, Long, Long, AttributeReference)] = ne match {
-    case a @ Alias(we @ WindowExpression(
-        AggregateExpression(fn0, Complete, false, None, _),
-        WindowSpecDefinition(ps,
-          // any direction / null placement — the same late-r13
-          // widening as the global matcher
-          Seq(SortOrder(key, _, _, _)),
-          SpecifiedWindowFrame(RangeFrame, lo0, hi0))), _)
-        if ps.nonEmpty &&
-          lo0 != UnboundedPreceding && hi0 != UnboundedFollowing &&
-          GlobalRangeMovingAgg.rangeKey(key.dataType) &&
-          key.deterministic =>
-      for {
-        lo <- rangeValueBound(lo0, key.dataType)
-        hi <- rangeValueBound(hi0, key.dataType)
-        if lo <= hi &&
-          math.max(math.abs(lo), math.abs(hi)) <= rangeExtentCap(key.dataType)
-        fn <- unwrapAgg(fn0)
-        if allowedAgg(fn) && fn.deterministic
-      } yield (a, fn, lo, hi,
-        AttributeReference(s"__graft_${a.name}", fn.dataType,
-          nullable = we.nullable)())
-    case _ => None
-  }
-
-  /** RANGE value bound → Long in the KEY's long domain — shared by the
-    * global and skew dense-domain matchers: CurrentRow is 0; otherwise
+  /** RANGE value bound → Long in the KEY's long domain, for
+    * [[rangeMovAggOf]]: CurrentRow is 0; otherwise
     * a foldable integral expression (the parser's `k PRECEDING` arrives
     * as UnaryMinus(Literal(k)), the DataFrame API as a signed literal,
     * and the analyzer may wrap either in a cast to the key type).
@@ -1752,7 +1222,7 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
   private def rangeValueBound(e: Expression,
                               keyType: org.apache.spark.sql.types.DataType): Option[Long] = {
     val usPerDay = 86400000000L
-    val timeKey = graft.plans.GlobalRangeMovingAgg.timeKey(keyType)
+    val timeKey = PartitionedRangeMovingAgg.timeKey(keyType)
     // DECIMAL keys (r14): the key domain is the unscaled 10^-s lattice,
     // so ANY numeric foldable bound folds through BigDecimal to the
     // KEY's scale — exactly (setScale with no rounding) or not at all
@@ -1814,195 +1284,20 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     * buffers are pigeonhole-bounded by the extent there), and
     * `maxShiftOffset` DAYS of micros on timestamp axes (where the
     * bound is the distinct timestamps inside the extent — see
-    * [[graft.plans.GlobalRangeMovingAgg.timeKey]]). */
+    * [[PartitionedRangeMovingAgg.timeKey]]). */
   private def rangeExtentCap(keyType: org.apache.spark.sql.types.DataType): Long =
-    if (graft.plans.GlobalRangeMovingAgg.timeKey(keyType))
+    if (PartitionedRangeMovingAgg.timeKey(keyType))
       maxShift.toLong * 86400000000L
     else maxShift.toLong
 
-  /** (alias, mode) iff `ne` is a PARTITIONED window over the rank
-    * family — since late r13 the FULL family: the total-dependent
-    * modes (percent_rank/cume_dist/ntile) stitch each straddling key's
-    * total on the driver and count interior keys with the zipped
-    * key/group leads (see [[PartitionedRankNode]]). */
-  /** One-pass skew-tier classification (ADVICE r13): each window
-    * expression runs the matcher chain at most ONCE, in the same
-    * priority order the exclusion chains encoded — the result carries
-    * every generated attribute, so no matcher re-fires (and no stray
-    * exprIds are allocated) after classification. */
-  private sealed trait SkewClass
-  private case class SkRank(a: Alias, m: RankMode) extends SkewClass
-  private case class SkShift(a: Alias, input: Expression, off: Int,
-                             default: Expression, ignoreNulls: Boolean,
-                             attr: AttributeReference) extends SkewClass
-  private case class SkLeadNN(a: Alias, input: Expression, k: Int,
-                              default: Expression,
-                              attr: AttributeReference) extends SkewClass
-  private case class SkRun(a: Alias, fn: DeclarativeAggregate, rows: Boolean,
-                           attr: AttributeReference) extends SkewClass
-  private case class SkMov(a: Alias, fn: DeclarativeAggregate, lo: Int,
-                           hi: Int, attr: AttributeReference) extends SkewClass
-  private case class SkRangeMov(a: Alias, fn: DeclarativeAggregate, lo: Long,
-                                hi: Long, attr: AttributeReference) extends SkewClass
-  private case class SkNth(a: Alias, input: Expression, k: Int,
-                           ignoreNulls: Boolean, kind: Int,
-                           attr: AttributeReference) extends SkewClass
-
-  private def classifySkew(ne: NamedExpression): Option[SkewClass] =
-    skewRankOf(ne).map { case (a, m) => SkRank(a, m) }
-      .orElse(skewShiftOf(ne).map { case (a, i, o, d, g, at) =>
-        SkShift(a, i, o, d, g, at) })
-      .orElse(skewLeadNNOf(ne).map { case (a, i, k, d, at) =>
-        SkLeadNN(a, i, k, d, at) })
-      .orElse(skewRunAggOf(ne).map { case (a, f, r, at) => SkRun(a, f, r, at) })
-      .orElse(skewMovAggOf(ne).map { case (a, f, lo, hi, at) =>
-        SkMov(a, f, lo, hi, at) })
-      .orElse(skewRangeMovAggOf(ne).map { case (a, f, lo, hi, at) =>
-        SkRangeMov(a, f, lo, hi, at) })
-      .orElse(skewNthOf(ne).map { case (a, i, k, g, kd, at) =>
-        SkNth(a, i, k, g, kd, at) })
-
-  private def skewRankOf(ne: NamedExpression): Option[(Alias, RankMode)] = ne match {
-    case a @ Alias(WindowExpression(fn, WindowSpecDefinition(ps, _, _)), _)
-        if ps.nonEmpty =>
-      modeOf(fn).map(m => (a, m))
-    case _ => None
-  }
-
-  /** (alias, input, signed offset, default, ignoreNulls, generated
-    * attr) iff `ne` is a PARTITIONED lead/lag with a literal offset
-    * within the cap — the skew tier's [[PartitionedShiftNode]] (late
-    * r13). `lag IGNORE NULLS` is admitted (the per-SEGMENT non-null
-    * ring, seeded key-matched — the ring reset at the key boundary);
-    * `lead IGNORE NULLS` keeps WindowExec in this tier (the zipped
-    * per-key lookahead, when a query needs it). */
-  private def skewShiftOf(ne: NamedExpression): Option[(Alias, Expression, Int, Expression, Boolean, AttributeReference)] = {
-    def spec(fn: Expression): Option[(Expression, Int, Expression, Boolean)] = fn match {
-      case l: Lag => l.inputOffset match {
-        case Literal(k: Int, IntegerType) if !l.ignoreNulls || k > 0 =>
-          Some((l.input, -k, l.default, l.ignoreNulls))
-        case _ => None
-      }
-      case l: Lead if !l.ignoreNulls => l.offset match {
-        case Literal(k: Int, IntegerType) => Some((l.input, k, l.default, false))
-        case _ => None
-      }
-      case _ => None
-    }
-    ne match {
-      case a @ Alias(we @ WindowExpression(fn,
-          WindowSpecDefinition(ps, _, _)), _) if ps.nonEmpty =>
-        spec(fn).collect {
-          case (input, off, default, ignoreNulls)
-              if math.abs(off) <= maxShift && input.deterministic &&
-                default.deterministic &&
-                (default.foldable && default.eval() == null ||
-                  org.apache.spark.sql.types.DataType.equalsStructurally(
-                    default.dataType, input.dataType, ignoreNullability = true)) =>
-            (a, input, off, default, ignoreNulls,
-              AttributeReference(s"__graft_${a.name}", input.dataType,
-                nullable = we.nullable)())
-        }
-      case _ => None
-    }
-  }
-
-  /** (alias, input, k, default, generated attr) iff `ne` is a
-    * PARTITIONED `lead(e, k) IGNORE NULLS` (or its `lag(e, -k)`
-    * spelling) with a positive literal offset within the cap — the
-    * skew tier's [[PartitionedLookaheadNode]] (late r13, the per-key
-    * offset family's last retired refusal). Same admission as the
-    * global [[leadNNOf]], with a partition spec present. */
-  private def skewLeadNNOf(ne: NamedExpression): Option[(Alias, Expression, Int, Expression, AttributeReference)] = {
-    def spec(fn: Expression): Option[(Expression, Int, Expression)] = fn match {
-      case l: Lead if l.ignoreNulls => l.offset match {
-        case Literal(kk: Int, IntegerType) if kk > 0 => Some((l.input, kk, l.default))
-        case _ => None
-      }
-      case l: Lag if l.ignoreNulls => l.inputOffset match {
-        case Literal(kk: Int, IntegerType) if kk < 0 => Some((l.input, -kk, l.default))
-        case _ => None
-      }
-      case _ => None
-    }
-    ne match {
-      case a @ Alias(we @ WindowExpression(fn,
-          WindowSpecDefinition(ps, _, _)), _) if ps.nonEmpty =>
-        spec(fn).collect {
-          case (input, kk, default)
-              if kk <= maxShift && input.deterministic &&
-                default.deterministic &&
-                (default.foldable && default.eval() == null ||
-                  org.apache.spark.sql.types.DataType.equalsStructurally(
-                    default.dataType, input.dataType, ignoreNullability = true)) =>
-            (a, input, kk, default,
-              AttributeReference(s"__graft_${a.name}", input.dataType,
-                nullable = we.nullable)())
-        }
-      case _ => None
-    }
-  }
-
-  /** (alias, function, isRowsFrame, generated attr) iff `ne` is a
-    * PARTITIONED running-aggregate window over the ordered allowlist
-    * (same admission as [[runAggOf]] — the per-key prefix merge runs
-    * in partition order, which is global order under the composite
-    * exchange, so First/Last stay exact). */
-  private def skewRunAggOf(ne: NamedExpression): Option[(Alias, DeclarativeAggregate, Boolean, AttributeReference)] = ne match {
-    case a @ Alias(we @ WindowExpression(
-        AggregateExpression(fn0, Complete, false, None, _),
-        WindowSpecDefinition(ps, _,
-          SpecifiedWindowFrame(ft, UnboundedPreceding, CurrentRow))), _)
-        if ps.nonEmpty =>
-      unwrapAgg(fn0).collect {
-        case fn if allowedOrderedAgg(fn) && fn.deterministic =>
-          (a, fn, ft == RowFrame,
-            AttributeReference(s"__graft_${a.name}", fn.dataType,
-              nullable = we.nullable)())
-      }
-    case _ => None
-  }
-
-  /** (alias, input, k, ignoreNulls, frame kind, generated attr) iff
-    * `ne` is a PARTITIONED start-anchored `nth_value` — the skew
-    * tier's [[PartitionedNthValueNode]] (late r13, the tier's last
-    * member). Same admission as the global [[nthOf]] (running ROWS /
-    * running RANGE / whole frame; positive literal k within the cap),
-    * with a partition spec present. */
-  private def skewNthOf(ne: NamedExpression): Option[(Alias, Expression, Int, Boolean, Int, AttributeReference)] = ne match {
-    case a @ Alias(we @ WindowExpression(
-        NthValue(input, Literal(k: Int, IntegerType), ignoreNulls),
-        WindowSpecDefinition(ps, _, SpecifiedWindowFrame(ft, lo, hi))), _)
-        if ps.nonEmpty && lo == UnboundedPreceding && k > 0 &&
-          k <= maxShift && input.deterministic =>
-      val kind = (ft, hi) match {
-        case (_, UnboundedFollowing) => Some(2)
-        case (RowFrame, CurrentRow) => Some(0)
-        case (_, CurrentRow) => Some(1)
-        case _ => None
-      }
-      kind.map(fk => (a, input, k, ignoreNulls, fk,
-        AttributeReference(s"__graft_${a.name}", input.dataType,
-          nullable = we.nullable)()))
-    case _ => None
-  }
-
-  /** [[force]]'s sibling for the skew tier: apply BOTH the global
-    * rewrite and the partitioned-rank rewrite to one DataFrame,
-    * unconditionally and without session-conf side effects. Separate
-    * from [[force]] so existing force() call sites keep their plans
-    * (the skew route costs a range exchange + count job and must be
-    * chosen, not inherited). */
+  /** [[force]]'s sibling for the keyed tier: apply BOTH the global
+    * rewrite and the keyed rewrite to one DataFrame, unconditionally
+    * and without session-conf side effects. Separate from [[force]] so
+    * existing force() call sites keep their plans (the skew route costs
+    * a range exchange + count job and must be chosen, not inherited). */
   def forceSkew(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    PartitionedRank.ensureStrategy(spark)
-    PartitionedRunningAgg.ensureStrategy(spark)
-    PartitionedShift.ensureStrategy(spark)
-    PartitionedMovingAgg.ensureStrategy(spark)
-    PartitionedRangeMovingAgg.ensureStrategy(spark)
-    PartitionedLookahead.ensureStrategy(spark)
-    PartitionedNthValue.ensureStrategy(spark)
     val globalised = force(df)
+    val spark = df.sparkSession
     GraftSqlBridge.ofRows(spark,
       rewriteSkew(mergeWindowChains(GraftSqlBridge.withCachedData(spark,
         globalised.queryExecution.analyzed))))
@@ -2038,20 +1333,14 @@ object RewriteGlobalRankWindows extends Rule[LogicalPlan] {
     p
   }
 
-  /** Apply the rewrite to ONE DataFrame, unconditionally and without
-    * session-conf side effects — re-analyzes the rewritten plan with
-    * the strategy registered, so the result plans and executes like any
-    * other GlobalRank query. */
+  /** Apply the global rewrite to ONE DataFrame, unconditionally and
+    * without session-conf side effects — re-analyzes the rewritten plan
+    * with the strategies registered, so the result plans and executes
+    * like any other query. */
   def force(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    GlobalRank.ensureStrategy(spark)
-    GlobalShift.ensureStrategy(spark)
-    GlobalLookahead.ensureStrategy(spark)
-    GlobalRunningAgg.ensureStrategy(spark)
-    GlobalMovingAgg.ensureStrategy(spark)
-    GlobalRangeMovingAgg.ensureStrategy(spark)
+    KeyedWindow.ensureStrategies(spark)
     GlobalFrameAgg.ensureStrategy(spark)
-    GlobalNthValue.ensureStrategy(spark)
     GlobalExactPercentile.ensureStrategy(spark)
     // substitute cached subtrees FIRST (r16): the chain merge must see
     // pinned intermediates as InMemoryRelation leaves, or its

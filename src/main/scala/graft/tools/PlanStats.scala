@@ -2,15 +2,32 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
+
+import graft.plans.KeyedWindowExec
 
 /** Plan-budget dump: `runMain graft.tools.PlanStats <sfDir> <query>...`
   * prints, per named SparkEntry query, the counts PlanShapeSpec pins —
   * hash-partitioned shuffles, broadcast-hash / sort-merge / shuffled-hash
-  * joins, cartesian products, nested-loop joins — on the pre-AQE
-  * executedPlan. The empirical source for new plan pins. */
+  * joins, cartesian products, nested-loop joins, and the window
+  * operators (WindowExec, unpartitioned WindowExec, and each keyed
+  * window family as `Family=emptyKey/keyed`) — on the pre-AQE
+  * executedPlan, cached subtrees included. The empirical source for
+  * new plan pins. */
 object PlanStats {
+  /** Every node of `p`, including the plan behind each cached relation
+    * (a pinned subtree runs too — a plain `collect` stops at the
+    * `InMemoryTableScanExec`). */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] =
+    p.collect { case n => n }.flatMap {
+      case s: InMemoryTableScanExec => s +: nodes(s.relation.cachedPlan)
+      case n => Seq(n)
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
@@ -28,34 +45,36 @@ object PlanStats {
       try {
         val p = graft.SparkEntry.queries(n)(spark, sfDir)
           .queryExecution.executedPlan
-        val hashShuffles = p.collect {
-          case e: ShuffleExchangeExec
-            if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
-        }.size
-        val bhj = p.collect { case j: BroadcastHashJoinExec => j }.size
-        val smj = p.collect { case j: SortMergeJoinExec => j }.size
-        val shj = p.collect { case j: ShuffledHashJoinExec => j }.size
-        val cart = p.collect { case j: CartesianProductExec => j }.size
-        val bnl = p.collect { case j: BroadcastNestedLoopJoinExec => j }.size
+        val ns = nodes(p)
+        def count(f: PartialFunction[SparkPlan, Boolean]): Int = ns.count(f.applyOrElse(_, (_: SparkPlan) => false))
+        val hashShuffles = count {
+          case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+        }
+        val bhj = count { case _: BroadcastHashJoinExec => true }
+        val smj = count { case _: SortMergeJoinExec => true }
+        val shj = count { case _: ShuffledHashJoinExec => true }
+        val cart = count { case _: CartesianProductExec => true }
+        val bnl = count { case _: BroadcastNestedLoopJoinExec => true }
         // window-operator exec counts (r15): the empirical source for
         // PlanShapeSpec's retired-whitelist pins
-        val winExec = p.collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec => w }.size
+        val winExec = count { case _: WindowExec => true }
         // unpartitioned (or constant-key) window execs — each one is a
         // single-partition funnel that logs "No Partition Defined" at
         // runtime; the empirical source for the r16 warning-site sweep
-        val winGlobal = p.collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.forall(_.foldable) => w }.size
-        val rank = p.collect { case g: graft.plans.GlobalRankExec => g }.size
-        val frame = p.collect { case g: graft.plans.GlobalFrameAggExec => g }.size
-        val run = p.collect { case g: graft.plans.GlobalRunningAggExec => g }.size
-        val shift = p.collect { case g: graft.plans.GlobalShiftExec => g }.size
-        val mov = p.collect { case g: graft.plans.GlobalMovingAggExec => g }.size
+        val winGlobal = count { case w: WindowExec => w.partitionSpec.forall(_.foldable) }
+        val frame = count { case _: graft.plans.GlobalFrameAggExec => true }
+        // the keyed window tier per family, as EMPTY-key (global
+        // window) / keyed (PARTITION BY) operator counts
+        val keyedWin = ns.collect { case k: KeyedWindowExec => k }
+          .groupBy(_.nodeName.stripPrefix("Partitioned").stripSuffix("Exec"))
+          .toSeq.sortBy(_._1).map { case (family, ks) =>
+            val empty = ks.count(_.partKeys.isEmpty)
+            s"$family=$empty/${ks.size - empty}"
+          }
         println(s"PLANSTATS $n hashShuffles=$hashShuffles bhj=$bhj " +
           s"smj=$smj shj=$shj cartesian=$cart bnl=$bnl " +
-          s"winExec=$winExec winGlobal=$winGlobal rank=$rank frame=$frame run=$run " +
-          s"shift=$shift mov=$mov")
+          s"winExec=$winExec winGlobal=$winGlobal frame=$frame" +
+          keyedWin.map(" " + _).mkString)
       } catch { case t: Throwable => println(s"PLANSTATS $n FAIL: $t") }
     }
     spark.stop()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalFrameAggExec, GlobalRunningAggExec}
+import graft.plans.{GlobalFrameAggExec, PartitionedRunningAggExec}
 import graft.rules.RewriteGlobalRankWindows
 
 /** [[graft.plans.GlobalFrameAgg]] — the whole-frame global aggregate
@@ -105,7 +105,7 @@ class GlobalFrameAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(sqlText)))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRunningAggExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
     assert(p.collect { case g: GlobalFrameAggExec => g }.size == 1, p.toString)
     assert(p.collect { case e: ShuffleExchangeExec => e }.size == 1,
       s"the whole-frame node must ride the running family's exchange:\n$p")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalLookaheadExec, GlobalShiftExec}
+import graft.plans.{PartitionedLookaheadExec, PartitionedShiftExec}
 import graft.rules.RewriteGlobalRankWindows
 
 /** [[graft.plans.GlobalLookahead]] — distributed `lead(e, k) IGNORE
@@ -33,7 +33,7 @@ class GlobalLookaheadSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalLookaheadExec => g }.size == lookaheads,
+    assert(p.collect { case g: PartitionedLookaheadExec if g.partKeys.isEmpty => g }.size == lookaheads,
       p.toString)
   }
 
@@ -113,8 +113,8 @@ class GlobalLookaheadSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1)
-    assert(p.collect { case g: GlobalLookaheadExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedLookaheadExec if g.partKeys.isEmpty => g }.size == 1)
     assert(p.collect {
       case e: ShuffleExchangeExec
         if e.outputPartitioning.isInstanceOf[
@@ -130,7 +130,7 @@ class GlobalLookaheadSpec extends AnyFunSuite {
     try {
       val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(
         "SELECT v, lead(x, 5) IGNORE NULLS OVER (ORDER BY v) AS n FROM la_nr")))
-      assert(p.collect { case g: GlobalLookaheadExec => g }.isEmpty, p.toString)
+      assert(p.collect { case g: PartitionedLookaheadExec if g.partKeys.isEmpty => g }.isEmpty, p.toString)
       assert(p.collect { case x: WindowExec => x }.size == 1)
     } finally spark.conf.unset(RewriteGlobalRankWindows.MaxShiftKey)
   }

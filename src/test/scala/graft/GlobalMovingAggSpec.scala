@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalMovingAggExec, GlobalRankExec, GlobalRunningAggExec, GlobalShiftExec}
+import graft.plans.{PartitionedMovingAggExec, PartitionedRankExec, PartitionedRunningAggExec, PartitionedShiftExec}
 import graft.rules.RewriteGlobalRankWindows
 
 /** [[graft.plans.GlobalMovingAgg]] — distributed exact global
@@ -34,7 +34,7 @@ class GlobalMovingAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalMovingAggExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("trailing frame: moving sum/min/max/count/avg == built-ins, many partitions") {
@@ -114,10 +114,10 @@ class GlobalMovingAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRankExec => g }.size == 1)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1)
-    assert(p.collect { case g: GlobalRunningAggExec => g }.size == 1)
-    assert(p.collect { case g: GlobalMovingAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.isEmpty => g }.size == 1)
     assert(p.collect { case e: ShuffleExchangeExec => e }.size == 1,
       s"four families must share one range exchange:\n$p")
   }
@@ -146,7 +146,7 @@ class GlobalMovingAggSpec extends AnyFunSuite {
       .createOrReplaceTempView("ma_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(sql)))
-      assert(p.collect { case g: GlobalMovingAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.isEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // extent beyond spark.graft.rewrite.maxShiftOffset (default 1024):

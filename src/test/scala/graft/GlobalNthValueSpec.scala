@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalNthValueExec, GlobalRankExec, GlobalRunningAggExec}
+import graft.plans.{PartitionedNthValueExec, PartitionedRankExec, PartitionedRunningAggExec}
 import graft.rules.RewriteGlobalRankWindows
 
 /** [[graft.plans.GlobalNthValue]] — distributed exact global
@@ -46,7 +46,7 @@ class GlobalNthValueSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalNthValueExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedNthValueExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("default RANGE frame gates on the tie-GROUP end; whole frame shows everywhere") {
@@ -85,9 +85,9 @@ class GlobalNthValueSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRankExec => g }.size == 1)
-    assert(p.collect { case g: GlobalRunningAggExec => g }.size == 1)
-    assert(p.collect { case g: GlobalNthValueExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedNthValueExec if g.partKeys.isEmpty => g }.size == 1)
     assert(p.collect { case e: ShuffleExchangeExec => e }.size == 1,
       s"the families must share one range exchange:\n$p")
   }
@@ -97,7 +97,7 @@ class GlobalNthValueSpec extends AnyFunSuite {
     df.createOrReplaceTempView("nv_t")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(sql)))
-      assert(p.collect { case g: GlobalNthValueExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedNthValueExec if g.partKeys.isEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // a moving lower bound un-anchors the frame start: the k-th frame
@@ -106,9 +106,9 @@ class GlobalNthValueSpec extends AnyFunSuite {
     // DeclarativeAggregate; GlobalMovingAggSpec pins the values)
     val pm = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(
       "SELECT v, nth_value(x, 2) OVER (ORDER BY v ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS s FROM nv_t")))
-    assert(pm.collect { case g: GlobalNthValueExec => g }.isEmpty)
+    assert(pm.collect { case g: PartitionedNthValueExec if g.partKeys.isEmpty => g }.isEmpty)
     assert(pm.collect {
-      case g: graft.plans.GlobalMovingAggExec => g
+      case g: graft.plans.PartitionedMovingAggExec if g.partKeys.isEmpty => g
     }.size == 1)
     assert(pm.collect { case x: WindowExec => x }.isEmpty)
     // an unbounded-FOLLOWING end with a moving lower bound still keeps

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalMovingAggExec, GlobalRangeMovingAggExec}
+import graft.plans.{PartitionedMovingAggExec, PartitionedRangeMovingAggExec}
 import graft.rules.RewriteGlobalRankWindows
 
 /** [[graft.plans.GlobalRangeMovingAgg]] — distributed exact global
@@ -41,7 +41,7 @@ class GlobalRangeMovingAggSpec extends AnyFunSuite {
       windowed.sort(sortCols: _*).collect().toSeq)
     val p = noAqePlan(forced)
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRangeMovingAggExec => g }.size == 1,
+    assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g }.size == 1,
       p.toString)
   }
 
@@ -211,7 +211,7 @@ class GlobalRangeMovingAggSpec extends AnyFunSuite {
       .createOrReplaceTempView("rma_dec_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(sql)))
-      assert(p.collect { case g: GlobalRangeMovingAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // wide decimal key: int128 unscaled, no long lattice
@@ -237,7 +237,7 @@ class GlobalRangeMovingAggSpec extends AnyFunSuite {
       .createOrReplaceTempView("rma_ts_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(sql)))
-      assert(p.collect { case g: GlobalRangeMovingAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // a month is not a fixed micro count
@@ -273,8 +273,8 @@ class GlobalRangeMovingAggSpec extends AnyFunSuite {
       windowed.sort("v", "x", "vr", "rr").collect().toSeq)
     val p = noAqePlan(forced)
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRangeMovingAggExec => g }.size == 1)
-    assert(p.collect { case g: GlobalMovingAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.isEmpty => g }.size == 1)
     // exactly ONE range exchange (the fixture's own round-robin
     // repartition sits below it and doesn't count)
     assert(p.collect {
@@ -316,7 +316,7 @@ class GlobalRangeMovingAggSpec extends AnyFunSuite {
       .createOrReplaceTempView("rma_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.force(spark.sql(sql)))
-      assert(p.collect { case g: GlobalRangeMovingAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // (descending and nulls-last orders rewrite since late r13 —

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalRank, GlobalRankExec}
+import graft.plans.{GlobalRank, PartitionedRankExec}
 import graft.plans.GlobalRank.Key
 
 /** [[graft.plans.GlobalRank]] — the distributed exact-rank primitive
@@ -120,7 +120,7 @@ class GlobalRankSpec extends AnyFunSuite {
 
   test("ntile == built-in ntile under a total order; all six modes in ONE node") {
     import graft.plans.GlobalRank.RankMode
-    import graft.plans.GlobalRankExec
+    import graft.plans.PartitionedRankExec
     val df = spark.range(1000)
       .select((col("id") * 48271L % 99991L).as("v"), col("id")).repartition(6)
     val all = GlobalRank.globalRanks(df,
@@ -133,7 +133,7 @@ class GlobalRankSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try assert(all.queryExecution.executedPlan.collect {
-      case g: GlobalRankExec => g
+      case g: PartitionedRankExec if g.partKeys.isEmpty => g
     }.size == 1)
     finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     val got = all.select("v", "id", "rn", "rnk", "drnk", "prnk", "cd", "nt")
@@ -219,7 +219,7 @@ class GlobalRankSpec extends AnyFunSuite {
       val df = GlobalRank.globalRowNumber(
         spark.range(100).toDF("id"), "rk", Seq(Key("id", desc = true)))
       val p = df.queryExecution.executedPlan
-      assert(p.collect { case g: GlobalRankExec => g }.size == 1, p.toString)
+      assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
       val range = p.collect {
         case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
@@ -247,5 +247,63 @@ class GlobalRankSpec extends AnyFunSuite {
         case s: org.apache.spark.sql.execution.SortExec => s
       }.size == 1, s"one sort total (the rank's own):\n$downstream")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("empty-key row_number: ONE count job, over all but the last partition, sorting nothing") {
+    // the empty-key fast path: the row-count pass reads the exchange
+    // output BELOW the per-partition sort and skips the last partition
+    // (its offset needs only the others' counts); the output pass sorts
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import scala.jdk.CollectionConverters._
+    val nParts = 5
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> nParts.toString)
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val tagKey = "graft.test.job.tag"
+    val tag = java.util.UUID.randomUUID().toString
+    // (final stage id, its task count) per job of this test's thread —
+    // the input has 2 partitions, so the range sampling job never
+    // looks like the nParts - 1 task count job
+    val jobs = new ConcurrentLinkedQueue[(Int, Int)]()
+    val peakMem = new ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tagKey) == tag) {
+          val last = e.stageInfos.maxBy(_.stageId)
+          jobs.add((last.stageId, last.numTasks))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          peakMem.merge(e.stageId, java.lang.Long.valueOf(e.taskMetrics.peakExecutionMemory),
+            (a: java.lang.Long, b: java.lang.Long) => java.lang.Long.valueOf(a + b))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = spark.range(0, 20000, 1, 2)
+        .select((col("id") * 7919L % 10007L).as("v"), col("id"))
+      val ranked = GlobalRank.globalRowNumber(df, "rk", Seq(Key("v"), Key("id")))
+      spark.sparkContext.setLocalProperty(tagKey, tag)
+      val n = try ranked.collect().length
+        finally spark.sparkContext.setLocalProperty(tagKey, null)
+      assert(n == 20000)
+      org.apache.spark.sql.GraftSqlBridge.waitForListenerBus(spark)
+      val all = jobs.asScala.toSeq
+      val counts = all.filter(_._2 == nParts - 1)
+      assert(counts.size == 1, s"expected ONE count job over ${nParts - 1} partitions: $all")
+      def peak(stage: Int): Long = Option(peakMem.get(stage)).map(_.longValue).getOrElse(0L)
+      assert(peak(counts.head._1) == 0L, "the count job sorted its partitions")
+      // control: the output pass is where the per-partition sort runs
+      val outputs = all.filter(_._2 == nParts)
+      assert(outputs.nonEmpty && outputs.forall(j => peak(j._1) > 0L),
+        s"the output pass must sort (control): $all")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{GlobalRankExec, GlobalRunningAggExec, GlobalShiftExec}
+import graft.plans.{PartitionedRankExec, PartitionedRunningAggExec, PartitionedShiftExec}
 import graft.rules.RewriteGlobalRankWindows
 
 /** [[graft.plans.GlobalRunningAgg]] — distributed exact global running
@@ -42,7 +42,7 @@ class GlobalRunningAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRunningAggExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("RANGE frame (the SQL default) ends at the tie group — exact under heavy ties") {
@@ -93,9 +93,9 @@ class GlobalRunningAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRankExec => g }.size == 1)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1)
-    assert(p.collect { case g: GlobalRunningAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size == 1)
     assert(p.collect { case e: ShuffleExchangeExec => e }.size == 1,
       s"three families must share one range exchange:\n$p")
   }
@@ -115,7 +115,7 @@ class GlobalRunningAggSpec extends AnyFunSuite {
     assert(exactF.schema == exactW.schema)
     assert(RowMultiset.of(exactF) == RowMultiset.of(exactW))
     assert(noAqePlan(RewriteGlobalRankWindows.force(exactW)).collect {
-      case g: GlobalRunningAggExec => g
+      case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g
     }.size == 1)
     // moment family: the prefix seed merges partials (Welford combine),
     // so values can differ from the sequential built-in in final ulps —
@@ -146,7 +146,7 @@ class GlobalRunningAggSpec extends AnyFunSuite {
     def kept(sql: String): Unit = {
       val forced = RewriteGlobalRankWindows.force(spark.sql(sql))
       val p = noAqePlan(forced)
-      assert(p.collect { case g: GlobalRunningAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // (DISTINCT and FILTER window aggregates are rejected by the
@@ -184,7 +184,7 @@ class GlobalRunningAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRunningAggExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("last_value under the default RANGE frame takes the tie-GROUP end") {

@@ -7,10 +7,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.GlobalShiftExec
+import graft.plans.PartitionedShiftExec
 import graft.rules.RewriteGlobalRankWindows
 
-/** [[graft.plans.GlobalShift]]'s IGNORE NULLS lag (late r12): the k-th
+/** [[graft.plans.PartitionedShift]]'s IGNORE NULLS lag (late r12): the k-th
   * most recent NON-NULL value strictly before the current row, via a
   * k-capacity non-null ring seeded from the telescoped driver
   * boundary. Pinned against the built-in: dense and SPARSE non-nulls
@@ -51,7 +51,7 @@ class GlobalShiftIgnoreNullsSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("explicit default fires while fewer than k non-nulls precede; all-null column always defaults") {
@@ -86,7 +86,7 @@ class GlobalShiftIgnoreNullsSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
     assert(p.collect { case e: ShuffleExchangeExec => e }.size == 1, p.toString)
   }
 }

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.GlobalRank.Key
-import graft.plans.{GlobalShift, GlobalShiftExec}
-import graft.plans.GlobalShift.Shift
+import graft.plans.{PartitionedShift, PartitionedShiftExec}
+import graft.plans.PartitionedShift.Shift
 
-/** [[graft.plans.GlobalShift]] — distributed exact global lead/lag
+/** [[graft.plans.PartitionedShift]] under the EMPTY key — distributed exact global lead/lag
   * (late r12): equality against the built-in offset windows under a
   * total order, boundary crossing over many range partitions, offsets
   * larger than any partition, nulls in the shifted column, and the
@@ -21,7 +21,7 @@ class GlobalShiftSpec extends AnyFunSuite {
     val df = spark.range(3000)
       .select((col("id") * 48271L % 9973L).as("v"), col("id"),
         (col("id") * 3L).as("x")).repartition(8)
-    val got = GlobalShift.globalShift(df,
+    val got = PartitionedShift.globalShift(df,
       Seq(Shift("lag1", "x", -1), Shift("lag7", "x", -7),
         Shift("lead1", "x", 1), Shift("lead13", "x", 13),
         Shift("cur", "x", 0)),
@@ -44,7 +44,7 @@ class GlobalShiftSpec extends AnyFunSuite {
     // 4 shuffle partitions of ~50 rows each; offset 120 must chain
     // through MULTIPLE partitions' boundary state
     val df = spark.range(200).select(col("id").as("v"), (col("id") % 97).as("x"))
-    val got = GlobalShift.globalShift(df,
+    val got = PartitionedShift.globalShift(df,
       Seq(Shift("b", "x", -120), Shift("f", "x", 120)), Seq(Key("v")))
       .select("v", "b", "f").collect().toSet
     val w = Window.orderBy("v")
@@ -58,7 +58,7 @@ class GlobalShiftSpec extends AnyFunSuite {
   test("nulls in the shifted column pass through; out-of-range is null") {
     val df = Seq[(Long, java.lang.Long)]((1L, 10L), (2L, null), (3L, 30L))
       .toDF("v", "x")
-    val got = GlobalShift.globalShift(df,
+    val got = PartitionedShift.globalShift(df,
       Seq(Shift("p", "x", -1), Shift("n", "x", 1)), Seq(Key("v")))
       .orderBy("v").select("p", "n")
       .collect().map(r => (r.get(0), r.get(1))).toSeq
@@ -67,15 +67,15 @@ class GlobalShiftSpec extends AnyFunSuite {
 
   test("empty input, single row, and offset beyond the data") {
     val empty = spark.emptyDataset[Long].toDF("v")
-    assert(GlobalShift.globalShift(empty,
+    assert(PartitionedShift.globalShift(empty,
       Seq(Shift("s", "v", -1)), Seq(Key("v"))).count() == 0)
     val one = Seq(42L).toDF("v")
-    val r = GlobalShift.globalShift(one,
+    val r = PartitionedShift.globalShift(one,
       Seq(Shift("b", "v", -1), Shift("f", "v", 1)), Seq(Key("v")))
       .select("b", "f").collect().head
     assert(r.isNullAt(0) && r.isNullAt(1))
     val tiny = Seq(1L, 2L, 3L).toDF("v")
-    val far = GlobalShift.globalShift(tiny,
+    val far = PartitionedShift.globalShift(tiny,
       Seq(Shift("f", "v", 99)), Seq(Key("v")))
       .select("f").collect()
     assert(far.forall(_.isNullAt(0)))
@@ -83,7 +83,7 @@ class GlobalShiftSpec extends AnyFunSuite {
 
   test("descending order and string values") {
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("v", "s")
-    val got = GlobalShift.globalShift(df,
+    val got = PartitionedShift.globalShift(df,
       Seq(Shift("p", "s", -1)), Seq(Key("v", desc = true)))
       .orderBy(col("v").desc).select("p").as[String].collect().toSeq
     assert(got == Seq(null, "c", "b"))
@@ -95,11 +95,11 @@ class GlobalShiftSpec extends AnyFunSuite {
     try {
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-      val df = GlobalShift.globalShift(
+      val df = PartitionedShift.globalShift(
         spark.range(100).toDF("id"), Seq(Shift("p", "id", -1)),
         Seq(Key("id", desc = true)))
       val p = df.queryExecution.executedPlan
-      assert(p.collect { case g: GlobalShiftExec => g }.size == 1, p.toString)
+      assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
       assert(p.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }.isEmpty)
@@ -116,17 +116,17 @@ class GlobalShiftSpec extends AnyFunSuite {
   test("unknown column, duplicate and colliding names are rejected") {
     val df = Seq(1L).toDF("v")
     intercept[IllegalArgumentException] {
-      GlobalShift.globalShift(df, Seq(Shift("s", "nope", -1)), Seq(Key("v")))
+      PartitionedShift.globalShift(df, Seq(Shift("s", "nope", -1)), Seq(Key("v")))
     }
     intercept[IllegalArgumentException] {
-      GlobalShift.globalShift(df,
+      PartitionedShift.globalShift(df,
         Seq(Shift("s", "v", -1), Shift("s", "v", 1)), Seq(Key("v")))
     }
     intercept[IllegalArgumentException] {
-      GlobalShift.globalShift(df, Seq(Shift("v", "v", -1)), Seq(Key("v")))
+      PartitionedShift.globalShift(df, Seq(Shift("v", "v", -1)), Seq(Key("v")))
     }
     intercept[IllegalArgumentException] {
-      GlobalShift.globalShift(df, Seq.empty, Seq(Key("v")))
+      PartitionedShift.globalShift(df, Seq.empty, Seq(Key("v")))
     }
   }
 }

@@ -34,7 +34,7 @@ class PartitionedMovingAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: PartitionedMovingAggExec => g }.size == 1,
+    assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.nonEmpty => g }.size == 1,
       p.toString)
   }
 
@@ -137,10 +137,10 @@ class PartitionedMovingAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: PartitionedRankExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedShiftExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedRunningAggExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedMovingAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.nonEmpty => g }.size == 1)
     assert(p.collect {
       case e: ShuffleExchangeExec
         if e.outputPartitioning.isInstanceOf[
@@ -154,7 +154,7 @@ class PartitionedMovingAggSpec extends AnyFunSuite {
       .createOrReplaceTempView("pma_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(spark.sql(sql)))
-      assert(p.collect { case g: PartitionedMovingAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.nonEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // integral bounded RANGE: NOT this member — since late r13 it
@@ -163,9 +163,9 @@ class PartitionedMovingAggSpec extends AnyFunSuite {
       """SELECT k, sum(x) OVER (PARTITION BY k ORDER BY v
         |  RANGE BETWEEN 3 PRECEDING AND CURRENT ROW) AS s FROM pma_nr"""
         .stripMargin)))
-    assert(pr.collect { case g: PartitionedMovingAggExec => g }.isEmpty)
+    assert(pr.collect { case g: PartitionedMovingAggExec if g.partKeys.nonEmpty => g }.isEmpty)
     assert(pr.collect {
-      case g: graft.plans.PartitionedRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g
     }.size == 1)
     assert(pr.collect { case x: WindowExec => x }.isEmpty)
     spark.conf.set(RewriteGlobalRankWindows.MaxShiftKey, "4")

@@ -35,7 +35,7 @@ class PartitionedRangeMovingAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: PartitionedRangeMovingAggExec => g }.size == 1,
+    assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g }.size == 1,
       p.toString)
   }
 
@@ -125,9 +125,9 @@ class PartitionedRangeMovingAggSpec extends AnyFunSuite {
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
     // rn/cs share one (g, v, id) window; rm5's (g, v) window is its own
     // node — two composite range exchanges at most, zero WindowExec
-    assert(p.collect { case g: PartitionedRankExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedRunningAggExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedRangeMovingAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g }.size == 1)
   }
 
   test("one window node mixing ROWS-moving and RANGE-moving members stacks both") {
@@ -143,8 +143,8 @@ class PartitionedRangeMovingAggSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: PartitionedMovingAggExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedRangeMovingAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedMovingAggExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g }.size == 1)
     assert(p.collect {
       case e: ShuffleExchangeExec
         if e.outputPartitioning.isInstanceOf[
@@ -214,7 +214,7 @@ class PartitionedRangeMovingAggSpec extends AnyFunSuite {
         |INTERVAL 1 MONTH PRECEDING AND CURRENT ROW) AS s
         |FROM prma_ts""".stripMargin))
     val kp = noAqePlan(kept)
-    assert(kp.collect { case g: PartitionedRangeMovingAggExec => g }.isEmpty)
+    assert(kp.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g }.isEmpty)
     assert(kp.collect { case x: WindowExec => x }.size == 1)
   }
 
@@ -244,7 +244,7 @@ class PartitionedRangeMovingAggSpec extends AnyFunSuite {
       .createOrReplaceTempView("prm_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(spark.sql(sql)))
-      assert(p.collect { case g: PartitionedRangeMovingAggExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // (descending/nulls-last orders rewrite since late r13 — pinned

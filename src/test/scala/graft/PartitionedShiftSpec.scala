@@ -33,7 +33,7 @@ class PartitionedShiftSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: PartitionedShiftExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.nonEmpty => g }.size == 1, p.toString)
   }
 
   test("hot key holding half the rows: lag/lead at several offsets == built-in") {
@@ -112,9 +112,9 @@ class PartitionedShiftSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: PartitionedRankExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedShiftExec => g }.size == 1)
-    assert(p.collect { case g: PartitionedRunningAggExec => g }.size == 1)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.nonEmpty => g }.size == 1)
+    assert(p.collect { case g: PartitionedRunningAggExec if g.partKeys.nonEmpty => g }.size == 1)
     assert(p.collect {
       case e: ShuffleExchangeExec
         if e.outputPartitioning.isInstanceOf[
@@ -159,7 +159,7 @@ class PartitionedShiftSpec extends AnyFunSuite {
       .createOrReplaceTempView("ps_nr")
     def kept(sql: String): Unit = {
       val p = noAqePlan(RewriteGlobalRankWindows.forceSkew(spark.sql(sql)))
-      assert(p.collect { case g: PartitionedShiftExec => g }.isEmpty, sql)
+      assert(p.collect { case g: PartitionedShiftExec if g.partKeys.nonEmpty => g }.isEmpty, sql)
       assert(p.collect { case x: WindowExec => x }.size == 1, sql)
     }
     // lead IGNORE NULLS: NOT this member — since late r13 it routes to
@@ -167,9 +167,9 @@ class PartitionedShiftSpec extends AnyFunSuite {
     // values); lag IGNORE NULLS rides the segment rings (pinned above)
     val pl = noAqePlan(RewriteGlobalRankWindows.forceSkew(spark.sql(
       "SELECT k, lead(x, 1) IGNORE NULLS OVER (PARTITION BY k ORDER BY v) AS s FROM ps_nr")))
-    assert(pl.collect { case g: PartitionedShiftExec => g }.isEmpty)
+    assert(pl.collect { case g: PartitionedShiftExec if g.partKeys.nonEmpty => g }.isEmpty)
     assert(pl.collect {
-      case g: graft.plans.PartitionedLookaheadExec => g
+      case g: graft.plans.PartitionedLookaheadExec if g.partKeys.nonEmpty => g
     }.size == 1)
     assert(pl.collect { case x: WindowExec => x }.isEmpty)
     spark.conf.set(RewriteGlobalRankWindows.MaxShiftKey, "4")

@@ -229,7 +229,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_rfm_ranked must not use windows:\n$p")
     assert(p.collect {
-      case g: graft.plans.GlobalRankExec => g
+      case g: graft.plans.PartitionedRankExec if g.partKeys.isEmpty => g
     }.size == 3, s"expected the three chained exact ranks:\n$p")
     // every DATA exchange fans out: range exchanges for the ranks (+
     // presentation sort), hash for the aggregates, broadcast for the
@@ -259,8 +259,8 @@ class PlanShapeSpec extends AnyFunSuite {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }.isEmpty, s"$name kept a WindowExec:\n$p")
       assert(p.collect {
-        case g: graft.plans.GlobalRankExec => g
-      }.size == 1, s"$name must rank through ONE GlobalRankExec:\n$p")
+        case g: graft.plans.PartitionedRankExec if g.partKeys.isEmpty => g
+      }.size == 1, s"$name must rank through ONE empty-key PartitionedRankExec:\n$p")
     }
     // the offset-family sibling: lead/lag through ONE GlobalShiftExec
     val ps = plan("q_shift_rewrite")
@@ -268,8 +268,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_shift_rewrite kept a WindowExec:\n$ps")
     assert(ps.collect {
-      case g: graft.plans.GlobalShiftExec => g
-    }.size == 1, s"q_shift_rewrite must shift through ONE GlobalShiftExec:\n$ps")
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_shift_rewrite must shift through ONE empty-key PartitionedShiftExec:\n$ps")
     // the running-aggregate family: cumulative sums through ONE
     // GlobalRunningAggExec
     val pr = plan("q_runagg_rewrite")
@@ -277,8 +277,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_runagg_rewrite kept a WindowExec:\n$pr")
     assert(pr.collect {
-      case g: graft.plans.GlobalRunningAggExec => g
-    }.size == 1, s"q_runagg_rewrite must run through ONE GlobalRunningAggExec:\n$pr")
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_runagg_rewrite must run through ONE empty-key PartitionedRunningAggExec:\n$pr")
     // the widened allowlist (bit/bool reducers): all five functions of
     // the window node still land in ONE operator
     val pb = plan("q_runagg_bitbool")
@@ -286,8 +286,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_runagg_bitbool kept a WindowExec:\n$pb")
     assert(pb.collect {
-      case g: graft.plans.GlobalRunningAggExec => g
-    }.size == 1, s"q_runagg_bitbool must run through ONE GlobalRunningAggExec:\n$pb")
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_runagg_bitbool must run through ONE empty-key PartitionedRunningAggExec:\n$pb")
     // the moving-frame family: three different bounded ROWS frames
     // (trailing/centered/pure-future), all in ONE operator
     val pm = plan("q_movagg_rewrite")
@@ -295,8 +295,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_movagg_rewrite kept a WindowExec:\n$pm")
     assert(pm.collect {
-      case g: graft.plans.GlobalMovingAggExec => g
-    }.size == 1, s"q_movagg_rewrite must run through ONE GlobalMovingAggExec:\n$pm")
+      case g: graft.plans.PartitionedMovingAggExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_movagg_rewrite must run through ONE empty-key PartitionedMovingAggExec:\n$pm")
     // the whole-frame family (r12): ratio-to-total through ONE
     // GlobalFrameAggExec with NO exchange below it at all — the
     // OVER () constant attaches to rows where they already live
@@ -323,8 +323,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_firstlast_rewrite kept a WindowExec:\n$pfl")
     assert(pfl.collect {
-      case g: graft.plans.GlobalRunningAggExec => g
-    }.size == 1, s"q_firstlast_rewrite must run through ONE GlobalRunningAggExec:\n$pfl")
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_firstlast_rewrite must run through ONE empty-key PartitionedRunningAggExec:\n$pfl")
     // nth_value (plain + IGNORE NULLS + whole-frame): all four
     // expressions through ONE GlobalNthValueExec
     val pn = plan("q_nthvalue_rewrite")
@@ -332,8 +332,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_nthvalue_rewrite kept a WindowExec:\n$pn")
     assert(pn.collect {
-      case g: graft.plans.GlobalNthValueExec => g
-    }.size == 1, s"q_nthvalue_rewrite must run through ONE GlobalNthValueExec:\n$pn")
+      case g: graft.plans.PartitionedNthValueExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_nthvalue_rewrite must run through ONE empty-key PartitionedNthValueExec:\n$pn")
     // lag IGNORE NULLS (the non-null ring) mixed with a plain lag:
     // one GlobalShiftExec for all three offsets
     val psn = plan("q_shiftnn_rewrite")
@@ -341,8 +341,8 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_shiftnn_rewrite kept a WindowExec:\n$psn")
     assert(psn.collect {
-      case g: graft.plans.GlobalShiftExec => g
-    }.size == 1, s"q_shiftnn_rewrite must shift through ONE GlobalShiftExec:\n$psn")
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.isEmpty => g
+    }.size == 1, s"q_shiftnn_rewrite must shift through ONE empty-key PartitionedShiftExec:\n$psn")
     // exact whole-frame percentiles: four statistics through ONE
     // GlobalExactPercentileExec, and — beyond the day-rollup's own
     // hash exchange — NO other exchange and NO 1-partition funnel
@@ -364,9 +364,9 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_rangemov_rewrite kept a WindowExec:\n$prm")
     assert(prm.collect {
-      case g: graft.plans.GlobalRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g
     }.size == 1,
-      s"q_rangemov_rewrite must run through ONE GlobalRangeMovingAggExec:\n$prm")
+      s"q_rangemov_rewrite must run through ONE empty-key PartitionedRangeMovingAggExec:\n$prm")
     assert(prm.collect { case e: ShuffleExchangeExec => e }
       .forall(_.outputPartitioning.numPartitions > 1),
       s"q_rangemov_rewrite grew a 1-partition exchange:\n$prm")
@@ -378,7 +378,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewrank_rewrite kept a WindowExec:\n$psk")
     assert(psk.collect {
-      case g: graft.plans.PartitionedRankExec => g
+      case g: graft.plans.PartitionedRankExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewrank_rewrite must rank through ONE PartitionedRankExec:\n$psk")
     // its running-aggregate sibling: cumulative per-key statistics
@@ -388,7 +388,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewrunagg_rewrite kept a WindowExec:\n$psr")
     assert(psr.collect {
-      case g: graft.plans.PartitionedRunningAggExec => g
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewrunagg_rewrite must run through ONE PartitionedRunningAggExec:\n$psr")
     // late r13: lead IGNORE NULLS (the offset family's last retired
@@ -402,12 +402,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // own single-column node by design (the O(k) deque bound is
     // per-column — see GlobalLookaheadNode's rationale)
     assert(pln.collect {
-      case g: graft.plans.GlobalLookaheadExec => g
+      case g: graft.plans.PartitionedLookaheadExec if g.partKeys.isEmpty => g
     }.size == 2,
-      s"q_leadnn_rewrite must look ahead through TWO single-column GlobalLookaheadExec:\n$pln")
+      s"q_leadnn_rewrite must look ahead through TWO single-column empty-key PartitionedLookaheadExec:\n$pln")
     assert(pln.collect {
-      case g: graft.plans.GlobalShiftExec => g
-    }.size == 1, s"the plain lead must ride GlobalShift:\n$pln")
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.isEmpty => g
+    }.size == 1, s"the plain lead must ride an empty-key PartitionedShiftExec:\n$pln")
     // late r13: the skew tier's total-dependent modes — pr/cd in one
     // operator, ntile's total-order window in a second, zero WindowExec
     val psp = plan("q_skewpct_rewrite")
@@ -415,7 +415,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewpct_rewrite kept a WindowExec:\n$psp")
     assert(psp.collect {
-      case g: graft.plans.PartitionedRankExec => g
+      case g: graft.plans.PartitionedRankExec if g.partKeys.nonEmpty => g
     }.size == 2,
       s"q_skewpct_rewrite must rank through TWO PartitionedRankExec (pr/cd + ntile):\n$psp")
     // the skew tier's lead/lag member: all four offsets in ONE
@@ -425,7 +425,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewshift_rewrite kept a WindowExec:\n$pss")
     assert(pss.collect {
-      case g: graft.plans.PartitionedShiftExec => g
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewshift_rewrite must shift through ONE PartitionedShiftExec:\n$pss")
     // late r13: the skew tier's bounded-ROWS moving-frame member —
@@ -436,7 +436,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewmovagg_rewrite kept a WindowExec:\n$psm")
     assert(psm.collect {
-      case g: graft.plans.PartitionedMovingAggExec => g
+      case g: graft.plans.PartitionedMovingAggExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewmovagg_rewrite must run through ONE PartitionedMovingAggExec:\n$psm")
     // late r13: the whole-frame window-to-join member — zero
@@ -461,11 +461,11 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_nthmov_rewrite kept a WindowExec:\n$pnm")
     assert(pnm.collect {
-      case g: graft.plans.GlobalMovingAggExec => g
+      case g: graft.plans.PartitionedMovingAggExec if g.partKeys.isEmpty => g
     }.size == 1,
-      s"q_nthmov_rewrite's global frames must ride ONE GlobalMovingAggExec:\n$pnm")
+      s"q_nthmov_rewrite's global frames must ride ONE empty-key PartitionedMovingAggExec:\n$pnm")
     assert(pnm.collect {
-      case g: graft.plans.PartitionedMovingAggExec => g
+      case g: graft.plans.PartitionedMovingAggExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_nthmov_rewrite's per-key frame must ride ONE PartitionedMovingAggExec:\n$pnm")
     // late r13: per-key lag IGNORE NULLS (the skew tier's retired
@@ -475,7 +475,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewshiftnn_rewrite kept a WindowExec:\n$pshn")
     assert(pshn.collect {
-      case g: graft.plans.PartitionedShiftExec => g
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewshiftnn_rewrite must shift through ONE PartitionedShiftExec:\n$pshn")
     // late r13: the skew tier's dense-domain member — per-key RANGE
@@ -485,7 +485,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewrangemov_rewrite kept a WindowExec:\n$prmv")
     assert(prmv.collect {
-      case g: graft.plans.PartitionedRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewrangemov_rewrite must ride ONE PartitionedRangeMovingAggExec:\n$prmv")
     // late r13: per-key lead IGNORE NULLS — TWO single-column
@@ -496,11 +496,11 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewleadnn_rewrite kept a WindowExec:\n$plnn")
     assert(plnn.collect {
-      case g: graft.plans.PartitionedLookaheadExec => g
+      case g: graft.plans.PartitionedLookaheadExec if g.partKeys.nonEmpty => g
     }.size == 2,
       s"q_skewleadnn_rewrite must look ahead through TWO single-column PartitionedLookaheadExec:\n$plnn")
     assert(plnn.collect {
-      case g: graft.plans.PartitionedShiftExec => g
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewleadnn_rewrite's plain lead must ride PartitionedShift:\n$plnn")
     // late r13: per-key start-anchored nth_value — the skew tier's
@@ -510,7 +510,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewnth_rewrite kept a WindowExec:\n$pnth")
     assert(pnth.collect {
-      case g: graft.plans.PartitionedNthValueExec => g
+      case g: graft.plans.PartitionedNthValueExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewnth_rewrite must ride ONE PartitionedNthValueExec:\n$pnth")
     // late r13: descending RANGE moving frames (the retired
@@ -520,10 +520,10 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_rangemov_desc kept a WindowExec:\n$prd")
     assert(prd.collect {
-      case g: graft.plans.GlobalRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g
     }.size == 1, s"q_rangemov_desc's global DESC window:\n$prd")
     assert(prd.collect {
-      case g: graft.plans.PartitionedRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g
     }.size == 1, s"q_rangemov_desc's per-key DESC window:\n$prd")
   }
 
@@ -536,9 +536,9 @@ class PlanShapeSpec extends AnyFunSuite {
     def winExecs(p: SparkPlan) = p.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
-    def ranks(p: SparkPlan) = p.collect { case g: graft.plans.GlobalRankExec => g }.size
+    def ranks(p: SparkPlan) = p.collect { case g: graft.plans.PartitionedRankExec if g.partKeys.isEmpty => g }.size
     def frames(p: SparkPlan) = p.collect { case g: graft.plans.GlobalFrameAggExec => g }.size
-    def runs(p: SparkPlan) = p.collect { case g: graft.plans.GlobalRunningAggExec => g }.size
+    def runs(p: SparkPlan) = p.collect { case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g }.size
     val expected = Seq(
       // name -> (ranks, frameAggs, runningAggs, partitioned WindowExec)
       ("q_rfm", 3, 0, 0, 0), // three ntile quartiles, one per ORDER BY
@@ -557,11 +557,11 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(wins.size == nKeyedWin,
         s"$name: expected $nKeyedWin keyed WindowExec, got ${wins.size}:\n$p")
       assert(ranks(p) == nRank,
-        s"$name: expected $nRank GlobalRankExec, got ${ranks(p)}:\n$p")
+        s"$name: expected $nRank empty-key PartitionedRankExec, got ${ranks(p)}:\n$p")
       assert(frames(p) == nFrame,
         s"$name: expected $nFrame GlobalFrameAggExec, got ${frames(p)}:\n$p")
       assert(runs(p) == nRun,
-        s"$name: expected $nRun GlobalRunningAggExec, got ${runs(p)}:\n$p")
+        s"$name: expected $nRun empty-key PartitionedRunningAggExec, got ${runs(p)}:\n$p")
     }
   }
 
@@ -611,14 +611,14 @@ class PlanShapeSpec extends AnyFunSuite {
       val p = plan(name)
       assert(winExecs(p).isEmpty,
         s"$name kept a WindowExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalRankExec => g } == nRank,
-        s"$name: expected $nRank GlobalRankExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedRankExec if g.partKeys.isEmpty => g } == nRank,
+        s"$name: expected $nRank empty-key PartitionedRankExec:\n$p")
       assert(count(p) { case g: graft.plans.GlobalFrameAggExec => g } == nFrame,
         s"$name: expected $nFrame GlobalFrameAggExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalRunningAggExec => g } == nRun,
-        s"$name: expected $nRun GlobalRunningAggExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalShiftExec => g } == nShift,
-        s"$name: expected $nShift GlobalShiftExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g } == nRun,
+        s"$name: expected $nRun empty-key PartitionedRunningAggExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedShiftExec if g.partKeys.isEmpty => g } == nShift,
+        s"$name: expected $nShift empty-key PartitionedShiftExec:\n$p")
       spark.catalog.clearCache() // release the iterative queries' pins
     }
   }
@@ -655,16 +655,16 @@ class PlanShapeSpec extends AnyFunSuite {
             if w.partitionSpec.isEmpty => w
       }
       assert(unpart.isEmpty, s"$name kept an UNPARTITIONED WindowExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalRankExec => g } == nRank,
-        s"$name: expected $nRank GlobalRankExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedRankExec if g.partKeys.isEmpty => g } == nRank,
+        s"$name: expected $nRank empty-key PartitionedRankExec:\n$p")
       assert(count(p) { case g: graft.plans.GlobalFrameAggExec => g } == nFrame,
         s"$name: expected $nFrame GlobalFrameAggExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalRunningAggExec => g } == nRun,
-        s"$name: expected $nRun GlobalRunningAggExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalShiftExec => g } == nShift,
-        s"$name: expected $nShift GlobalShiftExec:\n$p")
-      assert(count(p) { case g: graft.plans.GlobalMovingAggExec => g } == nMov,
-        s"$name: expected $nMov GlobalMovingAggExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g } == nRun,
+        s"$name: expected $nRun empty-key PartitionedRunningAggExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedShiftExec if g.partKeys.isEmpty => g } == nShift,
+        s"$name: expected $nShift empty-key PartitionedShiftExec:\n$p")
+      assert(count(p) { case g: graft.plans.PartitionedMovingAggExec if g.partKeys.isEmpty => g } == nMov,
+        s"$name: expected $nMov empty-key PartitionedMovingAggExec:\n$p")
       spark.catalog.clearCache() // release the pinned level blocks
     }
   }
@@ -701,9 +701,9 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_rangemov_ts kept a WindowExec:\n$pts")
     assert(pts.collect {
-      case g: graft.plans.GlobalRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g
     }.size == 1,
-      s"q_rangemov_ts must run through ONE GlobalRangeMovingAggExec:\n$pts")
+      s"q_rangemov_ts must run through ONE empty-key PartitionedRangeMovingAggExec:\n$pts")
     assert(pts.collect { case e: ShuffleExchangeExec => e }
       .forall(_.outputPartitioning.numPartitions > 1),
       s"q_rangemov_ts grew a 1-partition exchange:\n$pts")
@@ -715,7 +715,7 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_skewrangemov_ts kept a WindowExec:\n$pskts")
     assert(pskts.collect {
-      case g: graft.plans.PartitionedRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_skewrangemov_ts must ride ONE PartitionedRangeMovingAggExec:\n$pskts")
     // decimal widening: same-lattice money frames over a DECIMAL(12,2)
@@ -725,9 +725,9 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_rangemov_dec kept a WindowExec:\n$pdec")
     assert(pdec.collect {
-      case g: graft.plans.GlobalRangeMovingAggExec => g
+      case g: graft.plans.PartitionedRangeMovingAggExec if g.partKeys.isEmpty => g
     }.size == 1,
-      s"q_rangemov_dec must run through ONE GlobalRangeMovingAggExec:\n$pdec")
+      s"q_rangemov_dec must run through ONE empty-key PartitionedRangeMovingAggExec:\n$pdec")
     // suffix-running mirror: global suffix sums/last ride ONE reversed
     // GlobalRunningAggExec, the per-key forms ONE reversed
     // PartitionedRunningAggExec — zero WindowExec
@@ -736,11 +736,11 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_suffix_running kept a WindowExec:\n$psfx")
     assert(psfx.collect {
-      case g: graft.plans.GlobalRunningAggExec => g
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g
     }.size == 1,
-      s"q_suffix_running must mirror through ONE GlobalRunningAggExec:\n$psfx")
+      s"q_suffix_running must mirror through ONE empty-key PartitionedRunningAggExec:\n$psfx")
     assert(psfx.collect {
-      case g: graft.plans.PartitionedRunningAggExec => g
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.nonEmpty => g
     }.size == 1,
       s"q_suffix_running must mirror through ONE PartitionedRunningAggExec:\n$psfx")
     // delayed/extended running ends (late r14): lag/lead-of-running
@@ -751,15 +751,15 @@ class PlanShapeSpec extends AnyFunSuite {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }.isEmpty, s"q_delayed_running kept a WindowExec:\n$pdly")
     assert(pdly.collect {
-      case g: graft.plans.GlobalRunningAggExec => g
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.isEmpty => g
     }.nonEmpty && pdly.collect {
-      case g: graft.plans.GlobalShiftExec => g
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.isEmpty => g
     }.nonEmpty,
       s"q_delayed_running must compose global lag/lead-of-running:\n$pdly")
     assert(pdly.collect {
-      case g: graft.plans.PartitionedRunningAggExec => g
+      case g: graft.plans.PartitionedRunningAggExec if g.partKeys.nonEmpty => g
     }.nonEmpty && pdly.collect {
-      case g: graft.plans.PartitionedShiftExec => g
+      case g: graft.plans.PartitionedShiftExec if g.partKeys.nonEmpty => g
     }.nonEmpty,
       s"q_delayed_running must compose per-key lag/lead-of-running:\n$pdly")
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.GlobalRankExec
+import graft.plans.PartitionedRankExec
 import graft.rules.{GraftExtensions, RewriteGlobalRankWindows}
 
 /** [[graft.rules.RewriteGlobalRankWindows]] — the conf-gated optimizer
@@ -90,7 +90,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
         ntile(4).over(w).as("nt")))
     val p = noAqePlan(forced)
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRankExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("non-rewrites: partitioned windows and out-of-family functions are left alone") {
@@ -100,7 +100,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
       row_number().over(Window.partitionBy("g").orderBy("v")))
     val p1 = noAqePlan(RewriteGlobalRankWindows.force(part))
     assert(p1.collect { case x: WindowExec => x }.size == 1, p1.toString)
-    assert(p1.collect { case g: GlobalRankExec => g }.isEmpty)
+    assert(p1.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.isEmpty)
     // a window NODE carrying an out-of-family function (collect_list is
     // order-sensitive — no family handles it) keeps ALL its expressions
     // on the WindowExec path — one SELECT so both functions share one
@@ -110,7 +110,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
       row_number().over(w).as("rn"),
       collect_list("v").over(w).as("vs"))
     val p2 = noAqePlan(RewriteGlobalRankWindows.force(mixed))
-    assert(p2.collect { case g: GlobalRankExec => g }.isEmpty, p2.toString)
+    assert(p2.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.isEmpty, p2.toString)
     assert(RowMultiset.of(RewriteGlobalRankWindows.force(mixed)) ==
       RowMultiset.of(mixed))
   }
@@ -140,7 +140,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
       val on = s2.sql(sql)
       val p = on.queryExecution.executedPlan
       assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-      assert(p.collect { case g: GlobalRankExec => g }.size == 1, p.toString)
+      assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
       assert(RowMultiset.of(on) == RowMultiset.of(off))
       assert(on.schema == off.schema)
     } finally {
@@ -150,7 +150,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
   }
 
   test("offset family: lag/lead with defaults rewrite to GlobalShiftExec, equal results") {
-    import graft.plans.GlobalShiftExec
+    import graft.plans.PartitionedShiftExec
     val df = spark.range(1500)
       .select((col("id") * 7919L % 6007L).as("v"), (col("id") % 251).as("x"))
       .repartition(7)
@@ -168,11 +168,11 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
     // under AQE, which hides the exec from a plain collect
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
   }
 
   test("mixed rank + offset window: stacked nodes share ONE range exchange") {
-    import graft.plans.GlobalShiftExec
+    import graft.plans.PartitionedShiftExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val df = spark.range(800)
       .select((col("id") * 131L % 1009L).as("v"), (col("id") % 50).as("x"))
@@ -186,8 +186,8 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
     val p = noAqePlan(RewriteGlobalRankWindows.force(windowed))
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRankExec => g }.size == 1, p.toString)
-    assert(p.collect { case g: GlobalShiftExec => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
+    assert(p.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.size == 1, p.toString)
     // the stacked nodes declare the same OrderedDistribution and pass
     // partitioning through — ONE shuffle serves both
     assert(p.collect { case e: ShuffleExchangeExec => e }.size == 1,
@@ -195,7 +195,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
   }
 
   test("offset non-rewrites: over-cap offsets keep WindowExec (lead IGNORE NULLS rewrites since r13)") {
-    import graft.plans.{GlobalLookaheadExec, GlobalShiftExec}
+    import graft.plans.{PartitionedLookaheadExec, PartitionedShiftExec}
     val df = spark.range(100).select(col("id").as("v"),
       when(col("id") % 3 === 0, col("id")).as("x"))
     df.createOrReplaceTempView("rw_shift_t")
@@ -206,7 +206,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
     val ign = RewriteGlobalRankWindows.force(spark.sql(
       "SELECT v, lead(x) IGNORE NULLS OVER (ORDER BY v) AS p FROM rw_shift_t"))
     val p1 = noAqePlan(ign)
-    assert(p1.collect { case g: GlobalLookaheadExec => g }.size == 1, p1.toString)
+    assert(p1.collect { case g: PartitionedLookaheadExec if g.partKeys.isEmpty => g }.size == 1, p1.toString)
     assert(p1.collect { case x: WindowExec => x }.isEmpty, p1.toString)
     // an offset past spark.graft.rewrite.maxShiftOffset must fall back
     // (boundary state scales with the offset)
@@ -215,11 +215,11 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
       val over = RewriteGlobalRankWindows.force(
         df.withColumn("p", lag("x", 5).over(Window.orderBy("v"))))
       val p2 = noAqePlan(over)
-      assert(p2.collect { case g: GlobalShiftExec => g }.isEmpty, p2.toString)
+      assert(p2.collect { case g: PartitionedShiftExec if g.partKeys.isEmpty => g }.isEmpty, p2.toString)
       val under = RewriteGlobalRankWindows.force(
         df.withColumn("p", lag("x", 4).over(Window.orderBy("v"))))
       assert(noAqePlan(under).collect {
-        case g: GlobalShiftExec => g
+        case g: PartitionedShiftExec if g.partKeys.isEmpty => g
       }.size == 1)
     } finally spark.conf.unset(RewriteGlobalRankWindows.MaxShiftKey)
   }
@@ -234,7 +234,7 @@ class RewriteGlobalRankSpec extends AnyFunSuite {
     val forced = RewriteGlobalRankWindows.force(windowed)
     val p = noAqePlan(forced)
     assert(p.collect { case x: WindowExec => x }.isEmpty, p.toString)
-    assert(p.collect { case g: GlobalRankExec => g }.size == 2, p.toString)
+    assert(p.collect { case g: PartitionedRankExec if g.partKeys.isEmpty => g }.size == 2, p.toString)
     assert(RowMultiset.of(forced) == RowMultiset.of(windowed))
   }
 
