@@ -79,32 +79,41 @@ object Tables {
     * variables map to column families the HDFS-backed store lacks) and
     * the production backend for all stateful streaming. Restores the
     * previous provider even on failure. */
-  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered —
-    * the micro-batch startup knob for the finite-fixture streaming
-    * queries. A stateful streaming operator materializes one state store
-    * instance PER shuffle partition PER operator, and every micro-batch
-    * pays commit/snapshot bookkeeping for each; at the bench's 32
-    * partitions that fixed cost dwarfs the (tiny) data. The partition
-    * count is read once at `start()`, so wrapping query construction +
-    * execution is enough; results are partitioning-independent. Restores
-    * the previous value even on failure. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  /** The scope every streaming query runs in: builds and runs `body`
+    * with two session settings, and restores both even on failure. Both
+    * are read once at `start()` (a stream runs on a clone of the session
+    * conf), so wrapping query construction and execution is enough.
+    *  - `spark.sql.shuffle.partitions` = 4. A stateful operator
+    *    materializes one state store per shuffle partition, and every
+    *    micro-batch pays commit/snapshot bookkeeping for each; at the
+    *    bench's 32 partitions that fixed cost dwarfs the (tiny) data.
+    *    Results are partitioning-independent.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    [[graft.streaming.LocalCheckpointFileManager]]: offset, commit
+    *    and state files are written without the forked `chmod` and
+    *    `readlink` Hadoop's local file system pays per file when
+    *    libhadoop is absent. */
+  def streaming[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark,
+      "spark.sql.shuffle.partitions" -> "4",
+      CheckpointFileManagerKey ->
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)(body)
+
+  /** The session key naming the streaming checkpoint file manager. */
+  val CheckpointFileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  private def withConfs[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** `events` with a proper TimestampType `ts`. The fixture's physical

@@ -92,12 +92,21 @@ object GraphOps {
       // that materializes it — one job per round instead of two
       val nextP = next.localCheckpoint(eager = false)
       val aggRow = nextP.agg(sum(col("label").cast("decimal(38,0)")),
-        sum(col("node").cast("decimal(38,0)"))).first()
+        sum(col("node").cast("decimal(38,0)")), count(lit(1))).first()
       val sumNow = aggRow.getDecimal(0)
       if (sumPrev == null) sumPrev = aggRow.getDecimal(1) // = initial label sum
       GraftSqlBridge.freeLocalCheckpoint(labels)
-      // null sums = empty graph = trivially converged
-      converged = sumNow == null || sumNow.compareTo(sumPrev) == 0
+      // no rows = empty graph = trivially converged; a null sum over rows
+      // is a non-ANSI DECIMAL(38,0) overflow, which says nothing about
+      // convergence
+      if (aggRow.getLong(2) == 0L) converged = true
+      else {
+        require(sumNow != null && sumPrev != null,
+          "connectedComponents: the DECIMAL(38,0) label sum overflowed " +
+            "(spark.sql.ansi.enabled=false turns the overflow into null); " +
+            "node ids summing past 10^38 cannot be checked for convergence")
+        converged = sumNow.compareTo(sumPrev) == 0
+      }
       labels = nextP
       sumPrev = sumNow
       it += 1

@@ -409,7 +409,7 @@ object ExtQueries {
   val qStreamingWindow = QueryDef("q_streaming_window",
     // 4 shuffle partitions: windowed-agg state stores are per-partition
     // fixed cost per micro-batch (32 would commit 32 stores)
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = Tables.stageEventsDir(dir, "graft_stream_src")
       val q = graft.streaming.EventsStream.startOverNanosFixture(
         s, stageDir, "graft_stream_out")

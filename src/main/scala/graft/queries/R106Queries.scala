@@ -51,7 +51,7 @@ object R106Queries {
   val qStreamSinkDsv2 = QueryDef("q_stream_sink_dsv2",
     // 4 shuffle partitions: the complete-mode agg's state stores are
     // per-partition fixed cost per micro-batch
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = Tables.stageEventsDir(dir, "graft_dsv2sink_src")
       val key = "q_stream_sink_dsv2_" + math.abs(dir.hashCode)
       MemSinkStore.clear(key)

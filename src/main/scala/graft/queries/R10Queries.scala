@@ -122,7 +122,7 @@ object R10Queries {
     * the result is batching-invariant and the oracle regenerates the
     * same outlink distribution arithmetically via generate_series). */
   val qCrawlStream = QueryDef("q_crawl_stream",
-    (s, dir) => graft.core.Tables.withShufflePartitions(s, 4) {
+    (s, dir) => graft.core.Tables.streaming(s) {
       val q = s.readStream.format("graft-pages")
         .option("rows", "2000").option("parts", "4")
         .option("batchRows", "1000").load()

@@ -113,7 +113,7 @@ object R11Queries {
   val qStreamSessionWindow = QueryDef("q_stream_session_window",
     // 4 shuffle partitions: session-window state stores are per-
     // partition fixed cost per micro-batch (32 would commit 32 stores)
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = stageWithSentinel(s, dir)
       val tsDiv = Tables.eventsTsDiv(s, dir)
       val src = s.readStream

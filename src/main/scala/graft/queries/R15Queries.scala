@@ -41,7 +41,7 @@ object R15Queries {
   // ---------- q_stream_tws ----------
 
   val qStreamTws = QueryDef("q_stream_tws",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       withRocksDB(s) {
         val stageDir = Tables.stageEventsDir(dir, "graft_tws_src")
         val src = s.readStream

@@ -38,7 +38,7 @@ object R16Queries {
     * replay as the stream. Only users with ≥1 stream event emit (Update
     * mode), so the oracle keeps exactly those users — over BOTH halves. */
   val qStreamTwsInit = QueryDef("q_stream_tws_init",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       withRocksDB(s) {
         val ev = t(s, dir, "events")
           .where(col("user_id") >= 40 && col("user_id") < 80)
@@ -83,7 +83,7 @@ object R16Queries {
     * condition: state drains to the sentinel's single row — load-
     * independent, like q_stream_left_outer. */
   val qStreamTwsTimer = QueryDef("q_stream_tws_timer",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       withRocksDB(s) {
         val stage = tmpPath("graft_tws_timer_src", dir)
         val ev = Tables.events(s, dir)

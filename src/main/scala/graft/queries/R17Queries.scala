@@ -30,7 +30,7 @@ import graft.rules.RewriteGlobalRankWindows
 object R17Queries {
 
   val qStreamSessionize = QueryDef("q_stream_sessionize",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stage = Tables.tmpPath("graft_ssz_src", dir)
       val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
       val sentinel = s.range(1)

@@ -197,7 +197,7 @@ object R19Queries {
     * equivalent two-level batch GROUP BY (a 5-min window's
     * `window_time` lands in `w5 - w5 % 15min` because 5 | 15). */
   val qStreamChainedAgg = QueryDef("q_stream_chained_agg",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = R8Queries.stageWithSentinel(s, dir, "graft_sca_src")
       val tsDiv = Tables.eventsTsDiv(s, dir)
       val src = s.readStream
@@ -242,7 +242,7 @@ object R19Queries {
     * oracle-checked in earlier waves). Sentinel/drain mechanics as in
     * `q_stream_left_outer`. */
   val qStreamFullOuter = QueryDef("q_stream_full_outer",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = R8Queries.stageWithSentinel(s, dir, "graft_sfo_src")
       val tsDiv = Tables.eventsTsDiv(s, dir)
       val src = s.readStream

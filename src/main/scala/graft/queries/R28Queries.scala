@@ -83,7 +83,7 @@ object R28Queries {
     * Derby URL becomes a warehouse MERGE target (Delta/Iceberg/JDBC) —
     * same topology, same per-batch cost. */
   val qStreamIvm = QueryDef("q_stream_ivm",
-    (s, dir) => {
+    (s, dir) => Tables.streaming(s) {
       val d2t = DecimalType(18, 2)
       val ev = Tables.events(s, dir).where(col("user_id") < 50)
         .select(col("event_id"), col("user_id"),

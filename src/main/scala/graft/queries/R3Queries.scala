@@ -280,7 +280,7 @@ object R3Queries {
     * finite fixture is deterministic — same discipline as
     * q_streaming_window). */
   val qStreamStaticJoin = QueryDef("q_stream_static_join",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = Tables.stageEventsDir(dir, "graft_ss_src")
       val cust = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
@@ -457,7 +457,7 @@ object R3Queries {
   val qStreamDedup = QueryDef("q_stream_dedup",
     // 4 shuffle partitions: the dedup + agg state stores are per-
     // partition fixed cost per micro-batch (32 would commit 32 stores)
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = Tables.stageEventsDir(dir, "graft_dedup_src",
         copies = Seq("events_a.parquet", "events_b.parquet"))
       val src = s.readStream
@@ -723,7 +723,7 @@ object R3Queries {
     * mode; the finite fixture drains in one batch so the emitted match
     * set equals the batch self-join. */
   val qStreamStreamJoin = QueryDef("q_stream_stream_join",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       val stageDir = Tables.stageEventsDir(dir, "graft_s2_src")
       val tsDiv = Tables.eventsTsDiv(s, dir)
       def src = s.readStream

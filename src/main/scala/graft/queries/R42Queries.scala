@@ -101,7 +101,7 @@ object R42Queries {
   private val K = 8
 
   val qStreamEwma = QueryDef("q_stream_ewma",
-    (s, dir) => Tables.withShufflePartitions(s, 4) {
+    (s, dir) => Tables.streaming(s) {
       Tables.withRocksDbStateStore(s) {
         val stageDir = Tables.stageEventsDir(dir, "graft_sewma_src")
         val tsDiv = Tables.eventsTsDiv(s, dir)

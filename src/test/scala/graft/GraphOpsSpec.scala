@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.GraphOps
@@ -14,6 +15,25 @@ class GraphOpsSpec extends AnyFunSuite {
       GraphOps.connectedComponents(spark, edges)
     }
     assert(e.getMessage.contains("numeric node ids"))
+  }
+
+  test("a non-ANSI DECIMAL(38,0) label-sum overflow fails loudly, not as convergence") {
+    // four chained ids near 10^38: their sum overflows DECIMAL(38,0), which
+    // ANSI-off Spark turns into null. Null once read as "empty graph,
+    // converged" after round 1, returning the chain split into pieces.
+    val id = (i: Int) => "9" + "0" * 36 + i
+    val edges = Seq((id(0), id(1)), (id(1), id(2)), (id(2), id(3))).toDF("a", "b")
+      .select(col("a").cast("decimal(38,0)").as("a"),
+        col("b").cast("decimal(38,0)").as("b"))
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        GraphOps.connectedComponents(spark, edges).collect()
+      }
+      assert(e.getMessage.contains("overflowed"))
+    } finally spark.conf.set(key, prev)
   }
 
   test("chain, clique, and separate components get min-id labels") {

@@ -37,7 +37,7 @@ class R19QueriesSpec extends AnyFunSuite {
     ).toDF("event_id", "ts", "user_id", "event_type")
       .coalesce(1).write.mode("overwrite").parquet(in)
 
-    val got = graft.core.Tables.withShufflePartitions(spark, 4) {
+    val got = graft.core.Tables.streaming(spark) {
       val src = spark.readStream
         .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING")
         .parquet(in)
